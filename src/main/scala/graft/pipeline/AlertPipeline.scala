@@ -1,20 +1,32 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, StringType, StructField, StructType}
 
-import graft.measures.Measures
+import graft.measures.{Measures, SortedWindow}
 
 /** The reference's core dataflow (SURVEY §3.1), generalized Spark-first:
   * sliding count-window (size n, slide 1) per key over an ordered numeric
   * series → six statistics per full window → threshold shortfall alerts.
   *
   * The reference runs ONE global series at parallelism 1
-  * (StreamingJob.java:431,435). Here the series key is a parameter: windows
-  * shard by key (`Window.partitionBy(key)`), so a million independent
-  * portfolios scale across executors; the reference workload is the
-  * single-key special case (SURVEY §2.5 Q8).
+  * (StreamingJob.java:431,435). Here the series key is a parameter, so a
+  * million independent portfolios scale across executors; the reference
+  * workload is the single-key special case (SURVEY §2.5 Q8).
+  *
+  * Two shapes of the same dataflow live here:
+  *  - [[windowAlerts]], the alert kernel both batch entry points run
+  *    (`ReferencePipeline.alerts`, [[eventAlerts]]): one hash shuffle by
+  *    key, one sort by (key, ord), then one walk per partition that slides
+  *    a [[graft.measures.SortedWindow]] row by row, evaluates the six
+  *    measures and the threshold predicate in the same loop and emits only
+  *    alert rows;
+  *  - [[windowed]] + [[withMeasures]], the declarative column form
+  *    (`collect_list` frame → `sort_array` → [[Measures]] array folds).
+  *    The window queries q04–q09 use it, and it is the test oracle of the
+  *    kernel: both compute bit-identical measures.
   */
 object AlertPipeline {
   val WindowSize = 30
@@ -62,15 +74,93 @@ object AlertPipeline {
       Measures.sm2From(col("m_mean"), col("xs"), n).as("m_sm2")): _*)
   }
 
-  /** Unpivots the wide measure table to (…, stat, m) — O12's shape. */
-  val unpivotMeasures: String =
-    """stack(6,
-      |  'mean', m_mean,
-      |  'median', m_median,
-      |  '10th quantile', m_q10,
-      |  'mean of 10% smallest', m_tail,
-      |  'security measure 1', m_sm1,
-      |  'security measure 2', m_sm2) AS (stat, m)""".stripMargin
+  /** Threshold-shortfall alerts over the sliding count windows (size `n`,
+    * slide 1) of each `key`'s series in `ord` order: the fused form of
+    * `withMeasures(windowed(…))` → `stack` unpivot → threshold join →
+    * `Measures.alertPredicate`, with the same rows and bit-identical `m`.
+    *
+    * Output: (key, ord, stat, m, thr), one row per alerting (window, stat);
+    * `key` and `ord` keep their input types, `m` and `thr` are doubles.
+    *
+    * `thresholds` has columns `stat` and `thr`, and optionally the `key`
+    * column: a keyed row applies to its key's series, a table without the
+    * key column applies to every key. It is collected to the driver (the
+    * reference's has 42 rows). Each (stat, key) cell may appear at most
+    * once (`require`); a missing cell, a null `thr` or a null key never
+    * alerts.
+    *
+    * Plan: drop null `x` → hash shuffle by key → sort within partitions by
+    * (key, ord) → one `mapPartitions` walk that slides one [[SortedWindow]]
+    * per key and evaluates measures and predicate in the same loop. There
+    * is no window operator, array column, join or per-window sort; one
+    * key's series is walked by one task. `ord` must be unique within a key,
+    * as for [[windowed]].
+    *
+    * Divisions by zero (the tail mean of a window shorter than 10; a
+    * threshold of exactly −1) give no alert, as the column form does with
+    * `spark.sql.ansi.enabled=false`; with ANSI on, the column form raises
+    * DIVIDE_BY_ZERO instead. */
+  def windowAlerts(df: DataFrame, key: String, ord: String, x: String,
+      thresholds: DataFrame, n: Int = WindowSize,
+      shortfall: Double = Shortfall): DataFrame = {
+    require(n >= 2, s"window size must be at least 2, got $n")
+    val input = df.where(col(x).isNotNull)
+      .select(col(key), col(ord), col(x).cast(DoubleType))
+    val keyed = thresholds.columns.contains(key)
+    val cells = thresholdCells(thresholds, key, input.schema(0).dataType, keyed)
+    val names = Measures.names.toArray
+    val schema = StructType(input.schema.take(2) ++ Seq(
+      StructField("stat", StringType, nullable = false),
+      StructField("m", DoubleType, nullable = false),
+      StructField("thr", DoubleType, nullable = false)))
+    input
+      .repartition(col(key))
+      .sortWithinPartitions(key, ord)
+      .mapPartitions { rows =>
+        val window = new SortedWindow(n)
+        val m = new Array[Double](names.length)
+        var current: Any = null
+        var live: Array[(Int, Double)] = null // (stat index, threshold) of the current key
+        rows.flatMap { r =>
+          val k = r.get(0)
+          if (live == null || k != current) {
+            current = k
+            window.clear()
+            val cellKey = if (keyed) k else AllKeys
+            live = names.indices.toArray
+              .flatMap(s => cells.get((names(s), cellKey)).map(s -> _))
+          }
+          window.push(r.getDouble(2))
+          if (!window.isFull || live.isEmpty) Iterator.empty
+          else {
+            window.measures(m)
+            live.collect { case (s, t) if SortedWindow.alert(m(s), t, shortfall) =>
+              Row(k, r.get(1), names(s), m(s), t)
+            }.iterator
+          }
+        }
+      }(Encoders.row(schema))
+  }
+
+  /** Key component of the cells of a threshold table without a key column. */
+  private case object AllKeys
+
+  /** The threshold table as a driver map (stat, key) → thr, the key cast to
+    * the series key's type. */
+  private def thresholdCells(thresholds: DataFrame, key: String,
+      keyType: DataType, keyed: Boolean): Map[(String, Any), Double] = {
+    val cols = Seq(col("stat").cast(StringType), col("thr").cast(DoubleType)) ++
+      (if (keyed) Seq(col(key).cast(keyType)) else Nil)
+    val cells = thresholds.select(cols: _*).collect()
+      // a null stat or key joins no window
+      .filter(r => !r.isNullAt(0) && !(keyed && r.isNullAt(2)))
+      .map(r => (r.getString(0), if (keyed) r.get(2) else AllKeys) -> r)
+    cells.groupBy(_._1).foreach { case ((stat, k), rs) =>
+      require(rs.length == 1, s"threshold table has ${rs.length} rows for the cell " +
+        s"(stat = '$stat'${if (keyed) s", $key = $k" else ""})")
+    }
+    cells.collect { case (cell, r) if !r.isNullAt(1) => cell -> r.getDouble(1) }.toMap
+  }
 
   /** Population thresholds over a single value column `v` — the analog of
     * psd.R:26-70 / stats.csv: mean, exact median & 10th percentile
@@ -128,23 +218,20 @@ object AlertPipeline {
 
   /** End-to-end alert query over the driver `events` table: per-user sliding
     * 30-row windows over `value`, thresholds = population statistics of the
-    * whole value column, reference alert predicate (SURVEY §2.5 Q6). */
+    * whole value column, reference alert predicate (SURVEY §2.5 Q6).
+    * Output: (user_id, event_id, stat, m, thr). */
   def eventAlerts(events: DataFrame, n: Int = WindowSize): DataFrame = {
-    // deliberately NOT cached: the threshold build and the window pass
-    // each scan the source once (populationThresholds caches + unpersists
-    // its own ranked frame), and callers that reuse the result cache IT
-    // (the Caches "alerts" tag) — a cache here would pin the projected
-    // source for the session lifetime, outside Caches.evict's reach
+    // deliberately NOT cached: the threshold build (6 driver-side numbers;
+    // populationThresholds caches and unpersists its own ranked frame) and
+    // the alert kernel each scan the source once, and callers that reuse
+    // the result cache IT (the Caches "alerts" tag) — a cache here would
+    // pin the projected source for the session lifetime, outside
+    // Caches.evict's reach
     val ev = events
       .select(col("user_id"), col("event_id"), col("value").cast("double").as("v"))
-    val thr = populationThresholds(ev.select(col("v")))
-    val meas = withMeasures(
-      windowed(ev, col("user_id"), col("event_id"), col("v"), n),
-      Seq(col("user_id"), col("event_id")), n)
-    meas
-      .select(col("user_id"), col("event_id"), expr(unpivotMeasures))
-      .join(broadcast(thr), "stat")
-      .where(Measures.alertPredicate(col("m"), col("thr"), Shortfall))
-      .select(col("user_id"), col("event_id"), col("stat"), col("m"), col("thr"))
+    // the 6-row (stat, thr) table has no user_id column, so every
+    // threshold applies to every user's series
+    windowAlerts(ev, "user_id", "event_id", "v",
+      populationThresholds(ev.select(col("v"))), n, Shortfall)
   }
 }

@@ -3,18 +3,23 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.measures.Measures
 import graft.sources.Sources
 
 /** The complete reference workload end-to-end (SURVEY §3.1): samples CSV +
   * stats.csv → alert table. This is the exact analog of StreamingJob.main,
-  * re-expressed declaratively:
+  * re-expressed for Spark:
   *
   *   readTextFile → Splitter        ⇒ Sources.readSamplesCsv (drop-malformed)
   *   getOverallValue (7th series)   ⇒ Sources.toSeries (unpivot 7 series)
-  *   countWindowAll(30,1)+aggregate ⇒ AlertPipeline.windowed per assetNo
-  *   State.getAlerts + AlertReducer ⇒ unpivot measures → broadcast threshold
-  *                                    join → shortfall predicate
+  *   countWindowAll(30,1)+aggregate ⇒ AlertPipeline.windowAlerts: hash
+  *                                    shuffle by assetNo, sort by (assetNo,
+  *                                    seq), one sorted sliding window per
+  *                                    series updated row by row, six
+  *                                    measures per full window
+  *   State.getAlerts + AlertReducer ⇒ the same walk: per (stat, assetNo)
+  *                                    threshold from a driver map (the
+  *                                    42-row stats table), shortfall
+  *                                    predicate, alert rows only
   *
   * Output: (windowId, stat, assetNo, value) — windowId is the 1-based seq of
   * the window's last row (≥ 30), replacing the reference's constant `count`
@@ -31,17 +36,12 @@ object ReferencePipeline {
     alerts(samples, thresholds, n, shortfall)
   }
 
+  /** `thresholds`: (stat, assetNo, thr), at most one row per (stat,
+    * assetNo) — see [[AlertPipeline.windowAlerts]]. */
   def alerts(samples: DataFrame, thresholds: DataFrame, n: Int,
-      shortfall: Double): DataFrame = {
-    val series = Sources.toSeries(samples)
-    val meas = AlertPipeline.withMeasures(
-      AlertPipeline.windowed(series, col("assetNo"), col("seq"), col("x"), n),
-      Seq(col("assetNo"), col("seq")), n)
-    meas
-      .select(col("assetNo"), col("seq"), expr(AlertPipeline.unpivotMeasures))
-      .join(broadcast(thresholds), Seq("stat", "assetNo"))
-      .where(Measures.alertPredicate(col("m"), col("thr"), shortfall))
+      shortfall: Double): DataFrame =
+    AlertPipeline.windowAlerts(Sources.toSeries(samples), "assetNo", "seq", "x",
+        thresholds, n, shortfall)
       .select(col("seq").as("windowId"), col("stat"), col("assetNo"),
         col("m").as("value"))
-  }
 }

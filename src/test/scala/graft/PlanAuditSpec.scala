@@ -211,6 +211,41 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase
       s"window mean was inlined into the measure lambdas:\n$plan")
   }
 
+  test("batch alerts run the sliding-window kernel: no window operator, " +
+      "array fold or join in ReferencePipeline.alerts or eventAlerts") {
+    // the column form (collect_list frame → sort_array → array-lambda
+    // folds → stack → broadcast threshold join) rebuilt and re-sorted
+    // every window; it stays for q04–q09 and as the kernel's test oracle
+    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ArrayTransform}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val samples = spark.range(1, 41).select(
+      (col("id").cast("int").as("seq") +: (0 until 6).map(i =>
+        (col("id") * (i + 1) % 7 / 10.0).as(s"a$i"))): _*)
+    val thr = graft.measures.Measures.names.flatMap(st =>
+      (0 to 6).map(a => (st, a, 0.1))).toDF("stat", "assetNo", "thr")
+    val plans = Seq(
+      "ReferencePipeline.alerts" -> graft.pipeline.ReferencePipeline
+        .alerts(samples, thr, 30, 0.01),
+      "eventAlerts" -> graft.pipeline.AlertPipeline.eventAlerts(
+        graft.queries.Tables(spark, dir, "events"))
+    ).map { case (name, df) => name -> df.queryExecution.executedPlan }
+    for ((name, p) <- plans) {
+      assert(collectWithSubqueries(p) { case w: WindowExec => w }.isEmpty,
+        s"$name plans a window operator:\n$p")
+      assert(collectWithSubqueries(p) { case j: BaseJoinExec => j }.isEmpty,
+        s"$name plans a join:\n$p")
+      val folds = collectWithSubqueries(p) { case node => node }
+        .flatMap(_.expressions.flatMap(_.collect {
+          case a: ArrayAggregate => a
+          case t: ArrayTransform => t
+        }))
+      assert(folds.isEmpty, s"$name plans array folds:\n$p")
+    }
+  }
+
   test("q64: the winnowing verify input is LINEAR in corpus size, not " +
       "quadratic") {
     // The round-4 regression class: a candidate set that silently grows

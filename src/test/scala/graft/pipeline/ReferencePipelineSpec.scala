@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
@@ -47,5 +48,38 @@ class ReferencePipelineSpec extends AnyFunSuite with SparkTestBase {
       (1 to 6).map(_ => (0 to 6).map(_ => "-1000.0").mkString(",")))
     assert(ReferencePipeline.csvAlerts(spark, samplesPath, statsPath)
       .count() === 0)
+  }
+
+  /** 35 samples and a full (stat, assetNo) threshold table high enough
+    * that every window alerts on every measure. */
+  private def samplesAndThresholds() = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val samplesPath = writeTemp("s.csv", (1 to 35).map(_ =>
+      (0 until 6).map(_ => f"${rnd.nextDouble() * 0.1}%.6f").mkString(",")))
+    val samples = graft.sources.Sources.readSamplesCsv(spark, samplesPath)
+    val cells = for (st <- Measures.names; a <- 0 to 6) yield (st, a, 1000.0)
+    (samples, cells.toDF("stat", "assetNo", "thr"))
+  }
+
+  test("a duplicate (stat, assetNo) threshold row fails, naming the cell") {
+    import spark.implicits._
+    val (samples, thr) = samplesAndThresholds()
+    val dup = thr.union(Seq((Measures.Sm2, 3, 999.0)).toDF("stat", "assetNo", "thr"))
+    val e = intercept[IllegalArgumentException] {
+      ReferencePipeline.alerts(samples, dup, 30, 0.01).collect()
+    }
+    assert(e.getMessage.contains(s"stat = '${Measures.Sm2}', assetNo = 3"),
+      e.getMessage)
+  }
+
+  test("a missing (stat, assetNo) threshold cell yields no alerts for it") {
+    val (samples, thr) = samplesAndThresholds()
+    val missing = thr.where(!(col("stat") === Measures.Median && col("assetNo") === 2))
+    val alerts = ReferencePipeline.alerts(samples, missing, 30, 0.01).collect()
+    // 6 full windows × (7 series × 6 measures − the missing cell)
+    assert(alerts.length === 6 * (7 * 6 - 1))
+    assert(!alerts.exists(r => r.getAs[String]("stat") == Measures.Median &&
+      r.getAs[Int]("assetNo") == 2))
   }
 }
