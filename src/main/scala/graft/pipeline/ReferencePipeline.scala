@@ -9,7 +9,10 @@ import graft.sources.Sources
   * stats.csv → alert table. This is the exact analog of StreamingJob.main,
   * re-expressed for Spark:
   *
-  *   readTextFile → Splitter        ⇒ Sources.readSamplesCsv (drop-malformed)
+  *   readTextFile → Splitter        ⇒ Sources.readSamplesCsv: one narrow
+  *                                    pass over the text splits, plain-Scala
+  *                                    parse (drop-malformed), seq numbered
+  *                                    from per-split valid-row counts
   *   getOverallValue (7th series)   ⇒ Sources.toSeries (unpivot 7 series)
   *   countWindowAll(30,1)+aggregate ⇒ AlertPipeline.windowAlerts: hash
   *                                    shuffle by assetNo, sort by (assetNo,

@@ -1,8 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
 
 import graft.measures.Measures
 
@@ -15,29 +16,68 @@ import graft.measures.Measures
 object Sources {
   val Weights: Seq[Double] = Seq(0.2, 0.2, 0.2, 0.15, 0.15, 0.1)
 
-  /** Samples CSV → (seq, a0..a5). `seq` is the 1-based arrival order of the
-    * VALID rows (dropped lines get no number), the reference's implicit
-    * parallelism-1 contract (SURVEY §2.5 Q8). Assigning it is the one
-    * inherently serial step — at scale the input carries its own sequence
-    * column instead (events.event_id plays that role in the testdata
-    * queries). */
+  /** Samples CSV → (a0..a5, seq). `seq` is the 1-based arrival order of
+    * the VALID rows (dropped lines get no number), the reference's implicit
+    * parallelism-1 contract (SURVEY §2.5 Q8).
+    *
+    * One narrow pass, no exchange: `spark.read.text` keeps the file
+    * source's split sizing, each split's lines are parsed in plain Scala
+    * ([[parseSample]]), and [[numbered]] turns per-split valid-row counts
+    * into offsets, so the numbering runs in as many tasks as there are
+    * splits. */
   def readSamplesCsv(spark: SparkSession, path: String): DataFrame = {
-    // limit 0 = Java String.split semantics (trailing empty strings
-    // removed) — the reference's parser; the default limit −1 KEEPS them,
-    // so a trailing-comma line would count 7 parts, fail the arity check,
-    // and silently shift the seq numbering of every later row
-    val parts = split(col("value"), ",", 0)
-    val fields = (0 until 6).map(i =>
-      expr(s"try_cast(parts[$i] AS DOUBLE)").as(s"a$i"))
-    val parsed = spark.read.text(path)
-      .withColumn("parts", parts)
-      .where(size(col("parts")) === 6)
-      .select(fields :+ monotonically_increasing_id().as("file_pos"): _*)
-      .where((0 until 6).map(i => col(s"a$i").isNotNull).reduce(_ && _))
-    parsed
-      .withColumn("seq", row_number().over(Window.orderBy(col("file_pos"))))
-      .drop("file_pos")
+    val parsed = spark.read.text(path).queryExecution.toRdd
+      .flatMap(r => parseSample(r.getUTF8String(0).toString))
+      .map(a => Row(a(0), a(1), a(2), a(3), a(4), a(5)))
+    numbered(spark, parsed,
+      StructType((0 until 6).map(i => StructField(s"a$i", DoubleType))), "seq")
   }
+
+  /** One samples line → its 6 doubles, or None to drop it. `split(",", 0)`
+    * is Java's `String.split` (trailing empty strings removed), the
+    * reference's parser, so a trailing-comma line still has 6 fields.
+    * Each field parses as Spark's string → double cast does:
+    * `parseDouble`, then the special literals of [[specialDouble]]. */
+  private def parseSample(line: String): Option[Array[Double]] = {
+    val parts = line.split(",", 0)
+    if (parts.length != 6) return None
+    val a = new Array[Double](6)
+    var i = 0
+    while (i < 6) {
+      try a(i) = java.lang.Double.parseDouble(parts(i))
+      catch {
+        case _: NumberFormatException =>
+          val d = specialDouble(parts(i))
+          if (d.isEmpty) return None
+          a(i) = d.get
+      }
+      i += 1
+    }
+    Some(a)
+  }
+
+  /** The spellings Spark's cast accepts where `parseDouble` does not
+    * (`Cast.processFloatingPointSpecialLiterals`): trimmed, any case. */
+  private def specialDouble(s: String): Option[Double] =
+    s.trim.toLowerCase(java.util.Locale.ROOT) match {
+      case "inf" | "+inf" | "infinity" | "+infinity" => Some(Double.PositiveInfinity)
+      case "-inf" | "-infinity" => Some(Double.NegativeInfinity)
+      case "nan" => Some(Double.NaN)
+      case _ => None
+    }
+
+  /** `rows` (of `schema`) with a non-null 1-based IntegerType position
+    * column `name` appended, in partition order: `zipWithIndex` counts the
+    * rows of every partition but the last in one job (none for a single
+    * partition) and numbers each partition from the sum of the counts
+    * before it. Past `Int.MaxValue` rows it fails instead of wrapping. */
+  private def numbered(spark: SparkSession, rows: RDD[Row], schema: StructType,
+      name: String): DataFrame =
+    spark.createDataFrame(
+      rows.zipWithIndex().map { case (r, i) =>
+        Row.fromSeq(r.toSeq :+ Math.toIntExact(i + 1))
+      },
+      schema.add(name, IntegerType, nullable = false))
 
   /** stats.csv (headerless, 6 rows × 7 doubles; psd.R:70) → unpivoted
     * (stat, assetNo, thr), broadcast-sized. Row order defines the measure
@@ -45,13 +85,10 @@ object Sources {
     * (SURVEY §2.5 Q5). */
   def readStatsCsv(spark: SparkSession, path: String): DataFrame = {
     val raw = spark.read.csv(path) // _c0.._c6 strings
-    val withStat = raw
-      .withColumn("file_pos", monotonically_increasing_id())
-      .withColumn("rowIdx",
-        row_number().over(Window.orderBy(col("file_pos"))) - 1)
+    val withStat = numbered(spark, raw.rdd, raw.schema, "line")
     val statName = Measures.names.zipWithIndex.tail
-      .foldLeft(when(col("rowIdx") === 0, Measures.names.head)) {
-        case (acc, (n, i)) => acc.when(col("rowIdx") === i, n)
+      .foldLeft(when(col("line") === 1, Measures.names.head)) {
+        case (acc, (n, i)) => acc.when(col("line") === i + 1, n)
       }
     val unpivot = (0 to 6).map(a =>
       struct(lit(a).as("assetNo"),

@@ -246,6 +246,47 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase
     }
   }
 
+  test("csvAlerts reads its samples in one narrow pass: no window and no " +
+      "single-partition exchange") {
+    // an unpartitioned Window.orderBy numbering put Exchange SinglePartition
+    // + a sort into every query over the samples
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import org.apache.spark.sql.execution.window.WindowExec
+    def write(name: String, lines: Seq[String]): String = {
+      val p = java.nio.file.Files.createTempDirectory("graft_plan").resolve(name)
+      java.nio.file.Files.write(p, String.join("\n", lines: _*).getBytes)
+      p.toString
+    }
+    val samples = write("samples.csv", (1 to 40).map(i =>
+      (0 until 6).map(a => (i * (a + 3) % 17) / 100.0).mkString(",")))
+    val stats = write("stats.csv", (1 to 6).map(_ => Seq.fill(7)("0.1").mkString(",")))
+    val df = graft.pipeline.ReferencePipeline.csvAlerts(spark, samples, stats)
+    df.collect()
+    val p = df.queryExecution.executedPlan
+    assert(collectWithSubqueries(p) { case w: WindowExec => w }.isEmpty,
+      s"csvAlerts plans a window operator:\n$p")
+    val exchanges = collectWithSubqueries(p) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.nonEmpty, s"the kernel's key exchange is missing:\n$p")
+    assert(!exchanges.exists(_.outputPartitioning == SinglePartition),
+      s"csvAlerts gathers rows into one partition:\n$p")
+  }
+
+  test("AlertAnalytics.counts orders its few rows without a range exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import spark.implicits._
+    val alerts = (1 to 500).map(i => (graft.measures.Measures.names(i * 7 % 6), i % 5))
+      .toDF("stat", "assetNo").repartition(4)
+    val df = graft.analytics.AlertAnalytics.counts(alerts, "assetNo")
+    val got = df.collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq
+    val want = alerts.collect().groupBy(r => (r.getString(0), r.getInt(1))).toSeq
+      .map { case ((st, a), rs) => (st, a, rs.length.toLong) }.sortBy(t => (t._1, t._2))
+    assert(got === want)
+    val p = df.queryExecution.executedPlan
+    assert(collectWithSubqueries(p) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }.isEmpty, s"counts range-partitions its result:\n$p")
+  }
+
   test("q64: the winnowing verify input is LINEAR in corpus size, not " +
       "quadratic") {
     // The round-4 regression class: a candidate set that silently grows
