@@ -1,10 +1,10 @@
 package graft.measures
 
 /** Plain-Scala mirror of [[Measures]], transcribed directly from the
-  * reference formulas (StreamingJob.java:184-234). Used by:
-  *  - property tests (engine column expressions must equal this brute force);
-  *  - the streaming count-window operator (graft.streaming), which evaluates
-  *    measures on a 30-element ring buffer outside Catalyst.
+  * reference formulas (StreamingJob.java:184-234). Oracle only: the tests
+  * and the benchmark's result checks recompute windows with it; no engine
+  * path calls it. The engine's one scalar measure fold and alert predicate
+  * are [[SortedWindow.measures]] and [[SortedWindow.alert]].
   *
   * sm2 is kept deliberately O(n²) here — it is the literal reference formula
   * and serves as the oracle for the O(n) sorted-identity version.
@@ -51,13 +51,11 @@ object MeasuresRef {
     m - s / (2.0 * n * n)
   }
 
-  /** O(n) sorted-identity sm2 — the PRODUCTION scalar form (the streaming
-    * ring-buffer fires call this per row; the pairwise [[sm2]] would make
-    * each fire O(n²), unusable at n = 10⁴). Mirrors the batch
+  /** O(n) sorted-identity sm2, for oracles that recompute many windows (the
+    * pairwise [[sm2]] is O(n²) per window). Mirrors the batch
     * `Measures.sm2From` term order — `gsum = Σᵢ(2i−n−1)sᵢ` folded
-    * left-to-right over the sorted array, then `m − gsum/n²` — so stream
-    * and batch compute IDENTICAL doubles, not merely ulp-close ones
-    * (boundary alerts cannot diverge between the two paths). Expects `xs`
+    * left-to-right over the sorted array, then `m − gsum/n²` — so it gives
+    * the engine's doubles, not merely ulp-close ones. Expects `xs`
     * ascending-sorted. */
   def sm2Sorted(sorted: Array[Double]): Double = {
     val n = sorted.length
@@ -71,9 +69,8 @@ object MeasuresRef {
     m - g / (n.toDouble * n)
   }
 
-  /** All six measures in reference order with the LITERAL O(n²) sm2 —
-    * the test oracle; `xs` need not be sorted. Production callers use
-    * [[allFast]]. */
+  /** All six measures in reference order with the LITERAL O(n²) sm2;
+    * `xs` need not be sorted. */
   def all(xs: Array[Double]): Seq[(String, Double)] = {
     val sorted = xs.sorted
     Seq(
@@ -85,9 +82,8 @@ object MeasuresRef {
       Measures.Sm2 -> sm2(sorted))
   }
 
-  /** All six measures with the O(n) sorted-identity sm2 — the production
-    * per-fire path (every measure O(n) after the sort, batch-identical
-    * doubles). */
+  /** All six measures with the O(n) sorted-identity sm2 (every measure
+    * O(n) after the sort). */
   def allFast(xs: Array[Double]): Seq[(String, Double)] = {
     val sorted = xs.sorted
     Seq(
@@ -99,6 +95,9 @@ object MeasuresRef {
       Measures.Sm2 -> sm2Sorted(sorted))
   }
 
+  /** The reference's shortfall predicate with Java's double comparisons:
+    * unlike [[SortedWindow.alert]] (Spark SQL's), a NaN threshold never
+    * alerts. Agrees with it on finite measures and thresholds other than −1. */
   def alert(m: Double, thr: Double, shortfall: Double = 0.01): Boolean =
     m < thr && (thr - m) / (1.0 + thr) >= shortfall
 }

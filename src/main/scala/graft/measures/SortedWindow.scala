@@ -1,5 +1,7 @@
 package graft.measures
 
+import scala.reflect.ClassTag
+
 /** The trailing `n` values of one series, held twice: a ring in arrival
   * order and an ascending copy. Each [[push]] removes exactly one copy of
   * the value leaving the window and inserts the new one (binary search +
@@ -14,6 +16,9 @@ package graft.measures
   * [[measures]] folds the sorted window in the same order, with the same
   * operations and constants, as the [[Measures]] column expressions over
   * `sort_array(collect_list(x))`, so both paths give bit-identical doubles.
+  * [[alerts]] runs that fold and [[SortedWindow.alert]] for the batch alert
+  * kernel and the streaming count-window operator alike; the stream keeps
+  * only the arrival ring between micro-batches ([[load]], [[arrivals]]).
   */
 final class SortedWindow(n: Int) {
   require(n >= 2, s"window size must be at least 2, got $n")
@@ -22,10 +27,29 @@ final class SortedWindow(n: Int) {
   private val sorted = new Array[Double](n)
   private var head = 0 // next ring slot to write = the oldest value once full
   private var size = 0
+  private val measured = new Array[Double](Measures.names.length)
 
-  def isFull: Boolean = size == n
+  private def isFull: Boolean = size == n
 
   def clear(): Unit = { head = 0; size = 0 }
+
+  /** Replaces the window by an arrival ring in this class's layout: `n`
+    * slots, `head` the next slot to write and `count` slots filled (slots
+    * `0 until count` while not full). The ascending copy is the filled
+    * slots sorted by `java.util.Arrays.sort`, whose order is [[push]]'s. */
+  def load(buf: Array[Double], head: Int, count: Int): Unit = {
+    require(buf.length == n && count >= 0 && count <= n && head >= 0 && head < n,
+      s"not a $n-slot ring: ${buf.length} slots, head $head, count $count")
+    System.arraycopy(buf, 0, ring, 0, n)
+    System.arraycopy(buf, 0, sorted, 0, count)
+    java.util.Arrays.sort(sorted, 0, count)
+    this.head = head
+    size = count
+  }
+
+  /** A copy of the arrival ring with its `head` and `count`, as [[load]]
+    * takes them. */
+  def arrivals: (Array[Double], Int, Int) = (ring.clone(), head, size)
 
   def push(v: Double): Unit = {
     if (size == n) {
@@ -55,7 +79,7 @@ final class SortedWindow(n: Int) {
     * order. The tail mean of a window shorter than 10 is 0.0 / 0 = NaN
     * (null in the column form with ANSI off), which no threshold makes
     * [[SortedWindow.alert]] true for. */
-  def measures(out: Array[Double]): Unit = {
+  private def measures(out: Array[Double]): Unit = {
     val k = n / 10
     var sum = 0.0
     var tail = 0.0
@@ -79,9 +103,30 @@ final class SortedWindow(n: Int) {
     out(4) = mean - dev / (2.0 * n)
     out(5) = mean - gsum / (n.toDouble * n)
   }
+
+  /** The alerts of the current window: nothing until it is full, then
+    * `alert(stat, m, thr)` for each `live` (stat index, thr) cell, in
+    * order, whose measure [[SortedWindow.alert]] holds for. The measures
+    * are evaluated only when some cell is live. */
+  def alerts[A: ClassTag](live: Array[(Int, Double)], shortfall: Double)(
+      alert: (String, Double, Double) => A): Array[A] =
+    if (!isFull || live.isEmpty) Array.empty[A]
+    else {
+      measures(measured)
+      live.collect { case (s, t) if SortedWindow.alert(measured(s), t, shortfall) =>
+        alert(SortedWindow.names(s), measured(s), t)
+      }
+    }
 }
 
 object SortedWindow {
+  private val names = Measures.names.toArray
+
+  /** The live cells of a threshold lookup: (stat index, thr) for each
+    * statistic in [[Measures.names]] order that has a threshold. */
+  def cells(thr: String => Option[Double]): Array[(Int, Double)] =
+    names.indices.toArray.flatMap(s => thr(names(s)).map(s -> _))
+
   /** `Measures.alertPredicate` on doubles, with Spark SQL's comparison
     * semantics: NaN sorts above every number and equals itself, and a
     * division by zero (a threshold of exactly −1) is null, so no alert. */

@@ -108,7 +108,6 @@ object AlertPipeline {
       .select(col(key), col(ord), col(x).cast(DoubleType))
     val keyed = thresholds.columns.contains(key)
     val cells = thresholdCells(thresholds, key, input.schema(0).dataType, keyed)
-    val names = Measures.names.toArray
     val schema = StructType(input.schema.take(2) ++ Seq(
       StructField("stat", StringType, nullable = false),
       StructField("m", DoubleType, nullable = false),
@@ -118,7 +117,6 @@ object AlertPipeline {
       .sortWithinPartitions(key, ord)
       .mapPartitions { rows =>
         val window = new SortedWindow(n)
-        val m = new Array[Double](names.length)
         var current: Any = null
         var live: Array[(Int, Double)] = null // (stat index, threshold) of the current key
         rows.flatMap { r =>
@@ -127,17 +125,10 @@ object AlertPipeline {
             current = k
             window.clear()
             val cellKey = if (keyed) k else AllKeys
-            live = names.indices.toArray
-              .flatMap(s => cells.get((names(s), cellKey)).map(s -> _))
+            live = SortedWindow.cells(stat => cells.get((stat, cellKey)))
           }
           window.push(r.getDouble(2))
-          if (!window.isFull || live.isEmpty) Iterator.empty
-          else {
-            window.measures(m)
-            live.collect { case (s, t) if SortedWindow.alert(m(s), t, shortfall) =>
-              Row(k, r.get(1), names(s), m(s), t)
-            }.iterator
-          }
+          window.alerts(live, shortfall)((stat, m, t) => Row(k, r.get(1), stat, m, t))
         }
       }(Encoders.row(schema))
   }

@@ -97,9 +97,9 @@ object StreamingQueries {
   val all: Seq[Q] = Seq(
     // The reference pipeline END-TO-END as a streaming job, oracle-gated:
     // events stream (file source) → CountSlidingWindow (ring-buffer state
-    // per key, size-30 count window, six measures per fire) → threshold
-    // flatMap against the batch-built 6-entry side table (the stats.csv
-    // pattern) → memory sink. The oracle is q10's alert SQL VERBATIM:
+    // per key, size-30 count window, the batch kernel's measures and
+    // threshold predicate per fire against the batch-built 6-entry side
+    // table — the stats.csv pattern) → memory sink. The oracle is q10's alert SQL VERBATIM:
     // the streamed alert set must hash-match the batch pipeline's —
     // StreamingEventAlertsSpec proves the equality in-test, this row
     // makes the driver's gate prove it every round.

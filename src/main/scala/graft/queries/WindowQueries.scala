@@ -115,25 +115,16 @@ object WindowQueries {
       Some(s"""$alertsWith
            |SELECT user_id, event_id, stat, m, thr FROM alerts""".stripMargin)),
 
-    // O5 direct analog: the one-pass typed Aggregator (Flink
-    // AggregateFunction ≙ Spark Aggregator) evaluated over the same window
-    // frames — coverage proof for the custom-UDAF path. Excluded from bench:
-    // a per-frame UDAF re-serializes its buffer per row, so the codegen'd
-    // expression path (q05–q09) is the performance path by design.
+    // O5: the six window measures of every full window as one row — the
+    // reference's AggregateFunction output (StreamingJob.java:393-417) in
+    // the column form. Excluded from bench: it is q05–q09 in one table.
     Q("q33_window_onepass_udaf",
       (s, dir) => {
         val ev = Tables(s, dir, "events")
           .select(col("user_id"), col("event_id"), col("value").cast("double").as("v"))
-        val wOrd = Window.partitionBy(col("user_id")).orderBy(col("event_id"))
-        ev.withColumn("ms",
-            graft.measures.WindowMeasuresAgg.column(col("v"), n = N)
-              .over(wOrd.rowsBetween(-(N - 1), 0)))
-          .withColumn("rn", row_number().over(wOrd))
-          .where(col("rn") >= N)
-          .select(col("user_id"), col("event_id"),
-            col("ms.mean").as("m_mean"), col("ms.median").as("m_median"),
-            col("ms.q10").as("m_q10"), col("ms.tailMean").as("m_tail"),
-            col("ms.sm1").as("m_sm1"), col("ms.sm2").as("m_sm2"))
+        AlertPipeline.withMeasures(
+          AlertPipeline.windowed(ev, col("user_id"), col("event_id"), col("v"), N),
+          Seq(col("user_id"), col("event_id")), N)
       },
       Some(
         s"""$winCte

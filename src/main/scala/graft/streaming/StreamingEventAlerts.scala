@@ -10,10 +10,12 @@ import graft.pipeline.AlertPipeline
   * population-threshold side table built once from the batch table (exactly
   * the stats.csv pattern — a precomputed broadcast-sized side input).
   *
-  * Batch/stream parity: CountSlidingWindow folds rows per user in event_id
-  * order with the same measure formulas, so the streamed alert set equals
-  * the batch `AlertPipeline.eventAlerts` row-for-row (asserted in
-  * StreamingEventAlertsSpec).
+  * Batch/stream parity: both sides drop a null `value`, and CountSlidingWindow
+  * folds each user's rows in event_id order through the batch kernel's
+  * `SortedWindow` measures and predicate. Given the same thresholds and
+  * every row arriving after its key's earlier rows, the streamed alert set
+  * equals the batch `AlertPipeline.eventAlerts` one, `m` and `thr` bit for
+  * bit (StreamingEventAlertsSpec, BatchStreamParitySpec).
   */
 object StreamingEventAlerts {
 
@@ -25,7 +27,8 @@ object StreamingEventAlerts {
   }
 
   /** Wire a streaming events source (same schema as the events table) into
-    * the count-window alert operator. */
+    * the count-window alert operator. A row whose `value` is null is
+    * dropped, as the batch kernel drops it. */
   def alerts(eventsStream: DataFrame, thr: Map[String, Double],
       n: Int = AlertPipeline.WindowSize): Dataset[StreamAlert] = {
     val spark = eventsStream.sparkSession
@@ -33,6 +36,7 @@ object StreamingEventAlerts {
     val samples = eventsStream
       .select(col("user_id").as("key"), col("event_id").as("seq"),
         col("value").cast("double").as("v"))
+      .where(col("v").isNotNull)
       .as[Sample]
     CountSlidingWindow.alerts(samples, thr, n)
   }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.streaming.CountSlidingWindowSpec.{EveryMeasure, columnForm, measureBits}
 
 /** SURVEY §5.2 streaming-specific: restart-from-checkpoint resumes
   * identically — no lost and no duplicated alerts across a stop/restart,
@@ -16,8 +17,8 @@ class CheckpointRestartSpec extends AnyFunSuite with SparkTestBase {
     test(s"[$backend] stop mid-stream, restart from checkpoint: exact same alert set") {
     import spark.implicits._
     val rnd = new scala.util.Random(21)
-    val rows = (0 until 60).map(i =>
-      s"""{"key":${i % 2},"seq":${i / 2},"v":${rnd.nextDouble()}}""")
+    val data = (0 until 60).map(i => Sample(i % 2, i / 2, rnd.nextDouble()))
+    val rows = data.map(s => s"""{"key":${s.key},"seq":${s.seq},"v":${s.v}}""")
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
     def write(name: String, lines: Seq[String]): Unit =
       java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/$name"),
@@ -27,13 +28,13 @@ class CheckpointRestartSpec extends AnyFunSuite with SparkTestBase {
       val ds = spark.readStream.schema("key LONG, seq LONG, v DOUBLE")
         .json(s"$dir/in").as[Sample]
       // durable sink: the memory sink cannot recover from a checkpoint
-      CountSlidingWindow.measures(ds, 20)
+      CountSlidingWindow.alerts(ds, EveryMeasure, 20)
         .writeStream.format("parquet")
         .option("path", s"$dir/out")
         .option("checkpointLocation", s"$dir/_ckpt")
         .outputMode("append").start()
     }
-    def readOut() = spark.read.parquet(s"$dir/out").as[MeasureRow]
+    def readOut() = spark.read.parquet(s"$dir/out").as[StreamAlert]
 
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/in"))
     // explicit per-branch: defensive against any earlier
@@ -56,22 +57,11 @@ class CheckpointRestartSpec extends AnyFunSuite with SparkTestBase {
     } finally if (backend == "rocksdb")
       spark.conf.unset(StateBackend.ProviderConfKey)
 
-    // batch truth over the full input
-    val byKey = (0 until 60).map(i => (i % 2, i / 2, rows(i))).groupBy(_._1)
-    val expected = (0 until 2).flatMap { k =>
-      val vs = (0 until 30).map { s =>
-        val json = byKey(k).find(_._2 == s).get._3
-        json.split("\"v\":")(1).dropRight(1).toDouble
-      }.toArray
-      (19 until 30).flatMap(s => graft.measures.MeasuresRef
-        .all(vs.slice(s - 19, s + 1)).map { case (stat, m) => (k.toLong, s.toLong, stat, m) })
-    }
+    // batch truth over the full input: 2 keys x 11 windows x 6 stats
+    val expected = columnForm(data.toDF("key", "seq", "v"), 20)
+    assert(expected.size === 2 * 11 * 6)
     assert(afterFirst > 0 && afterFirst < all.length)
-    assert(all.length === expected.length, "restart lost or duplicated rows")
-    val got = all.map(r => (r.key, r.seq, r.stat) -> r.m).toMap
-    assert(got.size === all.length, "duplicate (key,seq,stat) rows after restart")
-    expected.foreach { case (k, s, stat, m) =>
-      assert(math.abs(got((k, s, stat)) - m) < 1e-9, s"($k,$s,$stat)")
-    }
+    assert(all.length === expected.size, "restart lost or duplicated rows")
+    assert(measureBits(all.toSeq) === expected)
   }
 }

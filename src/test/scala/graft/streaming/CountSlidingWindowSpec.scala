@@ -1,13 +1,44 @@
 package graft.streaming
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.measures.Measures
 import graft.pipeline.AlertPipeline
 
+object CountSlidingWindowSpec extends org.scalatest.Assertions {
+  /** A threshold far above any window measure for every stat: each full
+    * window alerts on all six, so the alerts' `m` carry every measure. */
+  val EveryMeasure: Map[String, Double] = Measures.names.map(_ -> 1e300).toMap
+
+  /** The column form's measures of every full window of (key, seq, v):
+    * (key, seq, stat) → `doubleToLongBits(m)`. */
+  def columnForm(df: DataFrame, n: Int): Map[(Long, Long, String), Long] =
+    AlertPipeline.withMeasures(
+      AlertPipeline.windowed(df, col("key"), col("seq"), col("v"), n),
+      Seq(col("key"), col("seq")), n).collect().toSeq.flatMap { r =>
+        Measures.names.zipWithIndex.map { case (stat, i) =>
+          (r.getLong(0), r.getLong(1), stat) ->
+            java.lang.Double.doubleToLongBits(r.getDouble(2 + i))
+        }
+      }.toMap
+
+  /** [[EveryMeasure]] alerts as (key, seq, stat) → `doubleToLongBits(m)`;
+    * fails on a duplicated cell or a threshold other than 1e300. */
+  def measureBits(alerts: Seq[StreamAlert]): Map[(Long, Long, String), Long] = {
+    assert(alerts.forall(_.thr == 1e300))
+    val bits = alerts.map(a => (a.key, a.seq, a.stat) ->
+      java.lang.Double.doubleToLongBits(a.m)).toMap
+    assert(bits.size === alerts.size, "duplicate (key, seq, stat) alerts")
+    bits
+  }
+}
+
 class CountSlidingWindowSpec extends AnyFunSuite with SparkTestBase {
+  import CountSlidingWindowSpec._
 
   private def samples(keys: Int, n: Int): Seq[Sample] = {
     val rnd = new scala.util.Random(99)
@@ -20,7 +51,7 @@ class CountSlidingWindowSpec extends AnyFunSuite with SparkTestBase {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val data = samples(keys = 2, n = 45)
     val input = MemoryStream[Sample]
-    val q = CountSlidingWindow.measures(input.toDS(), 30)
+    val q = CountSlidingWindow.alerts(input.toDS(), EveryMeasure, 30)
       .writeStream.format("memory").queryName("m_out")
       .outputMode("append").start()
     try {
@@ -33,57 +64,50 @@ class CountSlidingWindowSpec extends AnyFunSuite with SparkTestBase {
       q.processAllAvailable()
     } finally q.stop()
 
-    val got = spark.table("m_out").as[MeasureRow].collect()
-      .map(r => (r.key, r.seq, r.stat) -> r.m).toMap
-
-    // batch reference over the same data
-    val df = data.toDF("key", "seq", "v")
-    val batch = AlertPipeline.withMeasures(
-      AlertPipeline.windowed(df, col("key"), col("seq"), col("v")),
-      Seq(col("key"), col("seq"))).collect()
-    assert(batch.length * 6 === got.size)
+    val got = measureBits(spark.table("m_out").as[StreamAlert].collect())
     assert(got.size === 2 * (45 - 29) * 6)
-    batch.foreach { r =>
-      graft.measures.Measures.names.zipWithIndex.foreach { case (stat, i) =>
-        val exp = r.getDouble(2 + i)
-        val g = got((r.getLong(0), r.getLong(1), stat))
-        assert(math.abs(g - exp) < 1e-9, s"key ${r.getLong(0)} seq ${r.getLong(1)} $stat")
-      }
-    }
+    assert(got === columnForm(data.toDF("key", "seq", "v"), 30))
   }
 
   test("replayed and late rows are skipped, not double-applied") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val data = samples(keys = 1, n = 35)
+    val data = samples(keys = 1, n = 40)
     val input = MemoryStream[Sample]
-    val q = CountSlidingWindow.measures(input.toDS(), 30)
+    val q = CountSlidingWindow.alerts(input.toDS(), EveryMeasure, 30)
       .writeStream.format("memory").queryName("r_out")
       .outputMode("append").start()
-    try {
-      input.addData(data)
+    val afterReplay = try {
+      input.addData(data.take(35))
       q.processAllAvailable()
       // a replayed slice AND a late row: all at or below lastSeq → no-ops
       input.addData(data.slice(10, 20) :+ Sample(0L, 5L, 99.9))
       q.processAllAvailable()
+      val n = spark.table("r_out").count()
+      // the windows after the replay see the original values only
+      input.addData(data.drop(35))
+      q.processAllAvailable()
+      n
     } finally q.stop()
-    val rows = spark.table("r_out").as[MeasureRow].collect()
     // only the original fires (seq 29..34), nothing from the replay batch
-    assert(rows.length === (35 - 29) * 6)
-    assert(rows.map(_.seq).distinct.sorted.toSeq === (29L to 34L))
+    assert(afterReplay === (35 - 29) * 6)
+    val got = measureBits(spark.table("r_out").as[StreamAlert].collect())
+    assert(got.keys.map(_._2).toSeq.distinct.sorted === (29L to 39L))
+    assert(got === columnForm(data.toDF("key", "seq", "v"), 30))
   }
 
   test("ring-buffer state holds at n=1000: semantics across micro-batches") {
-    // The large-window shape check: state update must be O(1) per row (a
-    // ring-buffer slot write, never a window copy), so a 1000-deep window
-    // over 3000 rows streams through in fire-cost time. Semantics pinned
-    // against a naive sliding recompute with the same measure code.
+    // The large-window shape check: the state is the n-slot arrival ring,
+    // loaded and sorted once per key and micro-batch and slid by O(n) moves
+    // per row, so a 1000-deep window over 3000 rows streams through in
+    // fire-cost time. Semantics pinned against the column form, every
+    // window and measure bit for bit.
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val n = 1000
     val data = samples(keys = 1, n = 3000)
     val input = MemoryStream[Sample]
-    val q = CountSlidingWindow.measures(input.toDS(), n)
+    val q = CountSlidingWindow.alerts(input.toDS(), EveryMeasure, n)
       .writeStream.format("memory").queryName("big_out")
       .outputMode("append").start()
     try {
@@ -93,19 +117,9 @@ class CountSlidingWindowSpec extends AnyFunSuite with SparkTestBase {
       input.addData(data.filter(_.seq >= 1500))
       q.processAllAvailable()
     } finally q.stop()
-    val got = spark.table("big_out").as[MeasureRow].collect()
-      .map(r => (r.seq, r.stat) -> r.m).toMap
+    val got = measureBits(spark.table("big_out").as[StreamAlert].collect())
     assert(got.size === (3000 - (n - 1)) * 6)
-    val vs = data.map(_.v).toArray
-    // spot-check every 100th window end against the naive trailing slice
-    (n - 1 until 3000 by 100).foreach { end =>
-      val expect = graft.measures.MeasuresRef.all(
-        vs.slice(end - n + 1, end + 1))
-      expect.foreach { case (stat, m) =>
-        assert(math.abs(got((end.toLong, stat)) - m) < 1e-9,
-          s"seq $end $stat")
-      }
-    }
+    assert(got === columnForm(data.toDF("key", "seq", "v"), n))
   }
 
   test("alerts start exactly at row 30 and respect thresholds") {
