@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   * The global running sum this needs is exactly the operation that does
   * NOT scale as `Window.orderBy(key)` — an empty partition spec collapses
   * the corpus onto one task. This is the two-phase distributed prefix sum
-  * instead (the Ranks.withGlobalRank shape, in pure DataFrame operations):
+  * instead (the graft.queries.Ranks.withGlobalRank shape, in pure DataFrame
+  * operations):
   *
   *   1. `repartitionByRange(orderCol)` — p range-ordered partitions;
   *      partition i holds keys strictly below partition i+1's.

@@ -1,219 +1,217 @@
 package graft.gen
 
-import scala.collection.mutable
-
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, StringType,
+  StructField, StructType}
 
 import graft.measures.Measures
 import graft.sources.Sources
 
 /** Population threshold job (≙ dataGeneration/psd.R:26-70, G2 in SURVEY
-  * §2.3): for each of the 7 series (6 assets + weighted portfolio) over the
-  * full sample table, compute the six statistics → the stats.csv-shaped
-  * table (stat, assetNo, thr).
+  * §2.3): the six statistics of each series over a whole table, the
+  * stats.csv side table the alert predicate reads. Two entry points share
+  * one job:
+  *   - [[thresholds]]: the 7 series of the samples table (6 assets +
+  *     weighted portfolio) → (stat, assetNo, thr), 42 rows;
+  *   - [[columnThresholds]]: one value column as one series → (stat, thr),
+  *     6 rows (the events thresholds of q10 and the streaming alerts).
   *
-  * Scale design: one range-partitioned sorted pass. `(assetNo, x)` is
+  * Scale design: count first, then one sorted walk. `(series, x)` is
   * range-partitioned into the session's `spark.sql.shuffle.partitions`
-  * partitions and sorted within each, so reading the partitions in index
-  * order visits every series in ascending order, and a long series spans
-  * many partitions (tasks) instead of landing on one. Equal keys always
-  * share a partition, so only a run of ties stays on one task, and the
-  * walks below stream it in O(1) memory.
-  *   1. One walk emits a summary per (partition, series) piece — count, Σx,
-  *      Σ(localRank·x), first and last value: at most p + 7 small records,
-  *      collected to the driver.
-  *   2. The driver turns them into n, mean and each piece's rank offset
-  *      `off`; the GMD rank sum is exact from the summaries alone,
-  *      Σᵢ(2i−n−1)sᵢ = Σ_pieces [2·(off·Σx + Σ lr·x) − (n+1)·Σx], since a
-  *      piece's global ranks are exactly off + its local ranks.
-  *   3. Every remaining statistic needs at most one value per target rank,
-  *      one partial prefix sum, or one partial sum below the mean, and each
-  *      lies in exactly one piece. Targets on a piece's first or last row
-  *      come from the summaries; the rest are read by one job over only the
-  *      partitions holding a target.
-  * Exactness: partition order × in-partition order is the total order of
-  * each series, so the values read at target ranks are exactly the sorted
-  * array's order statistics and every sum covers exactly the sorted-array
+  * partitions, not sorted, so a long series spans many partitions (tasks)
+  * instead of landing on one. Two jobs read the same shuffle output:
+  *   1. The count job reads each (partition, series) piece's count and Σx.
+  *      From these the driver knows every series' n and mean, the tail cut
+  *      k = ⌊n/10⌋ and each piece's rank offset `off`, so it knows which
+  *      piece holds each quantile rank before any value is sorted.
+  *   2. The walk job copies each piece into a `double[]` of its counted
+  *      size, sorts it (`java.util.Arrays.sort`) and in one loop answers the
+  *      piece's share of every statistic: the values at its target ranks,
+  *      the sum of its values among the k smallest, the count and sum of its
+  *      values below the mean, and its GMD rank sum Σ(2(off+i)−n−1)·sᵢ.
+  * The driver only adds the pieces' answers; each value is sorted once.
+  * Exactness: Spark's range ordering treats −0.0 and 0.0 as equal and puts
+  * NaN last, so equal keys share a partition; `Arrays.sort` orders by
+  * `Double.compare`, which refines that order (−0.0 before 0.0) and also
+  * puts NaN last. So partition order × in-array order is a total order of
+  * each series, the values read at target ranks are exactly the sorted
+  * array's order statistics, and every sum covers exactly the sorted-array
   * definition's terms; only the floating-point summation order differs.
-  * Nothing is cached and no rank table is built; the result is a 42-row
-  * local relation. Faithful to psd.R semantics:
+  * Memory: a walk task holds its partition's values as doubles (8 bytes a
+  * value), and one run of equal keys stays in one partition. Nothing is
+  * cached. Faithful to psd.R semantics:
   *   - quantile: R type-7 (== Spark `percentile` interpolation): position
   *     p·(n−1), the bracketing order statistics lo/hi weighted
   *     lowerVal·(hi−position) + higherVal·(position−lo);
   *   - tail: mean of exactly the ⌊n/10⌋ smallest (psd.R:46-50);
   *   - SM1: mean − Σ|mean−x|/(2n) (psd.R:52-62), with
   *     Σ|m−x| = m·(2c − n) − 2S₍ₓ<ₘ₎ + S for c = #{x < m};
-  *   - SM2 row: sjstats::gmd — the UNBIASED Gini mean difference
-  *     2·Σᵢ(2i−n−1)sᵢ/(n(n−1)) (psd.R:64-68; SURVEY §2.5 Q5 keeps this
-  *     as data, distinct from the window-side 2n² formula).
-  * Input contract: null values are dropped (as `AlertPipeline.windowed`
-  * does); every series needs at least 10 non-null values, so the tail cut
-  * ⌊n/10⌋ selects at least one.
+  *   - SM2: from the exact rank sum Σᵢ(2i−n−1)sᵢ, in one of two forms
+  *     (see `gmd`).
+  * Input contract: null values are dropped; every series needs at least 10
+  * non-null values (`require`, naming the series), so the tail cut ⌊n/10⌋
+  * selects at least one.
   */
 object PopulationStats {
 
   private val Series = 7
 
-  /** One series' run of rows inside one range partition, in sorted order. */
-  private final case class Piece(part: Int, series: Int, cnt: Long, sum: Double,
-      rankSum: Double, first: Double, last: Double)
+  /** One series' statistics; `gsum` is the rank sum Σᵢ(2i−n−1)sᵢ. */
+  private final case class Stats(n: Long, mean: Double, median: Double,
+      q10: Double, tail: Double, sm1: Double, gsum: Double)
 
-  /** What one partition reads for one series: the values at local ranks
-    * `ranks`, the sum of its first `prefix` values, and the count and sum
-    * of the values below `cut` (NaN: none). */
-  private final case class Probe(series: Int, ranks: Set[Long], prefix: Long, cut: Double)
+  /** One (partition, series) piece as the count job sees it. */
+  private final case class Piece(part: Int, series: Int, cnt: Long, sum: Double)
 
-  /** A probe's answers, filled in by one partition walk. */
-  private final class Found(val probe: Probe) extends Serializable {
-    val values = mutable.Map.empty[Long, Double]
-    var prefixSum, belowSum = 0.0
-    var below = 0L
-  }
+  /** One (partition, series) piece as the walk reads it: its rank offset,
+    * its count, the 0-based in-piece ranks to read, and how many of its
+    * values are among the series' k smallest. */
+  private final case class Target(series: Int, off: Long, cnt: Int,
+      ranks: Array[Int], prefix: Int)
+
+  /** A piece's answers: the values at its target ranks, the sum of its
+    * first `prefix` values, the count and sum of its values below the mean,
+    * and its share of the rank sum. */
+  private final case class Answer(values: Array[Double], prefixSum: Double,
+      below: Long, belowSum: Double, gsum: Double)
+
+  // Two SM2 forms are in use until one is chosen (ROADMAP.md item 2(c),
+  // SURVEY §2.5 Q5): the samples table emits sjstats::gmd, the unbiased
+  // Gini mean difference (perfbench's `Oracle.thr` pins it); the value
+  // column emits mean − Σ/n² (q10's DuckDB oracle pins it).
+  private def gmd(s: Stats): Double = 2 * s.gsum / (s.n.toDouble * (s.n - 1).toDouble)
+  private def meanLessGmd(s: Stats): Double = s.mean - s.gsum / (s.n.toDouble * s.n.toDouble)
+
+  private val StatNames = Seq(Measures.Mean, Measures.Median, Measures.Q10,
+    Measures.TailMean, Measures.Sm1, Measures.Sm2)
+
+  private def values(s: Stats, sm2: Stats => Double): Seq[Double] =
+    Seq(s.mean, s.median, s.q10, s.tail, s.sm1, sm2(s))
 
   /** samples: columns a0..a5 → (stat, assetNo, thr), 6×7 rows. */
   def thresholds(samples: DataFrame): DataFrame = {
-    val spark = samples.sparkSession
-    val sorted = Sources.toSeries(samples.withColumn("seq", lit(0L)))
-      .select(col("assetNo"), col("x").cast("double").as("x"))
-      .where(col("x").isNotNull)
+    val series = Sources.toSeries(samples.withColumn("seq", lit(0L)))
+      .select(col("assetNo").as("series"), col("x").cast(DoubleType).as("x"))
+    val stats = core(series, Series, a => s"assetNo $a")
+    val rows = StatNames.zipWithIndex.flatMap { case (stat, i) =>
+      stats.zipWithIndex.map { case (st, s) => Row(stat, s, values(st, gmd)(i)) }
+    }
+    table(samples, rows, "assetNo" -> IntegerType)
+  }
+
+  /** The values of column `x` of `df` as one series → (stat, thr), 6 rows. */
+  def columnThresholds(df: DataFrame, x: Column): DataFrame = {
+    val stats = core(df.select(lit(0).as("series"), x.cast(DoubleType).as("x")), 1,
+      _ => s"column $x").head
+    table(df, StatNames.zip(values(stats, meanLessGmd)).map { case (stat, v) => Row(stat, v) })
+  }
+
+  /** A local (stat, [key,] thr) relation. */
+  private def table(df: DataFrame, rows: Seq[Row], key: (String, DataType)*): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(
+      StructField("stat", StringType, nullable = false) +:
+        key.map { case (k, t) => StructField(k, t, nullable = false) } :+
+        StructField("thr", DoubleType, nullable = false)))
+
+  /** The job: `input` has columns `series` (INT in [0, seriesCount)) and
+    * `x` (DOUBLE); `name` names a series in the contract's message. */
+  private def core(input: DataFrame, seriesCount: Int, name: Int => String): Seq[Stats] = {
+    val spark = input.sparkSession
+    val rows = input.where(col("x").isNotNull)
       .repartitionByRange(spark.sessionState.conf.numShufflePartitions,
-        col("assetNo"), col("x"))
-      .sortWithinPartitions(col("assetNo"), col("x"))
-    val rows = sorted.queryExecution.toRdd
-    val pieces = rows.mapPartitionsWithIndex(summarize).collect()
-      .groupBy(_.series).map { case (s, ps) => s -> ps.sortBy(_.part) }
-    val plans = (0 until Series).map { s =>
-      val ps = pieces.getOrElse(s, Array.empty[Piece])
-      val n = ps.map(_.cnt).sum
-      require(n >= 10, s"PopulationStats.thresholds needs at least 10 non-null " +
-        s"values per series (the tail cut is ⌊n/10⌋), got $n for assetNo $s")
-      new SeriesPlan(s, ps, n)
-    }
-    val probes = plans.flatMap(_.probes).groupMap(_._1)(_._2)
-    val parts = probes.keys.toSeq.sorted
-    val found = spark.sparkContext.runJob(rows,
-      (ctx: TaskContext, it: Iterator[InternalRow]) => lookup(probes(ctx.partitionId()), it),
-      parts).iterator.zip(parts.iterator).flatMap { case (fs, part) =>
-      fs.map(f => (part, f.probe.series) -> f)
-    }.toMap
-    val stats = plans.map(_.stats(found))
-    val out = Seq(Measures.Mean, Measures.Median, Measures.Q10, Measures.TailMean,
-      Measures.Sm1, Measures.Sm2).zipWithIndex.flatMap { case (stat, i) =>
-      stats.zipWithIndex.map { case (st, s) => Row(stat, s, st(i)) }
-    }
-    spark.createDataFrame(java.util.Arrays.asList(out: _*), StructType(Seq(
-      StructField("stat", StringType, nullable = false),
-      StructField("assetNo", IntegerType, nullable = false),
-      StructField("thr", DoubleType, nullable = false))))
-  }
+        col("series"), col("x"))
+      .queryExecution.toRdd
 
-  /** Pass 1: one summary per series run in a sorted partition. */
-  private def summarize(part: Int, it: Iterator[InternalRow]): Iterator[Piece] = {
-    val out = mutable.ArrayBuffer.empty[Piece]
-    var s = -1
-    var cnt = 0L
-    var sum, rankSum, first, last = 0.0
-    def flush(): Unit = if (cnt > 0) out += Piece(part, s, cnt, sum, rankSum, first, last)
-    it.foreach { r =>
-      val a = r.getInt(0)
-      val x = r.getDouble(1)
-      if (a != s) {
-        flush()
-        s = a; cnt = 0; sum = 0; rankSum = 0; first = x
+    // job 1: count and Σx per (partition, series) piece
+    val pieces = rows.mapPartitionsWithIndex { (part, it) =>
+      val cnt = new Array[Long](seriesCount)
+      val sum = new Array[Double](seriesCount)
+      it.foreach { r =>
+        val a = r.getInt(0)
+        cnt(a) += 1; sum(a) += r.getDouble(1)
       }
-      cnt += 1; sum += x; rankSum += cnt * x; last = x
-    }
-    flush()
-    out.iterator
-  }
+      (0 until seriesCount).iterator.filter(cnt(_) > 0).map(a => Piece(part, a, cnt(a), sum(a)))
+    }.collect().groupBy(_.series)
 
-  /** Pass 2 over one partition: answers its probes in one walk. */
-  private def lookup(probes: Seq[Probe], it: Iterator[InternalRow]): Array[Found] = {
-    val found = probes.map(p => p.series -> new Found(p)).toMap
-    var s = -1
-    var lr = 0L
-    it.foreach { r =>
-      val a = r.getInt(0)
-      if (a != s) { s = a; lr = 0 }
-      lr += 1
-      found.get(a).foreach { f =>
-        val x = r.getDouble(1)
-        if (f.probe.ranks.contains(lr)) f.values(lr) = x
-        if (lr <= f.probe.prefix) f.prefixSum += x
-        if (x < f.probe.cut) { f.below += 1; f.belowSum += x }
-      }
-    }
-    found.values.toArray
-  }
-
-  /** One series on the driver: its pieces in partition order, the targets
-    * they leave open, and the six statistics once the targets are read. */
-  private final class SeriesPlan(series: Int, ps: Array[Piece], n: Long) {
-    private val offs = ps.scanLeft(0L)(_ + _.cnt)
-    private val total = ps.map(_.sum).sum
-    private val mean = total / n
-    private val k = n / 10
-    /** Type-7 position and its bracketing 0-based order statistics. */
-    private def bracket(p: Double): (Double, Long, Long) = {
-      val pos = p * (n - 1).toDouble
+    // the driver: n, mean and rank offsets; then each piece's targets
+    val n = Array.tabulate(seriesCount)(a => pieces.get(a).fold(0L)(_.map(_.cnt).sum))
+    (0 until seriesCount).foreach(a => require(n(a) >= 10,
+      s"PopulationStats needs at least 10 non-null values per series " +
+        s"(the tail cut is ⌊n/10⌋), got ${n(a)} for ${name(a)}"))
+    val total = Array.tabulate(seriesCount)(a => pieces(a).map(_.sum).sum)
+    val mean = Array.tabulate(seriesCount)(a => total(a) / n(a))
+    // type-7 quantile p: position p·(n−1) between two 0-based ranks
+    def bracket(a: Int, p: Double): (Double, Long, Long) = {
+      val pos = p * (n(a) - 1)
       (pos, math.floor(pos).toLong, math.ceil(pos).toLong)
     }
-    private val ranks = Seq(0.5, 0.1).flatMap { p =>
-      val (_, lo, hi) = bracket(p)
-      Seq(lo + 1, hi + 1)
-    }
-    /** Index of the piece holding 1-based rank r. */
-    private def pieceOf(r: Long): Int = ps.indices.find(i => r <= offs(i + 1)).get
-    private def inner(i: Int, r: Long): Boolean = r - offs(i) != 1 && r != offs(i + 1)
-    private val tailPiece = pieceOf(k)
-    private val straddle = ps.indexWhere(p => p.first < mean && mean <= p.last)
-
-    /** (partition, probe) for every target the summaries do not answer. */
-    def probes: Seq[(Int, Probe)] = {
-      val need = mutable.Map.empty[Int, Probe]
-      def at(i: Int)(f: Probe => Probe): Unit = need(i) =
-        f(need.getOrElse(i, Probe(series, Set.empty, 0, Double.NaN)))
-      ranks.foreach { r =>
-        val i = pieceOf(r)
-        if (inner(i, r)) at(i)(p => p.copy(ranks = p.ranks + (r - offs(i))))
+    val targets = pieces.values.toSeq.flatMap { ps =>
+      val inOrder = ps.sortBy(_.part)
+      inOrder.zip(inOrder.scanLeft(0L)(_ + _.cnt)).map { case (Piece(p, a, cnt, _), off) =>
+        require(cnt <= Int.MaxValue, s"partition $p holds $cnt values of ${name(a)}")
+        val ranks = Seq(0.5, 0.1).flatMap { q => val (_, lo, hi) = bracket(a, q); Seq(lo, hi) }
+          .filter(r => r >= off && r < off + cnt).map(r => (r - off).toInt).distinct
+        p -> Target(a, off, cnt.toInt, ranks.toArray,
+          math.min(math.max(n(a) / 10 - off, 0L), cnt).toInt)
       }
-      if (k != offs(tailPiece + 1)) at(tailPiece)(_.copy(prefix = k - offs(tailPiece)))
-      if (straddle >= 0) at(straddle)(_.copy(cut = mean))
-      need.toSeq.map { case (i, p) => ps(i).part -> p }
-    }
+    }.groupMap(_._1)(_._2)
 
-    /** mean, median, q10, tail, SM1, SM2 — the `Measures` stat order. */
-    def stats(found: Map[(Int, Int), Found]): Seq[Double] = {
-      def read(i: Int): Found = found((ps(i).part, series))
-      def value(r: Long): Double = {
-        val i = pieceOf(r)
-        if (r - offs(i) == 1) ps(i).first
-        else if (r == offs(i + 1)) ps(i).last
-        else read(i).values(r - offs(i))
-      }
+    // job 2: sort each piece once and answer its targets
+    val parts = targets.keys.toSeq.sorted
+    val answers = spark.sparkContext.runJob(rows,
+      (ctx: TaskContext, it: Iterator[InternalRow]) =>
+        walk(targets(ctx.partitionId()), seriesCount, n, mean, it), parts)
+      .iterator.zip(parts.iterator).flatMap { case (as, p) => targets(p).zip(as) }.toSeq
+
+    (0 until seriesCount).map { a =>
+      val mine = answers.filter(_._1.series == a)
+      val at = mine.flatMap { case (t, ans) =>
+        t.ranks.iterator.map(_ + t.off).zip(ans.values.iterator)
+      }.toMap
       def quantile(p: Double): Double = {
-        val (pos, lo, hi) = bracket(p)
-        if (lo == hi) value(lo + 1)
-        else value(lo + 1) * (hi - pos) + value(hi + 1) * (pos - lo)
+        val (pos, lo, hi) = bracket(a, p)
+        if (lo == hi) at(lo) else at(lo) * (hi - pos) + at(hi) * (pos - lo)
       }
-      val tailSum = ps.take(tailPiece).map(_.sum).sum +
-        (if (k == offs(tailPiece + 1)) ps(tailPiece).sum else read(tailPiece).prefixSum)
-      val fullBelow = ps.takeWhile(_.last < mean)
-      val split = Option.when(straddle >= 0)(read(straddle))
-      val below = fullBelow.map(_.cnt).sum + split.fold(0L)(_.below)
-      val belowSum = fullBelow.map(_.sum).sum + split.fold(0.0)(_.belowSum)
-      val mad = (mean * (2 * below - n).toDouble - 2 * belowSum + total) / n
-      val gsum = ps.indices.map { i =>
-        val p = ps(i)
-        2 * (offs(i) * p.sum + p.rankSum) - (n + 1).toDouble * p.sum
-      }.sum
-      // n as double BEFORE the multiply: long n·(n−1) overflows past n ≈ 3.04e9
-      Seq(mean, quantile(0.5), quantile(0.1), tailSum / k, mean - mad / 2,
-        2 * gsum / (n.toDouble * (n - 1).toDouble))
+      val below = mine.map(_._2.below).sum
+      val belowSum = mine.map(_._2.belowSum).sum
+      val mad = (mean(a) * (2 * below - n(a)).toDouble - 2 * belowSum + total(a)) / n(a)
+      Stats(n(a), mean(a), quantile(0.5), quantile(0.1),
+        mine.map(_._2.prefixSum).sum / (n(a) / 10), mean(a) - mad / 2,
+        mine.map(_._2.gsum).sum)
+    }
+  }
+
+  /** The walk over one partition: each series' values into an array of
+    * its counted size, sorted, then one loop per piece. */
+  private def walk(targets: Seq[Target], seriesCount: Int, n: Array[Long],
+      mean: Array[Double], it: Iterator[InternalRow]): Seq[Answer] = {
+    val xs = new Array[Array[Double]](seriesCount)
+    val fill = new Array[Int](seriesCount)
+    targets.foreach(t => xs(t.series) = new Array[Double](t.cnt))
+    it.foreach { r =>
+      val a = r.getInt(0)
+      xs(a)(fill(a)) = r.getDouble(1)
+      fill(a) += 1
+    }
+    targets.map { t =>
+      val v = xs(t.series)
+      java.util.Arrays.sort(v)
+      val m = mean(t.series)
+      val coef = 2 * t.off + 1 - n(t.series) // 2(off + i + 1) − n − 1 at i = 0
+      var prefixSum, belowSum, gsum = 0.0
+      var below = 0L
+      var i = 0
+      while (i < v.length) {
+        val x = v(i)
+        if (i < t.prefix) prefixSum += x
+        if (x < m) { below += 1; belowSum += x }
+        gsum += (coef + 2L * i).toDouble * x
+        i += 1
+      }
+      Answer(t.ranks.map(v(_)), prefixSum, below, belowSum, gsum)
     }
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType, StructField, StructType}
 
+import graft.gen.PopulationStats
 import graft.measures.{Measures, SortedWindow}
 
 /** The reference's core dataflow (SURVEY §3.1), generalized Spark-first:
@@ -27,6 +28,9 @@ import graft.measures.{Measures, SortedWindow}
   *    (`collect_list` frame → `sort_array` → [[Measures]] array folds).
   *    The window queries q04–q09 use it, and it is the test oracle of the
   *    kernel: both compute bit-identical measures.
+  *
+  * The thresholds come from `graft.gen.PopulationStats`, one job for the
+  * samples' 7 series and for the events' one value column.
   */
 object AlertPipeline {
   val WindowSize = 30
@@ -86,11 +90,15 @@ object AlertPipeline {
     * column: a keyed row applies to its key's series, a table without the
     * key column applies to every key. It is collected to the driver (the
     * reference's has 42 rows). Each (stat, key) cell may appear at most
-    * once (`require`); a missing cell, a null `thr` or a null key never
-    * alerts.
+    * once (`require`); a missing cell, a null `thr` or a threshold row
+    * with a null key never alerts.
     *
-    * Plan: drop null `x` → hash shuffle by key → sort within partitions by
-    * (key, ord) → one `mapPartitions` walk that slides one [[SortedWindow]]
+    * Input contract: a row whose `key`, `ord` or `x` is null is dropped
+    * before the walk, so it starts no series and fills no window slot;
+    * `StreamingEventAlerts.alerts` drops the same rows.
+    *
+    * Plan: drop null `key`/`ord`/`x` → hash shuffle by key → sort within
+    * partitions by (key, ord) → one `mapPartitions` walk that slides one [[SortedWindow]]
     * per key and evaluates measures and predicate in the same loop. There
     * is no window operator, array column, join or per-window sort; one
     * key's series is walked by one task. `ord` must be unique within a key,
@@ -104,7 +112,7 @@ object AlertPipeline {
       thresholds: DataFrame, n: Int = WindowSize,
       shortfall: Double = Shortfall): DataFrame = {
     require(n >= 2, s"window size must be at least 2, got $n")
-    val input = df.where(col(x).isNotNull)
+    val input = df.where(col(key).isNotNull && col(ord).isNotNull && col(x).isNotNull)
       .select(col(key), col(ord), col(x).cast(DoubleType))
     val keyed = thresholds.columns.contains(key)
     val cells = thresholdCells(thresholds, key, input.schema(0).dataType, keyed)
@@ -153,76 +161,23 @@ object AlertPipeline {
     cells.collect { case (cell, r) if !r.isNullAt(1) => cell -> r.getDouble(1) }.toMap
   }
 
-  /** Population thresholds over a single value column `v` — the analog of
-    * psd.R:26-70 / stats.csv: mean, exact median & 10th percentile
-    * (interpolated), mean of the ⌊n/10⌋ smallest, SM1, SM2 (via the sorted
-    * identity, O(n log n)).
-    *
-    * This is a one-time side-table build (6 numbers), the moral equivalent of
-    * reading stats.csv — the global sort here is a threshold-build cost, not
-    * a per-query cost; at 100 TB you would compute it once and persist it,
-    * exactly as the reference persists stats.csv. The collected scalars feed
-    * a 6-row DataFrame that downstream joins broadcast.
-    */
-  def populationThresholds(ev: DataFrame, vCol: String = "v"): DataFrame = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    val v = col(vCol)
-    // ONE ranked frame feeds both threshold passes (ranking is distributed —
-    // range shuffle + zipWithIndex — never a one-task sort) and is cached so
-    // the rank build and the source scan run once. Pass 2 depends on pass
-    // 1's n and mean, so two driver actions is the floor; what matters is
-    // that neither re-reads the source.
-    val ranked = Ranks.withGlobalRank(ev, Seq(v), "thr_rn").cache()
-    val head = ranked.agg(
-      count(lit(1)), avg(v),
-      expr(s"percentile($vCol, 0.5)"), expr(s"percentile($vCol, 0.1)")).head()
-    val n = head.getLong(0)
-    // below 10 rows k = n/10 = 0 and the smallest-decile aggregate is
-    // NULL — fail with the actual contract instead of an opaque NPE at
-    // row2.getDouble
-    require(n >= 10,
-      s"populationThresholds needs at least 10 non-null rows, got $n")
-    val m = head.getDouble(1)
-    val med = head.getDouble(2)
-    val q = head.getDouble(3)
-    val k = (n / 10).toInt
-    // tail mean, MAD and the GMD rank-sum share the second pass; the
-    // per-element (2i−n−1)·v form is kept bit-compatible with the oracle
-    val row2 = ranked.agg(
-      avg(when(col("thr_rn") <= k, v)),
-      avg(abs(v - m)),
-      sum((col("thr_rn") * 2 - (n + 1)).cast("double") * v)).head()
-    val tail = row2.getDouble(0)
-    val mad = row2.getDouble(1)
-    val gsum = row2.getDouble(2)
-    ranked.unpersist(blocking = false)
-    Seq(
-      Measures.Mean -> m,
-      Measures.Median -> med,
-      Measures.Q10 -> q,
-      Measures.TailMean -> tail,
-      Measures.Sm1 -> (m - mad / 2.0),
-      Measures.Sm2 -> (m - gsum / (n.toDouble * n))
-    ).toDF("stat", "thr")
-  }
-
   /** End-to-end alert query over the driver `events` table: per-user sliding
     * 30-row windows over `value`, thresholds = population statistics of the
-    * whole value column, reference alert predicate (SURVEY §2.5 Q6).
+    * whole value column (`PopulationStats.columnThresholds`), reference
+    * alert predicate (SURVEY §2.5 Q6). Rows with a null `user_id`,
+    * `event_id` or `value` are dropped, as [[windowAlerts]] states.
     * Output: (user_id, event_id, stat, m, thr). */
   def eventAlerts(events: DataFrame, n: Int = WindowSize): DataFrame = {
     // deliberately NOT cached: the threshold build (6 driver-side numbers;
-    // populationThresholds caches and unpersists its own ranked frame) and
-    // the alert kernel each scan the source once, and callers that reuse
-    // the result cache IT (the Caches "alerts" tag) — a cache here would
-    // pin the projected source for the session lifetime, outside
-    // Caches.evict's reach
+    // PopulationStats caches nothing either) and the alert kernel each read
+    // the source on their own, and callers that reuse the result cache IT
+    // (the Caches "alerts" tag) — a cache here would pin the projected
+    // source for the session lifetime, outside Caches.evict's reach
     val ev = events
       .select(col("user_id"), col("event_id"), col("value").cast("double").as("v"))
     // the 6-row (stat, thr) table has no user_id column, so every
     // threshold applies to every user's series
     windowAlerts(ev, "user_id", "event_id", "v",
-      populationThresholds(ev.select(col("v"))), n, Shortfall)
+      PopulationStats.columnThresholds(ev, col("v")), n, Shortfall)
   }
 }

@@ -322,7 +322,7 @@ object CurationQueries {
     // Curriculum ordering: easiest-first training order — global
     // difficulty rank (quality ascending = hardest last is the usual
     // "clean first" curriculum) via the TWO-PHASE distributed rank
-    // (graft.pipeline.Ranks.withGlobalRank — range shuffle + local sorts
+    // (Ranks.withGlobalRank — range shuffle + local sorts
     // + zipWithIndex; NEVER a partition-less Window.orderBy), decile
     // bins from the rank, and a deterministic salted-digest shuffle key
     // WITHIN each bin (intra-bin order must be random-but-reproducible,
@@ -340,8 +340,7 @@ object CurationQueries {
           .where(col("quality").isNotNull)
           .select(col("doc_id"), round(col("quality"), 6).as("quality"))
         val n = q.count() // driver scalar: the bin divisor
-        graft.pipeline.Ranks
-          .withGlobalRank(q, Seq(col("quality"), col("doc_id")), "__rk")
+        Ranks.withGlobalRank(q, Seq(col("quality"), col("doc_id")), "__rk")
           .select(col("doc_id"), col("quality"),
             expr(s"((__rk - 1) * 10) DIV ${n}L").as("bin"),
             md5(concat(col("doc_id").cast("string"), lit(":cur")))
@@ -568,8 +567,7 @@ object CurationQueries {
               col("tok_start"), col("quality"))
         }
         val n = piped.count() // driver scalar: the curriculum bin divisor
-        graft.pipeline.Ranks
-          .withGlobalRank(piped, Seq(col("quality"), col("doc_id")), "__rk")
+        Ranks.withGlobalRank(piped, Seq(col("quality"), col("doc_id")), "__rk")
           .select(col("doc_id"), col("source"), col("est_tokens"),
             col("tok_start"), col("quality"),
             expr(s"((__rk - 1) * 10) DIV ${n}L").as("bin"),

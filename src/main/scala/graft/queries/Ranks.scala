@@ -1,4 +1,4 @@
-package graft.pipeline
+package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}

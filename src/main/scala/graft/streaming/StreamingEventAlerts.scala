@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.gen.PopulationStats
 import graft.pipeline.AlertPipeline
 
 /** The q10_alerts pipeline as a Structured Streaming job: the driver
@@ -10,25 +11,29 @@ import graft.pipeline.AlertPipeline
   * population-threshold side table built once from the batch table (exactly
   * the stats.csv pattern — a precomputed broadcast-sized side input).
   *
-  * Batch/stream parity: both sides drop a null `value`, and CountSlidingWindow
-  * folds each user's rows in event_id order through the batch kernel's
-  * `SortedWindow` measures and predicate. Given the same thresholds and
-  * every row arriving after its key's earlier rows, the streamed alert set
-  * equals the batch `AlertPipeline.eventAlerts` one, `m` and `thr` bit for
-  * bit (StreamingEventAlertsSpec, BatchStreamParitySpec).
+  * Batch/stream parity: both sides drop a row whose `user_id`, `event_id`
+  * or `value` is null, and CountSlidingWindow folds each user's rows in
+  * event_id order through the batch kernel's `SortedWindow` measures and
+  * predicate. Given the same thresholds and every row arriving after its
+  * key's earlier rows, the streamed alert set equals the batch
+  * `AlertPipeline.eventAlerts` one, `m` and `thr` bit for bit
+  * (StreamingEventAlertsSpec, BatchStreamParitySpec).
   */
 object StreamingEventAlerts {
 
-  /** Thresholds as a Map (6 entries) from the batch population-stats job. */
-  def thresholds(events: DataFrame): Map[String, Double] = {
-    val ev = events.select(col("value").cast("double").as("v"))
-    AlertPipeline.populationThresholds(ev).collect()
+  /** Thresholds as a Map (6 entries): the population statistics of the
+    * batch table's whole `value` column, null values dropped, from the same
+    * job and in the same form as `AlertPipeline.eventAlerts` uses
+    * (`PopulationStats.columnThresholds`; at least 10 non-null values). */
+  def thresholds(events: DataFrame): Map[String, Double] =
+    PopulationStats.columnThresholds(events, col("value")).collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
-  }
 
   /** Wire a streaming events source (same schema as the events table) into
-    * the count-window alert operator. A row whose `value` is null is
-    * dropped, as the batch kernel drops it. */
+    * the count-window alert operator. A row whose `user_id`, `event_id` or
+    * `value` is null is dropped before the `Sample` decode, as the batch
+    * kernel drops it; a null key or sequence number would otherwise fail
+    * the query. */
   def alerts(eventsStream: DataFrame, thr: Map[String, Double],
       n: Int = AlertPipeline.WindowSize): Dataset[StreamAlert] = {
     val spark = eventsStream.sparkSession
@@ -36,7 +41,7 @@ object StreamingEventAlerts {
     val samples = eventsStream
       .select(col("user_id").as("key"), col("event_id").as("seq"),
         col("value").cast("double").as("v"))
-      .where(col("v").isNotNull)
+      .where(col("key").isNotNull && col("seq").isNotNull && col("v").isNotNull)
       .as[Sample]
     CountSlidingWindow.alerts(samples, thr, n)
   }

@@ -31,8 +31,15 @@ class GeneratorSpec extends AnyFunSuite with SparkTestBase {
       rows.filter(_.forall(_.isDefined)).map(r =>
         Sources.Weights.indices.map(i => r(i).get * Sources.Weights(i)).reduce(_ + _)).toArray
 
-  /** Plain sorted-array oracle of the six statistics, in `Stats` order. */
-  private def oracle(xs: Array[Double]): Seq[Double] = {
+  /** The values `xs` (None = null) as a one-column frame `v`. */
+  private def column(xs: Seq[Option[Double]]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(xs.map(x => Row(x.getOrElse(null))): _*),
+      StructType(Seq(StructField("v", DoubleType))))
+
+  /** Plain sorted-array oracle of the six statistics, in `Stats` order;
+    * SM2 is the unbiased GMD 2Σ/(n(n−1)), or mean − Σ/n² for the column
+    * form. */
+  private def oracle(xs: Array[Double], columnForm: Boolean = false): Seq[Double] = {
     val s = xs.sorted
     val n = s.length
     val m = xs.sum / n
@@ -46,23 +53,59 @@ class GeneratorSpec extends AnyFunSuite with SparkTestBase {
     val mad = xs.map(x => math.abs(x - m)).sum / n
     val gsum = s.indices.map(i => (2.0 * (i + 1) - n - 1) * s(i)).sum
     Seq(m, q(0.5), q(0.1), s.take(k).sum / k, m - mad / 2,
-      2 * gsum / (n.toDouble * (n - 1)))
+      if (columnForm) m - gsum / (n.toDouble * n) else 2 * gsum / (n.toDouble * (n - 1)))
   }
 
-  /** Engine vs oracle, each statistic within 1e-12 relative to the larger
-    * of its own magnitude and the series' (a constant series' GMD is 0). */
+  /** Each statistic within 1e-12 relative to the larger of its own
+    * magnitude and the series' (a constant series' GMD is 0). */
+  private def assertClose(got: String => Double, xs: Array[Double],
+      columnForm: Boolean, label: String): Unit = {
+    val scale = xs.map(math.abs).max
+    Stats.zip(oracle(xs, columnForm)).foreach { case (st, want) =>
+      val v = got(st)
+      assert(math.abs(v - want) <= 1e-12 * math.max(scale, math.abs(want)),
+        s"$label n=${xs.length} $st: engine $v, oracle $want")
+    }
+  }
+
+  /** The samples form vs the oracle, for each of the 7 series. */
   private def assertExact(rows: Seq[Array[Option[Double]]], label: String = ""): Unit = {
     val got = PopulationStats.thresholds(frame(rows)).collect()
       .map(r => (r.getString(0), r.getInt(1)) -> r.getDouble(2)).toMap
     assert(got.size === 42, label)
     series(rows).zipWithIndex.foreach { case (xs, a) =>
-      val scale = xs.map(math.abs).max
-      Stats.zip(oracle(xs)).foreach { case (st, want) =>
-        val v = got((st, a))
-        assert(math.abs(v - want) <= 1e-12 * math.max(scale, math.abs(want)),
-          s"$label n=${xs.length} asset $a $st: engine $v, oracle $want")
-      }
+      assertClose(st => got((st, a)), xs, columnForm = false, s"$label asset $a")
     }
+  }
+
+  /** The column form vs the oracle over the non-null values of `xs`. */
+  private def assertColumnExact(xs: Seq[Option[Double]], label: String = ""): Unit = {
+    val got = PopulationStats.columnThresholds(column(xs), col("v")).collect()
+      .map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(got.size === 6, label)
+    assertClose(got, xs.flatten.toArray, columnForm = true, label)
+  }
+
+  /** Spark jobs started by `body`, which must leave nothing cached. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = "population-thresholds-jobs"
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
+    }
+    val cachedBefore = sc.getPersistentRDDs.keySet
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "PopulationStats")
+      try body
+      finally sc.clearJobGroup()
+      ListenerDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(sc.getPersistentRDDs.keySet === cachedBefore)
+    jobs.get()
   }
 
   private def withShufflePartitions[T](p: Int)(body: => T): T = {
@@ -177,25 +220,48 @@ class GeneratorSpec extends AnyFunSuite with SparkTestBase {
 
   test("thresholds run a bounded number of jobs and leave nothing cached") {
     val df = frame(uniformRows(2000, seed = 5))
-    val sc = spark.sparkContext
-    val group = "population-thresholds-jobs"
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
+    val jobs = jobsOf(PopulationStats.thresholds(df).collect())
+    // a sampling job for the range bounds, the shuffle, the count job and
+    // the sorted walk (the rank-table build started 49)
+    assert(jobs >= 1 && jobs <= 5, s"$jobs jobs")
+  }
+
+  test("column thresholds match a sorted-array oracle exactly (sizes, ties, constant, seams)") {
+    for (n <- Seq(10, 25, 600, 20000)) {
+      assertColumnExact(uniformRows(n, seed = n).map(_(0)), label = "plain")
+      assertColumnExact(uniformRows(n, seed = n + 1, round = true).map(_(0)), label = "rounded")
     }
-    val cachedBefore = sc.getPersistentRDDs.keySet
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "PopulationStats.thresholds")
-      try PopulationStats.thresholds(df).collect()
-      finally sc.clearJobGroup()
-      ListenerDrain(sc)
-    } finally sc.removeSparkListener(listener)
-    // a sampling job for the range bounds, the shuffle, the summary walk and
-    // the target lookup (the rank-table build started 49)
-    assert(jobs.get() >= 1 && jobs.get() <= 5, s"${jobs.get()} jobs")
-    assert(sc.getPersistentRDDs.keySet === cachedBefore)
+    // every rank target and the mean split land inside one run of ties
+    assertColumnExact(Seq.fill(600)(Some(0.07)), label = "constant")
+    withShufflePartitions(64) {
+      for (n <- Seq(10, 25, 600)) {
+        assertColumnExact(uniformRows(n, seed = 7 * n).map(_(0)), label = "seams")
+        assertColumnExact(uniformRows(n, seed = 7 * n + 1, round = true).map(_(0)),
+          label = "seams rounded")
+      }
+    }
+  }
+
+  test("column thresholds drop null values before the statistics") {
+    val xs = uniformRows(40, seed = 11).map(_(0)).zipWithIndex.map { case (x, i) =>
+      if (i % 5 == 0) None else x
+    }
+    assertColumnExact(xs)
+    withShufflePartitions(16)(assertColumnExact(xs))
+  }
+
+  test("column thresholds need at least 10 non-null values") {
+    val xs = uniformRows(12, seed = 3).map(_(0)).patch(0, Seq(None, None, None), 3)
+    val e = intercept[IllegalArgumentException] {
+      PopulationStats.columnThresholds(column(xs), col("v"))
+    }
+    assert(e.getMessage.contains("at least 10 non-null values per series"))
+    assert(e.getMessage.contains("got 9 for column v"))
+  }
+
+  test("column thresholds run a bounded number of jobs and leave nothing cached") {
+    val df = column(uniformRows(2000, seed = 5).map(_(0)))
+    val jobs = jobsOf(PopulationStats.columnThresholds(df, col("v")).collect())
+    assert(jobs >= 1 && jobs <= 5, s"$jobs jobs")
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.gen.PopulationStats
 import graft.measures.MeasuresRef
 
 class AlertPipelineSpec extends AnyFunSuite with SparkTestBase {
@@ -55,10 +56,12 @@ class AlertPipelineSpec extends AnyFunSuite with SparkTestBase {
   test("population thresholds on a known tiny column") {
     import spark.implicits._
     // v = 1..10: n=10, mean=5.5, median=5.5, q10=(n-1)*0.1 -> 1.9,
-    // tail = mean of 1 smallest = 1, sm1 = 5.5 - (2*(0.5+..+4.5)/10)/2 = 5.5-1.25
-    val df = (1 to 10).map(_.toDouble).toDF("v")
-    val thr = AlertPipeline.populationThresholds(df).collect()
+    // tail = mean of 1 smallest = 1, sm1 = 5.5 - (2*(0.5+..+4.5)/10)/2 = 5.5-1.25;
+    // the null value is dropped before counting
+    val df = ((1 to 10).map(v => Option(v.toDouble)) :+ None).toDF("v")
+    val thr = PopulationStats.columnThresholds(df, col("v")).collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(thr.size === 6)
     assert(thr("mean") === 5.5)
     assert(thr("median") === 5.5)
     assert(math.abs(thr("10th quantile") - 1.9) < 1e-12)

@@ -9,8 +9,8 @@ import graft.SparkTestBase
 import graft.measures.Measures
 import graft.pipeline.AlertPipeline
 
-/** An events-table row with a nullable value. */
-case class ParityEvent(user_id: Long, event_id: Long, value: Option[Double])
+/** An events-table row; every column is nullable. */
+case class ParityEvent(user_id: Option[Long], event_id: Option[Long], value: Option[Double])
 
 /** The differential contract between the two alert paths: the same events
   * and the same key-less threshold table give the same alerts from the
@@ -21,7 +21,9 @@ class BatchStreamParitySpec extends AnyFunSuite with SparkTestBase {
 
   /** Four users' series interleaved at random in event_id order: values on
     * a small grid (tied windows), one series of signed zeros, one NaN
-    * sample, one null value, and one series shorter than the window. */
+    * sample, one null value, and one series shorter than the window; plus
+    * a row with a null `user_id` and one with a null `event_id`, which
+    * both paths drop. */
   private val events: Seq[ParityEvent] = {
     val rnd = new scala.util.Random(17)
     val zeros = Seq(0.0, -0.0, 0.25, -0.0, 0.0, -0.5)
@@ -36,7 +38,12 @@ class BatchStreamParitySpec extends AnyFunSuite with SparkTestBase {
     // a random interleaving that keeps each series in order
     val order = rnd.shuffle(series.flatMap(s => Seq.fill(s.size)(s.head._1)))
     val next = scala.collection.mutable.Map(series.map(s => s.head._1 -> s.iterator): _*)
-    order.zipWithIndex.map { case (k, i) => ParityEvent(k, i + 1L, next(k).next()._2) }
+    val rows = order.zipWithIndex.map { case (k, i) =>
+      ParityEvent(Some(k), Some(i + 1L), next(k).next()._2)
+    }
+    // in the second and third micro-batches
+    rows.patch(100, Seq(ParityEvent(None, Some(1000L), Some(0.1))), 0)
+      .patch(160, Seq(ParityEvent(Some(1L), None, Some(-0.4))), 0)
   }
 
   /** Near the measures' range, so each stat alerts on some windows and not
@@ -51,7 +58,7 @@ class BatchStreamParitySpec extends AnyFunSuite with SparkTestBase {
   }.groupBy(identity).map { case (row, rs) => row -> rs.size }
 
   test("stream alerts = batch kernel alerts bit for bit across micro-batch " +
-      "seams, with a null, a NaN sample, signed zeros and a NaN threshold") {
+      "seams, with null values and keys, a NaN sample, signed zeros and a NaN threshold") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
@@ -76,7 +83,8 @@ class BatchStreamParitySpec extends AnyFunSuite with SparkTestBase {
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3), r.getDouble(4)))
 
     // the batch side exercises what the test is about
-    val windows = events.groupBy(_.user_id).values
+    val windows = events.filter(e => e.user_id.isDefined && e.event_id.isDefined)
+      .groupBy(_.user_id).values
       .map(s => math.max(0, s.count(_.value.isDefined) - 29)).sum
     assert(batch.count(_._3 == Measures.Mean) === windows - 30) // 30 windows hold the NaN
     assert(batch.map(_._3).toSet === Measures.names.toSet)
