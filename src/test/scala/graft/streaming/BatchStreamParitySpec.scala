@@ -57,8 +57,9 @@ class BatchStreamParitySpec extends AnyFunSuite with SparkTestBase {
       java.lang.Double.doubleToLongBits(m), java.lang.Double.doubleToLongBits(thr))
   }.groupBy(identity).map { case (row, rs) => row -> rs.size }
 
+  // the nulls are a null value, a null `user_id` and a null `event_id`
   test("stream alerts = batch kernel alerts bit for bit across micro-batch " +
-      "seams, with null values and keys, a NaN sample, signed zeros and a NaN threshold") {
+      "seams, with a null, a NaN sample, signed zeros and a NaN threshold") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
