@@ -85,9 +85,7 @@ object PopulationStats {
   private def gmd(s: Stats): Double = 2 * s.gsum / (s.n.toDouble * (s.n - 1).toDouble)
   private def meanLessGmd(s: Stats): Double = s.mean - s.gsum / (s.n.toDouble * s.n.toDouble)
 
-  private val StatNames = Seq(Measures.Mean, Measures.Median, Measures.Q10,
-    Measures.TailMean, Measures.Sm1, Measures.Sm2)
-
+  /** The six statistics in `Measures.names` order. */
   private def values(s: Stats, sm2: Stats => Double): Seq[Double] =
     Seq(s.mean, s.median, s.q10, s.tail, s.sm1, sm2(s))
 
@@ -96,7 +94,7 @@ object PopulationStats {
     val series = Sources.toSeries(samples.withColumn("seq", lit(0L)))
       .select(col("assetNo").as("series"), col("x").cast(DoubleType).as("x"))
     val stats = core(series, Series, a => s"assetNo $a")
-    val rows = StatNames.zipWithIndex.flatMap { case (stat, i) =>
+    val rows = Measures.names.zipWithIndex.flatMap { case (stat, i) =>
       stats.zipWithIndex.map { case (st, s) => Row(stat, s, values(st, gmd)(i)) }
     }
     table(samples, rows, "assetNo" -> IntegerType)
@@ -106,7 +104,7 @@ object PopulationStats {
   def columnThresholds(df: DataFrame, x: Column): DataFrame = {
     val stats = core(df.select(lit(0).as("series"), x.cast(DoubleType).as("x")), 1,
       _ => s"column $x").head
-    table(df, StatNames.zip(values(stats, meanLessGmd)).map { case (stat, v) => Row(stat, v) })
+    table(df, Measures.names.zip(values(stats, meanLessGmd)).map { case (stat, v) => Row(stat, v) })
   }
 
   /** A local (stat, [key,] thr) relation. */

@@ -1,12 +1,9 @@
 package graft.measures
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-
-/** The six window statistics of the reference engine, as pure Catalyst
-  * column expressions over a SORTED window array (`sort_array(collect_list)`)
-  * — no UDFs, fully codegen-friendly, shared byte-for-byte between the batch
-  * and the threshold paths.
+/** The six window statistics of the reference engine: their names, in the
+  * reference's fixed order. The engine computes them in one scalar fold
+  * over an ascending window, [[SortedWindow.measures]]; [[MeasuresRef]] is
+  * the plain-Scala oracle.
   *
   * Reference semantics (lapankrz/PSD-Project,
   * streamProcessing/psd/src/main/java/psd/StreamingJob.java):
@@ -19,14 +16,12 @@ import org.apache.spark.sql.functions._
   *  - sm1:      mean − Σ|mean − x| / (2n) — StreamingJob.java:212-221
   *  - sm2:      mean − ΣⱼΣₖ|xⱼ − xₖ| / (2n²) — StreamingJob.java:223-234
   *              (denominator 2n² including j=k zero terms, SURVEY §2.5 Q5),
-  *              computed here with the sorted-array identity
+  *              computed with the sorted-array identity
   *                ΣⱼΣₖ|xⱼ−xₖ| = 2·Σᵢ (2i − n − 1)·sᵢ   (i 1-based, s sorted)
-  *              at O(n) over the sorted array instead of O(n²).
+  *              at O(n) over the sorted window instead of O(n²).
   *
-  * All six derive from ONE sorted array per window, so a full 6-measure
-  * evaluation costs a single O(n log n) sort per window — this is what makes
-  * the plan scale: per-key windows shard by key, and each window's work is
-  * bounded by its frame, never by the table.
+  * All six derive from ONE ascending window, so a full evaluation costs
+  * one O(n) walk once the window is sorted.
   */
 object Measures {
   val Mean = "mean"
@@ -37,55 +32,4 @@ object Measures {
   val Sm2 = "security measure 2"
   /** Fixed measure order of the reference (psd.R:28-68 / stats.csv rows). */
   val names: Seq[String] = Seq(Mean, Median, Q10, TailMean, Sm1, Sm2)
-
-  /** Arithmetic mean, folded left-to-right over the sorted array (the DuckDB
-    * oracle folds the same order → matching sums to the ulp). */
-  def mean(xs: Column, n: Int): Column =
-    aggregate(xs, lit(0.0), (acc, x) => acc + x) / n
-
-  def median(xs: Column, n: Int): Column =
-    (element_at(xs, n / 2) + element_at(xs, n / 2 + 1)) / 2.0
-
-  def q10(xs: Column, n: Int): Column = element_at(xs, n / 10 + 1)
-
-  def tailMean(xs: Column, n: Int): Column = {
-    val k = n / 10
-    aggregate(slice(xs, 1, k), lit(0.0), (acc, x) => acc + x) / k
-  }
-
-  def sm1(xs: Column, n: Int): Column = sm1From(mean(xs, n), xs, n)
-
-  /** sm1 with the window mean supplied as a (pre-materialized) column —
-    * inlining `mean(xs)` into the per-element lambda would re-evaluate the
-    * whole fold for every element (O(n²) per window); callers that cache the
-    * mean alongside `xs` keep it O(n). */
-  def sm1From(m: Column, xs: Column, n: Int): Column =
-    m - aggregate(transform(xs, x => abs(m - x)), lit(0.0), (a, x) => a + x) /
-      (2.0 * n)
-
-  /** Gini-mean-difference risk measure; `gsum = Σᵢ(2i−n−1)sᵢ` equals half the
-    * full ordered-pair sum, so the reference's `pairSum/(2n²)` is `gsum/n²`. */
-  def sm2(xs: Column, n: Int): Column = sm2From(mean(xs, n), xs, n)
-
-  def sm2From(m: Column, xs: Column, n: Int): Column = {
-    val gsum = aggregate(
-      transform(xs, (x, i) => (lit(2) * (i + lit(1)) - lit(n + 1)).cast("double") * x),
-      lit(0.0), (a, x) => a + x)
-    m - gsum / (n.toDouble * n)
-  }
-
-  /** All six measures in reference order, for a sorted window array. */
-  def all(xs: Column, n: Int): Seq[(String, Column)] = Seq(
-    Mean -> mean(xs, n),
-    Median -> median(xs, n),
-    Q10 -> q10(xs, n),
-    TailMean -> tailMean(xs, n),
-    Sm1 -> sm1(xs, n),
-    Sm2 -> sm2(xs, n))
-
-  /** Reference alert predicate (StreamingJob.java:369-386): alert iff the
-    * window measure `m` falls below threshold `thr` by at least a 1% relative
-    * shortfall: `m < thr && (thr − m)/(1 + thr) ≥ shortfall`. */
-  def alertPredicate(m: Column, thr: Column, shortfall: Double = 0.01): Column =
-    m < thr && (thr - m) / (lit(1.0) + thr) >= shortfall
 }

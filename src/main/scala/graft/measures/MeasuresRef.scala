@@ -1,16 +1,24 @@
 package graft.measures
 
-/** Plain-Scala mirror of [[Measures]], transcribed directly from the
-  * reference formulas (StreamingJob.java:184-234). Oracle only: the tests
-  * and the benchmark's result checks recompute windows with it; no engine
-  * path calls it. The engine's one scalar measure fold and alert predicate
-  * are [[SortedWindow.measures]] and [[SortedWindow.alert]].
+/** The six [[Measures]] and the alert predicate in plain Scala,
+  * transcribed directly from the reference formulas
+  * (StreamingJob.java:184-234, 369-386). Oracle only: the tests and the
+  * benchmark's result checks recompute windows with it; no engine path
+  * calls it. The engine's one measure fold and alert predicate are
+  * [[SortedWindow.measures]] and [[SortedWindow.alert]].
   *
   * sm2 is kept deliberately O(n²) here — it is the literal reference formula
   * and serves as the oracle for the O(n) sorted-identity version.
   */
 object MeasuresRef {
-  def mean(xs: Array[Double]): Double = xs.sum / xs.length
+  /** Folded left to right from 0.0, as the engine's fold sums a window
+    * (so a window of −0.0s sums to 0.0). */
+  def mean(xs: Array[Double]): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < xs.length) { s += xs(i); i += 1 }
+    s / xs.length
+  }
 
   /** Expects `xs` ascending-sorted. */
   def median(sorted: Array[Double]): Double = {
@@ -52,10 +60,10 @@ object MeasuresRef {
   }
 
   /** O(n) sorted-identity sm2, for oracles that recompute many windows (the
-    * pairwise [[sm2]] is O(n²) per window). Mirrors the batch
-    * `Measures.sm2From` term order — `gsum = Σᵢ(2i−n−1)sᵢ` folded
-    * left-to-right over the sorted array, then `m − gsum/n²` — so it gives
-    * the engine's doubles, not merely ulp-close ones. Expects `xs`
+    * pairwise [[sm2]] is O(n²) per window). Mirrors the term order of the
+    * engine's fold, [[SortedWindow.measures]] — `gsum = Σᵢ(2i−n−1)sᵢ`
+    * folded left-to-right over the sorted array, then `m − gsum/n²` — so it
+    * gives the engine's doubles, not merely ulp-close ones. Expects `xs`
     * ascending-sorted. */
   def sm2Sorted(sorted: Array[Double]): Double = {
     val n = sorted.length
@@ -83,7 +91,9 @@ object MeasuresRef {
   }
 
   /** All six measures with the O(n) sorted-identity sm2 (every measure
-    * O(n) after the sort). */
+    * O(n) after the sort): bit for bit the engine's fold, signed zeros,
+    * NaN and ±Inf included. `sorted` orders as `java.lang.Double.compare`
+    * does: −0.0 before 0.0, NaN last. */
   def allFast(xs: Array[Double]): Seq[(String, Double)] = {
     val sorted = xs.sorted
     Seq(
@@ -95,9 +105,15 @@ object MeasuresRef {
       Measures.Sm2 -> sm2Sorted(sorted))
   }
 
-  /** The reference's shortfall predicate with Java's double comparisons:
-    * unlike [[SortedWindow.alert]] (Spark SQL's), a NaN threshold never
-    * alerts. Agrees with it on finite measures and thresholds other than −1. */
+  /** The reference's shortfall predicate, `m < thr && (thr − m)/(1 + thr)
+    * ≥ shortfall`, with Spark SQL's semantics, as the engine's
+    * [[SortedWindow.alert]] has them: NaN sorts above every number and
+    * equals itself (so a NaN threshold alerts on every non-NaN measure),
+    * and the division by zero of a threshold of exactly −1 is null, so no
+    * alert. */
   def alert(m: Double, thr: Double, shortfall: Double = 0.01): Boolean =
-    m < thr && (thr - m) / (1.0 + thr) >= shortfall
+    sqlLess(m, thr) && 1.0 + thr != 0.0 && !sqlLess((thr - m) / (1.0 + thr), shortfall)
+
+  private def sqlLess(a: Double, b: Double): Boolean =
+    if (a.isNaN) false else b.isNaN || a < b
 }

@@ -13,12 +13,12 @@ import scala.reflect.ClassTag
   * equal under that order are bit-identical, so which copy leaves, and
   * where among its equals a new value goes, does not matter.
   *
-  * [[measures]] folds the sorted window in the same order, with the same
-  * operations and constants, as the [[Measures]] column expressions over
-  * `sort_array(collect_list(x))`, so both paths give bit-identical doubles.
-  * [[alerts]] runs that fold and [[SortedWindow.alert]] for the batch alert
-  * kernel and the streaming count-window operator alike; the stream keeps
-  * only the arrival ring between micro-batches ([[load]], [[arrivals]]).
+  * [[SortedWindow.measures]] is the engine's one fold of the six measures
+  * over an ascending window. [[alerts]] runs it on the sorted copy, with
+  * [[SortedWindow.alert]], for the batch alert kernel and the streaming
+  * count-window operator alike; `AlertPipeline.withMeasures` runs it on
+  * each `sort_array(collect_list(x))` window. The stream keeps only the
+  * arrival ring between micro-batches ([[load]], [[arrivals]]).
   */
 final class SortedWindow(n: Int) {
   require(n >= 2, s"window size must be at least 2, got $n")
@@ -75,11 +75,36 @@ final class SortedWindow(n: Int) {
     lo
   }
 
-  /** Writes the six measures of a full window into `out` in [[Measures.names]]
-    * order. The tail mean of a window shorter than 10 is 0.0 / 0 = NaN
-    * (null in the column form with ANSI off), which no threshold makes
+  /** The alerts of the current window: nothing until it is full, then
+    * `alert(stat, m, thr)` for each `live` (stat index, thr) cell, in
+    * order, whose measure [[SortedWindow.alert]] holds for. The measures
+    * are evaluated only when some cell is live. */
+  def alerts[A: ClassTag](live: Array[(Int, Double)], shortfall: Double)(
+      alert: (String, Double, Double) => A): Array[A] =
+    if (!isFull || live.isEmpty) Array.empty[A]
+    else {
+      SortedWindow.measures(sorted, n, measured)
+      live.collect { case (s, t) if SortedWindow.alert(measured(s), t, shortfall) =>
+        alert(SortedWindow.names(s), measured(s), t)
+      }
+    }
+}
+
+object SortedWindow {
+  private val names = Measures.names.toArray
+
+  /** The live cells of a threshold lookup: (stat index, thr) for each
+    * statistic in [[Measures.names]] order that has a threshold. */
+  def cells(thr: String => Option[Double]): Array[(Int, Double)] =
+    names.indices.toArray.flatMap(s => thr(names(s)).map(s -> _))
+
+  /** Writes the six measures of the full window `sorted(0 until n)`,
+    * ascending in `java.lang.Double.compare` order, into `out` in
+    * [[Measures.names]] order. Every sum folds left to right from 0.0 over
+    * the ascending values, as `MeasuresRef.allFast` does. The tail mean of
+    * a window shorter than 10 is 0.0 / 0 = NaN, which no threshold makes
     * [[SortedWindow.alert]] true for. */
-  private def measures(out: Array[Double]): Unit = {
+  private[graft] def measures(sorted: Array[Double], n: Int, out: Array[Double]): Unit = {
     val k = n / 10
     var sum = 0.0
     var tail = 0.0
@@ -104,32 +129,11 @@ final class SortedWindow(n: Int) {
     out(5) = mean - gsum / (n.toDouble * n)
   }
 
-  /** The alerts of the current window: nothing until it is full, then
-    * `alert(stat, m, thr)` for each `live` (stat index, thr) cell, in
-    * order, whose measure [[SortedWindow.alert]] holds for. The measures
-    * are evaluated only when some cell is live. */
-  def alerts[A: ClassTag](live: Array[(Int, Double)], shortfall: Double)(
-      alert: (String, Double, Double) => A): Array[A] =
-    if (!isFull || live.isEmpty) Array.empty[A]
-    else {
-      measures(measured)
-      live.collect { case (s, t) if SortedWindow.alert(measured(s), t, shortfall) =>
-        alert(SortedWindow.names(s), measured(s), t)
-      }
-    }
-}
-
-object SortedWindow {
-  private val names = Measures.names.toArray
-
-  /** The live cells of a threshold lookup: (stat index, thr) for each
-    * statistic in [[Measures.names]] order that has a threshold. */
-  def cells(thr: String => Option[Double]): Array[(Int, Double)] =
-    names.indices.toArray.flatMap(s => thr(names(s)).map(s -> _))
-
-  /** `Measures.alertPredicate` on doubles, with Spark SQL's comparison
-    * semantics: NaN sorts above every number and equals itself, and a
-    * division by zero (a threshold of exactly −1) is null, so no alert. */
+  /** The reference's shortfall predicate (StreamingJob.java:369-386): alert
+    * iff `m < thr && (thr − m)/(1 + thr) ≥ shortfall`, with Spark SQL's
+    * comparison semantics: NaN sorts above every number and equals itself,
+    * and a division by zero (a threshold of exactly −1) is null, so no
+    * alert. */
   def alert(m: Double, thr: Double, shortfall: Double): Boolean = {
     val d = 1.0 + thr
     sqlCompare(m, thr) < 0 && d != 0.0 && sqlCompare((thr - m) / d, shortfall) >= 0

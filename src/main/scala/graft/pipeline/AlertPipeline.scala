@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType, StructField, StructType}
 
 import graft.gen.PopulationStats
-import graft.measures.{Measures, SortedWindow}
+import graft.measures.SortedWindow
 
 /** The reference's core dataflow (SURVEY §3.1), generalized Spark-first:
   * sliding count-window (size n, slide 1) per key over an ordered numeric
@@ -17,17 +17,17 @@ import graft.measures.{Measures, SortedWindow}
   * million independent portfolios scale across executors; the reference
   * workload is the single-key special case (SURVEY §2.5 Q8).
   *
-  * Two shapes of the same dataflow live here:
+  * Two shapes of the same dataflow live here, and both run the one
+  * measure fold, `SortedWindow.measures`:
   *  - [[windowAlerts]], the alert kernel both batch entry points run
   *    (`ReferencePipeline.alerts`, [[eventAlerts]]): one hash shuffle by
   *    key, one sort by (key, ord), then one walk per partition that slides
   *    a [[graft.measures.SortedWindow]] row by row, evaluates the six
   *    measures and the threshold predicate in the same loop and emits only
   *    alert rows;
-  *  - [[windowed]] + [[withMeasures]], the declarative column form
-  *    (`collect_list` frame → `sort_array` → [[Measures]] array folds).
-  *    The window queries q04–q09 use it, and it is the test oracle of the
-  *    kernel: both compute bit-identical measures.
+  *  - [[windowed]] + [[withMeasures]]: a `collect_list` frame sorted by
+  *    `sort_array`, then the fold over each window's array. The window
+  *    queries q05–q09 and q33 use it.
   *
   * The thresholds come from `graft.gen.PopulationStats`, one job for the
   * samples' 7 series and for the events' one value column.
@@ -40,48 +40,61 @@ object AlertPipeline {
     * of the trailing ≤n values), keeping only full windows (rn ≥ n).
     * One sort per window; all six measures derive from `xs`.
     *
-    * Null samples are dropped BEFORE numbering (the reference's
-    * drop-malformed-at-parse contract): row_number counts every row but
-    * collect_list silently skips nulls, so an unguarded null would leave
-    * 29 values in a "30-row" window and corrupt all n windows covering it
-    * (divides by n, shifted order statistics, misaligned rank weights). */
+    * A row whose `key`, `ord` or `x` is null is dropped BEFORE numbering,
+    * as [[windowAlerts]] drops it (the reference's drop-malformed-at-parse
+    * contract): row_number counts every row but collect_list silently
+    * skips nulls, so an unguarded null `x` would leave 29 values in a
+    * "30-row" window and corrupt all n windows covering it (divides by n,
+    * shifted order statistics, misaligned rank weights). */
   def windowed(df: DataFrame, key: Column, ord: Column, x: Column,
       n: Int = WindowSize): DataFrame = {
     val wOrd = Window.partitionBy(key).orderBy(ord)
     val wFrame = wOrd.rowsBetween(-(n - 1), 0)
-    df.where(x.isNotNull)
+    df.where(key.isNotNull && ord.isNotNull && x.isNotNull)
       .withColumn("rn", row_number().over(wOrd))
       .withColumn("xs", sort_array(collect_list(x).over(wFrame)))
       .where(col("rn") >= n)
   }
 
-  /** Wide per-window measure table from a [[windowed]] result: key cols +
-    * one column per measure. The window mean is aliased in its own
-    * projection before sm1/sm2 consume it — inlined into their
-    * per-element lambdas it would be re-folded per element, turning O(n)
-    * windows into O(n²). No cache is needed for that: CollapseProject
-    * refuses to inline a non-cheap alias referenced more than once, so
-    * the mean stays a materialized column (plan-audited); a cache here
-    * would pin the full window table in executor storage for the session
-    * lifetime, unreachable by Caches.evict. */
+  /** Wide per-window measure table from a [[windowed]] result: the `keys`
+    * columns, then `m_mean, m_median, m_q10, m_tail, m_sm1, m_sm2` (DOUBLE,
+    * `Measures.names` order). One `mapPartitions` over the
+    * `(keys…, xs)` projection runs `SortedWindow.measures` on each
+    * window's already-sorted `xs`, so the measures are bit for bit those
+    * of [[windowAlerts]]. Each `xs` must hold exactly `n` non-null values,
+    * as [[windowed]] emits them.
+    *
+    * The tail mean of a window shorter than 10 is NaN (0.0 / 0), as in
+    * the kernel; the Catalyst column form this replaced gave null there
+    * with `spark.sql.ansi.enabled=false` and raised DIVIDE_BY_ZERO with it
+    * on. */
   def withMeasures(windowedDf: DataFrame, keys: Seq[Column],
       n: Int = WindowSize): DataFrame = {
-    val base = windowedDf
-      .select(keys :+ col("xs"): _*)
-      .withColumn("m_mean", Measures.mean(col("xs"), n))
-    base.select(keys ++ Seq(
-      col("m_mean"),
-      Measures.median(col("xs"), n).as("m_median"),
-      Measures.q10(col("xs"), n).as("m_q10"),
-      Measures.tailMean(col("xs"), n).as("m_tail"),
-      Measures.sm1From(col("m_mean"), col("xs"), n).as("m_sm1"),
-      Measures.sm2From(col("m_mean"), col("xs"), n).as("m_sm2")): _*)
+    require(n >= 2, s"window size must be at least 2, got $n")
+    val input = windowedDf.select(keys :+ col("xs"): _*)
+    val k = keys.length
+    val schema = StructType(input.schema.take(k) ++ MeasureColumns.map(
+      StructField(_, DoubleType, nullable = false)))
+    input.mapPartitions { rows =>
+      val xs = new Array[Double](n)
+      val out = new Array[Double](MeasureColumns.length)
+      rows.map { r =>
+        val window = r.getSeq[Double](k)
+        require(window.length == n, s"a window of ${window.length} values, not $n")
+        window.copyToArray(xs)
+        SortedWindow.measures(xs, n, out)
+        Row.fromSeq((0 until k).map(r.get) ++ out)
+      }
+    }(Encoders.row(schema))
   }
 
+  private val MeasureColumns =
+    Seq("m_mean", "m_median", "m_q10", "m_tail", "m_sm1", "m_sm2")
+
   /** Threshold-shortfall alerts over the sliding count windows (size `n`,
-    * slide 1) of each `key`'s series in `ord` order: the fused form of
-    * `withMeasures(windowed(…))` → `stack` unpivot → threshold join →
-    * `Measures.alertPredicate`, with the same rows and bit-identical `m`.
+    * slide 1) of each `key`'s series in `ord` order: each window's six
+    * measures against their thresholds, under the reference's shortfall
+    * predicate (`SortedWindow.alert`).
     *
     * Output: (key, ord, stat, m, thr), one row per alerting (window, stat);
     * `key` and `ord` keep their input types, `m` and `thr` are doubles.
@@ -105,9 +118,7 @@ object AlertPipeline {
     * as for [[windowed]].
     *
     * Divisions by zero (the tail mean of a window shorter than 10; a
-    * threshold of exactly −1) give no alert, as the column form does with
-    * `spark.sql.ansi.enabled=false`; with ANSI on, the column form raises
-    * DIVIDE_BY_ZERO instead. */
+    * threshold of exactly −1) give no alert. */
   def windowAlerts(df: DataFrame, key: String, ord: String, x: String,
       thresholds: DataFrame, n: Int = WindowSize,
       shortfall: Double = Shortfall): DataFrame = {

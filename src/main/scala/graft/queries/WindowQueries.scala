@@ -17,45 +17,46 @@ import graft.pipeline.AlertPipeline
 object WindowQueries {
   private val N = AlertPipeline.WindowSize
 
-  /** Shared DuckDB CTE: per-user row number + sorted trailing-30 list. */
+  /** Shared DuckDB CTE: per-user row number + sorted trailing-30 list,
+    * over the rows `AlertPipeline.windowed` keeps (DuckDB's `list()` keeps
+    * a NULL and `row_number` counts it). */
   private val winCte: String =
     s"""WITH win AS (
        |  SELECT user_id, event_id,
        |    row_number() OVER ww AS rn,
        |    list_sort(list(value) OVER wf) AS xs
        |  FROM events
+       |  WHERE user_id IS NOT NULL AND event_id IS NOT NULL AND value IS NOT NULL
        |  WINDOW ww AS (PARTITION BY user_id ORDER BY event_id),
        |         wf AS (PARTITION BY user_id ORDER BY event_id
        |                ROWS BETWEEN ${N - 1} PRECEDING AND CURRENT ROW)
        |)""".stripMargin
 
-  /** Shared windowed base (user_id, event_id, rn, xs) — one shuffle + one
-    * per-window sort feeds all five array-measure queries (same
-    * materialize-once pattern as the shingle and alert caches, registered
-    * under the Caches lifecycle so evict(session) releases it like every
-    * other shared frame). */
+  /** Shared measure table (user_id, event_id, m_mean … m_sm2):
+    * `AlertPipeline.withMeasures` over the windowed events, one shuffle,
+    * one sort per window and one fold per window for q05–q09 and q33
+    * (same materialize-once pattern as the shingle and alert caches,
+    * registered under the Caches lifecycle so evict(session) releases it
+    * like every other shared frame). */
   private def windowedBase(s: org.apache.spark.sql.SparkSession, dir: String) =
     Caches.frame(s, dir, "windowed") {
       val ev = Tables(s, dir, "events")
         .select(col("user_id"), col("event_id"), col("value").cast("double").as("v"))
-      // m_mean materialized with xs: sm1/sm2 take the mean as a column so
-      // it is never re-folded inside their per-element lambdas
-      AlertPipeline.windowed(ev, col("user_id"), col("event_id"), col("v"), N)
-        .select(col("user_id"), col("event_id"), col("xs"),
-          graft.measures.Measures.mean(col("xs"), N).as("m_mean"))
+      AlertPipeline.withMeasures(
+        AlertPipeline.windowed(ev, col("user_id"), col("event_id"), col("v"), N),
+        Seq(col("user_id"), col("event_id")), N)
     }
 
-  private def winQ(name: String, sparkCol: org.apache.spark.sql.Column,
+  /** One measure column of the shared table, renamed to `alias`. */
+  private def winQ(name: String, measure: String, alias: String,
       duckExpr: String): Q =
     Q(name,
       (s, dir) => windowedBase(s, dir)
-        .select(col("user_id"), col("event_id"), sparkCol),
+        .select(col("user_id"), col("event_id"), col(measure).as(alias)),
       Some(
         s"""$winCte
            |SELECT user_id, event_id, $duckExpr
            |FROM win WHERE rn >= $N""".stripMargin))
-
-  import graft.measures.Measures._
 
   val all: Seq[Q] = Seq(
     // O6: windowed mean (plain built-in window aggregate — no array needed).
@@ -79,31 +80,26 @@ object WindowQueries {
            |) t WHERE rn >= $N""".stripMargin)),
 
     // O7: median = (15th + 16th smallest)/2 (StreamingJob.java:189).
-    winQ("q05_window_median",
-      median(col("xs"), N).as("wmedian"),
+    winQ("q05_window_median", "m_median", "wmedian",
       s"(xs[${N / 2}] + xs[${N / 2 + 1}]) / 2.0 AS wmedian"),
 
     // O8: 10th percentile = 4th smallest of 30 (SURVEY §2.5 Q3).
-    winQ("q06_window_q10",
-      q10(col("xs"), N).as("wq10"),
+    winQ("q06_window_q10", "m_q10", "wq10",
       s"xs[${N / 10 + 1}] AS wq10"),
 
     // O9: mean of the 3 smallest (StreamingJob.java:191-196).
-    winQ("q07_window_tailmean",
-      tailMean(col("xs"), N).as("wtail"),
+    winQ("q07_window_tailmean", "m_tail", "wtail",
       s"(xs[1] + xs[2] + xs[3]) / ${N / 10}.0 AS wtail"),
 
-    // O10: mean-absolute-deviation risk measure (mean from the cached base).
-    winQ("q08_window_sm1",
-      sm1From(col("m_mean"), col("xs"), N).as("wsm1"),
+    // O10: mean-absolute-deviation risk measure.
+    winQ("q08_window_sm1", "m_sm1", "wsm1",
       s"""list_avg(xs) -
          |    list_aggregate(list_transform(xs, x -> abs(list_avg(xs) - x)), 'sum')
          |      / ${2 * N}.0 AS wsm1""".stripMargin),
 
     // O11: Gini-mean-difference risk measure via the sorted identity
     // (DuckDB lambda index i is 1-based; Σᵢ(2i−n−1)sᵢ = half the pair sum).
-    winQ("q09_window_sm2",
-      sm2From(col("m_mean"), col("xs"), N).as("wsm2"),
+    winQ("q09_window_sm2", "m_sm2", "wsm2",
       s"""list_avg(xs) -
          |    list_aggregate(list_transform(xs, (x,i) -> (2*i - ${N + 1}) * x), 'sum')
          |      / ${N * N}.0 AS wsm2""".stripMargin),
@@ -116,16 +112,11 @@ object WindowQueries {
            |SELECT user_id, event_id, stat, m, thr FROM alerts""".stripMargin)),
 
     // O5: the six window measures of every full window as one row — the
-    // reference's AggregateFunction output (StreamingJob.java:393-417) in
-    // the column form. Excluded from bench: it is q05–q09 in one table.
+    // reference's AggregateFunction output (StreamingJob.java:393-417),
+    // which is the shared measure table itself. Excluded from bench: it is
+    // q05–q09 in one table.
     Q("q33_window_onepass_udaf",
-      (s, dir) => {
-        val ev = Tables(s, dir, "events")
-          .select(col("user_id"), col("event_id"), col("value").cast("double").as("v"))
-        AlertPipeline.withMeasures(
-          AlertPipeline.windowed(ev, col("user_id"), col("event_id"), col("v"), N),
-          Seq(col("user_id"), col("event_id")), N)
-      },
+      (s, dir) => windowedBase(s, dir),
       Some(
         s"""$winCte
            |SELECT user_id, event_id,
@@ -141,9 +132,13 @@ object WindowQueries {
 
   /** The alert pipeline as a reusable DuckDB WITH-block ending in an
     * `alerts(user_id, event_id, stat, m, thr)` CTE — analytics oracles
-    * (AnalyticsQueries) build on it. */
+    * (AnalyticsQueries) build on it. It keeps the engine's null contract:
+    * a null `value` counts toward no threshold and fills no window, and a
+    * row with a null `user_id` or `event_id` starts no series (DuckDB's
+    * `list()` keeps NULLs and `count(*)` counts them). */
   lazy val alertsWith: String =
-    s"""WITH ev AS (SELECT user_id, event_id, CAST(value AS DOUBLE) AS v FROM events),
+    s"""WITH ev AS (SELECT user_id, event_id, CAST(value AS DOUBLE) AS v FROM events
+           |  WHERE value IS NOT NULL),
            |pop AS (
            |  SELECT count(*) AS n, avg(v) AS mean,
            |         quantile_cont(v, 0.5) AS median, quantile_cont(v, 0.1) AS q10
@@ -162,7 +157,7 @@ object WindowQueries {
            |win AS (
            |  SELECT user_id, event_id, row_number() OVER ww AS rn,
            |         list_sort(list(v) OVER wf) AS xs
-           |  FROM ev
+           |  FROM ev WHERE user_id IS NOT NULL AND event_id IS NOT NULL
            |  WINDOW ww AS (PARTITION BY user_id ORDER BY event_id),
            |         wf AS (PARTITION BY user_id ORDER BY event_id
            |                ROWS BETWEEN ${N - 1} PRECEDING AND CURRENT ROW)),

@@ -190,33 +190,33 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase
         s"${df.queryExecution.executedPlan}")
   }
 
-  test("q04: the window mean is folded once per row, not inlined into " +
-      "the sm1/sm2 lambdas") {
-    // withMeasures relies on CollapseProject's refusal to duplicate a
-    // non-cheap multi-referenced alias (the old .cache() barrier pinned
-    // the full window table in storage for the same guarantee). If a
-    // future optimizer change starts inlining, each measure's per-element
-    // lambda re-folds the mean — O(n²) per window — and this fails.
-    import org.apache.spark.sql.functions.col
-    val ev = graft.queries.Tables(spark, dir, "events")
-      .select(col("user_id"), col("event_id"),
-        col("value").cast("double").as("v"))
-    val m = graft.pipeline.AlertPipeline.withMeasures(
-      graft.pipeline.AlertPipeline.windowed(
-        ev, col("user_id"), col("event_id"), col("v")),
-      Seq(col("user_id"), col("event_id")))
-    val plan = m.queryExecution.optimizedPlan.toString
-    // the mean alias must survive as its own projection column
-    assert(plan.contains("m_mean"),
-      s"window mean was inlined into the measure lambdas:\n$plan")
+  /** The array-lambda folds (`aggregate`, `transform`) in a plan's
+    * expressions, cached plans included. */
+  private def arrayFolds(p: SparkPlan) = {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ArrayTransform}
+    collectThroughCaches(p) { case node => node }
+      .flatMap(_.expressions.flatMap(_.collect {
+        case a: ArrayAggregate => a
+        case t: ArrayTransform => t
+      }))
+  }
+
+  test("q05–q09, q33: the window measures run the engine's fold, not " +
+      "array-lambda folds") {
+    // the measure table under these queries is AlertPipeline.withMeasures,
+    // which runs SortedWindow's fold over each sorted window
+    for (name <- Seq("q05_window_median", "q06_window_q10", "q07_window_tailmean",
+        "q08_window_sm1", "q09_window_sm2", "q33_window_onepass_udaf")) {
+      val p = plan(name)
+      assert(arrayFolds(p).isEmpty, s"$name plans array folds:\n$p")
+    }
   }
 
   test("batch alerts run the sliding-window kernel: no window operator, " +
       "array fold or join in ReferencePipeline.alerts or eventAlerts") {
     // the column form (collect_list frame → sort_array → array-lambda
     // folds → stack → broadcast threshold join) rebuilt and re-sorted
-    // every window; it stays for q04–q09 and as the kernel's test oracle
-    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ArrayTransform}
+    // every window; its collect_list frame stays under q05–q09 and q33
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.functions.col
@@ -237,12 +237,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase
         s"$name plans a window operator:\n$p")
       assert(collectWithSubqueries(p) { case j: BaseJoinExec => j }.isEmpty,
         s"$name plans a join:\n$p")
-      val folds = collectWithSubqueries(p) { case node => node }
-        .flatMap(_.expressions.flatMap(_.collect {
-          case a: ArrayAggregate => a
-          case t: ArrayTransform => t
-        }))
-      assert(folds.isEmpty, s"$name plans array folds:\n$p")
+      assert(arrayFolds(p).isEmpty, s"$name plans array folds:\n$p")
     }
   }
 

@@ -15,8 +15,7 @@ import graft.sources.Sources
 
 class GeneratorSpec extends AnyFunSuite with SparkTestBase {
 
-  private val Stats = Seq(Measures.Mean, Measures.Median, Measures.Q10,
-    Measures.TailMean, Measures.Sm1, Measures.Sm2)
+  private val Stats = Measures.names
 
   /** Sample rows a0..a5 (None = null) as a DataFrame. */
   private def frame(rows: Seq[Array[Option[Double]]]): DataFrame =

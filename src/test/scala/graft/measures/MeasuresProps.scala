@@ -12,7 +12,7 @@ object MeasuresProps extends Properties("Measures") {
   private val window: Gen[Array[Double]] =
     Gen.containerOfN[Array, Double](30, Gen.choose(-0.1, 0.1))
 
-  /** The sorted identity used by Measures.sm2 / PopulationStats, in plain
+  /** The sorted identity used by SortedWindow.measures / PopulationStats, in plain
     * Scala: Σⱼₖ|xⱼ−xₖ| = 2·Σᵢ(2i−n−1)sᵢ (i 1-based, s ascending). */
   private def sm2SortedIdentity(xs: Array[Double]): Double = {
     val n = xs.length

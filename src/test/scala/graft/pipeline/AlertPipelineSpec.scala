@@ -32,7 +32,11 @@ class AlertPipelineSpec extends AnyFunSuite with SparkTestBase {
 
   test("window measures match brute-force sliding slices, multiple keys") {
     val n = 40
-    val df = sampleDf(n, keys = 3)
+    // key 1 holds a +Inf and a −Inf sample: windows with both have a NaN mean
+    val df = sampleDf(n, keys = 3).withColumn("v",
+      when(col("key") === 1 && col("seq") === 31, Double.PositiveInfinity)
+        .when(col("key") === 1 && col("seq") === 34, Double.NegativeInfinity)
+        .otherwise(col("v")))
     val rows = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val byKey = rows.groupBy(_._1).map { case (k, rs) =>
       k -> rs.sortBy(_._2).map(_._3)
@@ -47,10 +51,18 @@ class AlertPipelineSpec extends AnyFunSuite with SparkTestBase {
       val window = byKey(k).slice(s - 29, s + 1)
       val exp = MeasuresRef.all(window).toMap
       graft.measures.Measures.names.zipWithIndex.foreach { case (name, i) =>
-        assert(math.abs(r.getDouble(2 + i) - exp(name)) < 1e-9,
-          s"key $k seq $s measure $name")
+        val got = r.getDouble(2 + i)
+        // a non-finite measure (NaN, ±Inf) is compared bit for bit
+        if (exp(name).isNaN || exp(name).isInfinite)
+          assert(java.lang.Double.doubleToLongBits(got) ===
+            java.lang.Double.doubleToLongBits(exp(name)), s"key $k seq $s measure $name")
+        else assert(math.abs(got - exp(name)) < 1e-9, s"key $k seq $s measure $name")
       }
     }
+    // the NaN mean, an infinite tail mean and an infinite mean all occur
+    val means = meas.map(_.getDouble(2))
+    assert(means.count(_.isNaN) === 6 && means.count(_.isInfinite) === 3)
+    assert(meas.exists(_.getDouble(5).isInfinite))
   }
 
   test("population thresholds on a known tiny column") {

@@ -6,12 +6,14 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
-import graft.measures.Measures
+import graft.measures.{Measures, MeasuresRef, MeasuresSpec}
 
 /** `AlertPipeline.windowAlerts` (the fused sliding-window kernel) against
-  * its column-form oracle: `withMeasures(windowed)` → `stack` → threshold
-  * join → `Measures.alertPredicate`. Rows must match as a multiset and
-  * every `m`/`thr` bit for bit. */
+  * a plain-Scala oracle: each key's windows rebuilt from the collected
+  * rows, `MeasuresRef.allFast`, the threshold cells and
+  * `MeasuresRef.alert`. Rows must match as a multiset and every `m`/`thr`
+  * bit for bit. (The case titles still say "column form", the oracle the
+  * kernel was first checked against.) */
 class WindowAlertsSpec extends AnyFunSuite with SparkTestBase {
 
   private val schema = StructType(Seq(
@@ -20,9 +22,10 @@ class WindowAlertsSpec extends AnyFunSuite with SparkTestBase {
 
   /** Series of several lengths (some shorter than any tested n), values
     * drawn from a small grid so windows hold tied and repeated values,
-    * one NaN sample, null samples, a null key, and a series of signed
-    * zeros whose order statistics tell −0.0 from 0.0; the rows reach the
-    * kernel shuffled across 3 input partitions. */
+    * one NaN sample, a +Inf and a −Inf sample two rows apart (the windows
+    * holding both have a NaN mean), null samples, a null key, and a series
+    * of signed zeros whose order statistics tell −0.0 from 0.0; the rows
+    * reach the kernel shuffled across 3 input partitions. */
   private lazy val events: DataFrame = {
     val rnd = new scala.util.Random(42)
     val lengths = Seq(0L -> 90, 1L -> 75, 2L -> 60, 3L -> 8, 4L -> 29, 5L -> 40)
@@ -34,7 +37,11 @@ class WindowAlertsSpec extends AnyFunSuite with SparkTestBase {
           else if (k == 5) zeros(i % zeros.length)
           else if (rnd.nextInt(12) == 0) null
           else (rnd.nextInt(21) - 10) / 20.0
-        Row(k, i.toLong, v)
+        val x: java.lang.Double =
+          if (k == 1 && i == 20) Double.PositiveInfinity
+          else if (k == 1 && i == 22) Double.NegativeInfinity
+          else v
+        Row(k, i.toLong, x)
       }
     } ++ (1 to 45).map(i => Row(null, i.toLong, (rnd.nextInt(9) - 4) / 8.0))
     spark.createDataFrame(
@@ -69,30 +76,35 @@ class WindowAlertsSpec extends AnyFunSuite with SparkTestBase {
       .toDF("stat", "thr")
   }
 
-  private val unpivotMeasures = Measures.names
-    .zip(Seq("m_mean", "m_median", "m_q10", "m_tail", "m_sm1", "m_sm2"))
-    .map { case (st, c) => s"'$st', $c" }
-    .mkString("stack(6, ", ", ", ") AS (stat, m)")
-
-  /** The column form over the rows the kernel keeps: it drops a null key
-    * (or `seq`) row, which `windowed` would number as one more series. */
-  private def oracle(thr: DataFrame, n: Int): DataFrame = {
-    val kept = events.where(col("key").isNotNull && col("seq").isNotNull)
-    val meas = AlertPipeline.withMeasures(
-      AlertPipeline.windowed(kept, col("key"), col("seq"), col("v"), n),
-      Seq(col("key"), col("seq")), n)
-    val on = if (thr.columns.contains("key")) Seq("stat", "key") else Seq("stat")
-    meas.select(col("key"), col("seq"), expr(unpivotMeasures))
-      .join(broadcast(thr), on)
-      .where(Measures.alertPredicate(col("m"), col("thr"), AlertPipeline.Shortfall))
-      .select(col("key"), col("seq"), col("stat"), col("m"), col("thr"))
-  }
-
-  private def bits(df: DataFrame) = df.collect().toSeq.map { r =>
-    (Option(r.get(0)), r.getLong(1), r.getString(2),
-      java.lang.Double.doubleToLongBits(r.getDouble(3)),
-      java.lang.Double.doubleToLongBits(r.getDouble(4)))
+  private def bits(rows: Seq[(Any, Long, String, Double, Double)]) = rows.map {
+    case (k, s, stat, m, thr) => (Option(k), s, stat,
+      java.lang.Double.doubleToLongBits(m), java.lang.Double.doubleToLongBits(thr))
   }.groupBy(identity).map { case (row, rs) => row -> rs.size }
+
+  /** The kernel's alerts recomputed from the collected rows: a row with a
+    * null key, `seq` or `v` is dropped; each key's full windows in `seq`
+    * order get `MeasuresRef.allFast` and `MeasuresRef.alert` against their
+    * threshold cell. A missing cell, a null `thr` or a null-key threshold
+    * row never alerts. */
+  private def oracle(thr: DataFrame, n: Int) = {
+    val keyed = thr.columns.contains("key")
+    val cells = thr.collect().toSeq
+      .filter(r => !r.isNullAt(r.fieldIndex("thr")) && !(keyed && r.isNullAt(r.fieldIndex("key"))))
+      .map(r => (r.getAs[String]("stat"), if (keyed) Some(r.getAs[Long]("key")) else None) ->
+        r.getAs[Double]("thr"))
+      .toMap
+    val series = events.collect().toSeq
+      .filter(r => !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2))
+      .groupBy(_.getLong(0))
+    bits(for {
+      (k, rows) <- series.toSeq
+      vs = rows.sortBy(_.getLong(1))
+      end <- n - 1 until vs.size
+      (stat, m) <- MeasuresSpec.reference(vs.slice(end + 1 - n, end + 1).map(_.getDouble(2)).toArray)
+      t <- cells.get((stat, if (keyed) Some(k) else None))
+      if MeasuresRef.alert(m, t, AlertPipeline.Shortfall)
+    } yield (k, vs(end).getLong(1), stat, m, t))
+  }
 
   private def withConf[A](kv: (String, String)*)(body: => A): A = {
     val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
@@ -110,18 +122,14 @@ class WindowAlertsSpec extends AnyFunSuite with SparkTestBase {
     keyed <- Seq(true, false)
   } test(s"n=$n, $parts shuffle partitions, " +
       s"${if (keyed) "keyed" else "key-less"} thresholds: kernel = column form") {
-    // below n = 10 the column form's tail mean divides by zero: null with
-    // ANSI off (the kernel's contract), DIVIDE_BY_ZERO with it on
-    val conf = Seq("spark.sql.shuffle.partitions" -> parts.toString) ++
-      (if (n < 10) Seq("spark.sql.ansi.enabled" -> "false") else Nil)
-    withConf(conf: _*) {
+    withConf("spark.sql.shuffle.partitions" -> parts.toString) {
       val thr = if (keyed) keyedThresholds else globalThresholds
       val got = AlertPipeline.windowAlerts(events, "key", "seq", "v", thr, n)
-      val want = oracle(thr, n)
-      assert(got.schema.map(f => f.name -> f.dataType) ===
-        want.schema.map(f => f.name -> f.dataType))
-      val g = bits(got)
-      val w = bits(want)
+      assert(got.schema.map(f => f.name -> f.dataType) === Seq("key" -> LongType,
+        "seq" -> LongType, "stat" -> StringType, "m" -> DoubleType, "thr" -> DoubleType))
+      val g = bits(got.collect().toSeq.map(r =>
+        (r.get(0), r.getLong(1), r.getString(2), r.getDouble(3), r.getDouble(4))))
+      val w = oracle(thr, n)
       assert(w.nonEmpty)
       assert(g === w, s"kernel-only ${(g.keySet -- w.keySet).take(5)}, " +
         s"oracle-only ${(w.keySet -- g.keySet).take(5)}")

@@ -21,18 +21,23 @@ class BatchStreamParitySpec extends AnyFunSuite with SparkTestBase {
 
   /** Four users' series interleaved at random in event_id order: values on
     * a small grid (tied windows), one series of signed zeros, one NaN
-    * sample, one null value, and one series shorter than the window; plus
-    * a row with a null `user_id` and one with a null `event_id`, which
-    * both paths drop. */
+    * sample, a +Inf and a −Inf sample four rows apart (the windows holding
+    * both have a NaN mean), one null value, and one series shorter than
+    * the window; plus a row with a null `user_id` and one with a null
+    * `event_id`, which both paths drop. */
   private val events: Seq[ParityEvent] = {
     val rnd = new scala.util.Random(17)
     val zeros = Seq(0.0, -0.0, 0.25, -0.0, 0.0, -0.5)
     val series = Seq(1L -> 80, 2L -> 65, 3L -> 50, 4L -> 20).map { case (k, len) =>
       (1 to len).map { i =>
-        if (k == 1 && i == 40) Some(Double.NaN)
-        else if (k == 2 && i == 33) None
-        else if (k == 3) Some(zeros(i % zeros.length))
-        else Some((rnd.nextInt(21) - 10) / 20.0)
+        val v =
+          if (k == 1 && i == 40) Some(Double.NaN)
+          else if (k == 2 && i == 33) None
+          else if (k == 3) Some(zeros(i % zeros.length))
+          else Some((rnd.nextInt(21) - 10) / 20.0)
+        if (k == 2 && i == 36) Some(Double.PositiveInfinity)
+        else if (k == 2 && i == 40) Some(Double.NegativeInfinity)
+        else v
       }.map(k -> _)
     }
     // a random interleaving that keeps each series in order
@@ -87,7 +92,8 @@ class BatchStreamParitySpec extends AnyFunSuite with SparkTestBase {
     val windows = events.filter(e => e.user_id.isDefined && e.event_id.isDefined)
       .groupBy(_.user_id).values
       .map(s => math.max(0, s.count(_.value.isDefined) - 29)).sum
-    assert(batch.count(_._3 == Measures.Mean) === windows - 30) // 30 windows hold the NaN
+    // 30 windows hold the NaN sample and 26 both infinities
+    assert(batch.count(_._3 == Measures.Mean) === windows - 30 - 26)
     assert(batch.map(_._3).toSet === Measures.names.toSet)
     assert(batch.size < windows * Measures.names.size)
     assert(!batch.exists(_._1 == 4L))

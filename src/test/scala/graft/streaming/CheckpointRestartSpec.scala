@@ -3,7 +3,7 @@ package graft.streaming
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
-import graft.streaming.CountSlidingWindowSpec.{EveryMeasure, columnForm, measureBits}
+import graft.streaming.CountSlidingWindowSpec.{EveryMeasure, measureBits, refMeasures}
 
 /** SURVEY §5.2 streaming-specific: restart-from-checkpoint resumes
   * identically — no lost and no duplicated alerts across a stop/restart,
@@ -58,7 +58,7 @@ class CheckpointRestartSpec extends AnyFunSuite with SparkTestBase {
       spark.conf.unset(StateBackend.ProviderConfKey)
 
     // batch truth over the full input: 2 keys x 11 windows x 6 stats
-    val expected = columnForm(data.toDF("key", "seq", "v"), 20)
+    val expected = refMeasures(data, 20)
     assert(expected.size === 2 * 11 * 6)
     assert(afterFirst > 0 && afterFirst < all.length)
     assert(all.length === expected.size, "restart lost or duplicated rows")

@@ -1,30 +1,27 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
-import graft.measures.Measures
-import graft.pipeline.AlertPipeline
+import graft.measures.{Measures, MeasuresSpec}
 
 object CountSlidingWindowSpec extends org.scalatest.Assertions {
   /** A threshold far above any window measure for every stat: each full
     * window alerts on all six, so the alerts' `m` carry every measure. */
   val EveryMeasure: Map[String, Double] = Measures.names.map(_ -> 1e300).toMap
 
-  /** The column form's measures of every full window of (key, seq, v):
-    * (key, seq, stat) → `doubleToLongBits(m)`. */
-  def columnForm(df: DataFrame, n: Int): Map[(Long, Long, String), Long] =
-    AlertPipeline.withMeasures(
-      AlertPipeline.windowed(df, col("key"), col("seq"), col("v"), n),
-      Seq(col("key"), col("seq")), n).collect().toSeq.flatMap { r =>
-        Measures.names.zipWithIndex.map { case (stat, i) =>
-          (r.getLong(0), r.getLong(1), stat) ->
-            java.lang.Double.doubleToLongBits(r.getDouble(2 + i))
+  /** `MeasuresRef.allFast` of every full window of each key's samples in
+    * `seq` order: (key, seq, stat) → `doubleToLongBits(m)`. */
+  def refMeasures(data: Seq[Sample], n: Int): Map[(Long, Long, String), Long] =
+    data.groupBy(_.key).toSeq.flatMap { case (k, rows) =>
+      val vs = rows.sortBy(_.seq)
+      (n - 1 until vs.size).flatMap { end =>
+        MeasuresSpec.reference(vs.slice(end + 1 - n, end + 1).map(_.v).toArray).map {
+          case (stat, m) => (k, vs(end).seq, stat) -> java.lang.Double.doubleToLongBits(m)
         }
-      }.toMap
+      }
+    }.toMap
 
   /** [[EveryMeasure]] alerts as (key, seq, stat) → `doubleToLongBits(m)`;
     * fails on a duplicated cell or a threshold other than 1e300. */
@@ -66,7 +63,7 @@ class CountSlidingWindowSpec extends AnyFunSuite with SparkTestBase {
 
     val got = measureBits(spark.table("m_out").as[StreamAlert].collect())
     assert(got.size === 2 * (45 - 29) * 6)
-    assert(got === columnForm(data.toDF("key", "seq", "v"), 30))
+    assert(got === refMeasures(data, 30))
   }
 
   test("replayed and late rows are skipped, not double-applied") {
@@ -93,15 +90,15 @@ class CountSlidingWindowSpec extends AnyFunSuite with SparkTestBase {
     assert(afterReplay === (35 - 29) * 6)
     val got = measureBits(spark.table("r_out").as[StreamAlert].collect())
     assert(got.keys.map(_._2).toSeq.distinct.sorted === (29L to 39L))
-    assert(got === columnForm(data.toDF("key", "seq", "v"), 30))
+    assert(got === refMeasures(data, 30))
   }
 
   test("ring-buffer state holds at n=1000: semantics across micro-batches") {
     // The large-window shape check: the state is the n-slot arrival ring,
     // loaded and sorted once per key and micro-batch and slid by O(n) moves
     // per row, so a 1000-deep window over 3000 rows streams through in
-    // fire-cost time. Semantics pinned against the column form, every
-    // window and measure bit for bit.
+    // fire-cost time. Semantics pinned against MeasuresRef, every window
+    // and measure bit for bit.
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val n = 1000
@@ -119,7 +116,7 @@ class CountSlidingWindowSpec extends AnyFunSuite with SparkTestBase {
     } finally q.stop()
     val got = measureBits(spark.table("big_out").as[StreamAlert].collect())
     assert(got.size === (3000 - (n - 1)) * 6)
-    assert(got === columnForm(data.toDF("key", "seq", "v"), n))
+    assert(got === refMeasures(data, n))
   }
 
   test("alerts start exactly at row 30 and respect thresholds") {
