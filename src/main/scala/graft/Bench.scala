@@ -14,17 +14,7 @@ object Bench {
     // and a comma-decimal default locale would emit invalid JSON
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = harnessSession("graft-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm the JVM/codegen once so timings measure the engine, not JIT —
     // one relational and one document-pipeline query.
@@ -109,5 +99,22 @@ object Bench {
     System.out.flush()
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
+  }
+
+  /** The session shape of the registry harnesses (Bench, PlanDump,
+    * Probe): local[$SPARK_GRAFT_CPUS] with as many shuffle partitions,
+    * AQE on, UTC, nanos-as-long parquet. Probe layers its overrides on
+    * top before `getOrCreate()`. */
+  def harnessSession(appName: String): SparkSession.Builder = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .withExtensions(new graft.functions.GraftExtensions)
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
   }
 }

@@ -2,13 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.queries.Registry
 
 /** Measurement harness (guide §1/§7.2): dump `.explain("formatted")` for
-  * registry queries under the SAME session configuration as Bench
-  * (local[$SPARK_GRAFT_CPUS], shuffle.partitions=cpus, AQE on), so the
+  * registry queries under Bench's own session ([[Bench.harnessSession]]:
+  * local[$SPARK_GRAFT_CPUS], shuffle.partitions=cpus, AQE on), so the
   * committed plan artifacts reflect what the bench actually executes.
   * Usage: PlanDump <outDir> [namePrefix[,prefix...]] — one
   * <outDir>/<query>.txt per query. Not part of the driver contract. */
@@ -18,17 +16,7 @@ object PlanDump {
     val prefixes =
       (if (args.length > 1) args(1) else "").split(',').toSeq.filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Bench.harnessSession("graft-plandump").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
     Registry.all

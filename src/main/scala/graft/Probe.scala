@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.queries.Registry
 
 /** Dev measurement probe (guide §1): time one registry query repeatedly
-  * under Bench's session shape with arbitrary conf overrides, to
+  * under Bench's session shape ([[Bench.harnessSession]]) with arbitrary
+  * conf overrides applied on top, to
   * attribute fixed per-stage overhead (planning, AQE re-optimization,
   * scheduling) vs data work. Not part of the driver contract.
   * Usage: Probe <query> [reps] [k=v,k=v,...] */
@@ -19,16 +18,7 @@ object Probe {
         (k, v)
       }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .appName("graft-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val b = Bench.harnessSession("graft-probe")
     confs.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

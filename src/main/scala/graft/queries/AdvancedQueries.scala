@@ -93,6 +93,86 @@ object AdvancedQueries {
        |  FROM kh)""".stripMargin
   }
 
+  /** q52's oracle: the gap-500 sessionization of `events` per user — the
+    * ground truth of the batch gap walk and of q131's session windows. */
+  private[queries] lazy val duckSessions: String =
+    """WITH g AS (
+      |  SELECT user_id, event_id,
+      |    CASE WHEN event_id - lag(event_id) OVER w IS NULL
+      |           OR event_id - lag(event_id) OVER w > 500
+      |         THEN 1 ELSE 0 END AS brk
+      |  FROM events
+      |  WINDOW w AS (PARTITION BY user_id ORDER BY event_id)),
+      |s AS (
+      |  SELECT user_id, event_id,
+      |    sum(brk) OVER (PARTITION BY user_id ORDER BY event_id) AS sess
+      |  FROM g),
+      |sl AS (
+      |  SELECT user_id, sess, count(*) AS sess_len
+      |  FROM s GROUP BY user_id, sess)
+      |SELECT user_id, count(*) AS n_sessions, max(sess_len) AS max_sess_len,
+      |  CAST(sum(sess_len) AS BIGINT) AS n_events
+      |FROM sl GROUP BY user_id ORDER BY user_id""".stripMargin
+
+  /** q175's oracle: every view attached to the user's latest purchase
+    * value at or before it, by DuckDB's native ASOF LEFT JOIN — the ground
+    * truth of q175, q177 and q178. */
+  private[queries] lazy val duckAsof: String =
+    """WITH v AS (SELECT event_id, user_id, ts, value FROM events
+      |  WHERE event_type = 'view'),
+      |p AS (SELECT user_id, ts, max(value) AS pv FROM events
+      |  WHERE event_type = 'purchase' GROUP BY 1, 2)
+      |SELECT v.event_id, v.user_id, v.value,
+      |  p.pv AS asof_purchase_value
+      |FROM v ASOF LEFT JOIN p
+      |  ON v.user_id = p.user_id AND p.ts <= v.ts
+      |ORDER BY event_id""".stripMargin
+
+  /** q189's oracle: per (event_type, day) open/high/low/close, count and
+    * mean — the ground truth of q189 and q200. */
+  private[queries] lazy val duckOhlc: String =
+    """SELECT event_type, epoch_ns(ts) // 86400000000000 AS day,
+      |  arg_min(value, epoch_ns(ts)) AS open,
+      |  max(value) AS high, min(value) AS low,
+      |  arg_max(value, epoch_ns(ts)) AS close,
+      |  count(*) AS n, round(avg(value), 6) AS mean_v
+      |FROM events GROUP BY event_type, day
+      |ORDER BY event_type, day""".stripMargin
+
+  /** q196's oracle: each user's final alpha=0.2 EWMA in (ts, event_id)
+    * order, folded sequentially by `list_reduce` — the ground truth of
+    * q196, q198 and q201. */
+  private[queries] lazy val duckEwma: String =
+    """SELECT user_id, count(*) AS n_events,
+      |  round(list_reduce(list(value ORDER BY ts, event_id),
+      |    (acc, x) -> CAST(0.2 AS DOUBLE) * x
+      |      + CAST(0.8 AS DOUBLE) * acc), 4) AS ewma_last
+      |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin
+
+  /** Shared oracle prefix for q191/q195: the 8-token clean keys, their
+    * rarest-bigram blocking and the candidate (dirty, clean) pairs as CTE
+    * `cand(dk, dn, ck)`, with `cl(ck, cn, tw)` for the clean names. */
+  private lazy val duckLinkageCands: String =
+    """WITH d0 AS (SELECT doc_id, string_split(text, ' ')[1:8] AS tw
+      |  FROM documents WHERE len(string_split(text, ' ')) >= 8),
+      |cl AS (SELECT doc_id AS ck, array_to_string(tw, ' ') AS cn, tw
+      |  FROM d0),
+      |cb AS (SELECT ck, unnest(list_transform(range(1, 8),
+      |    i -> tw[i] || ' ' || tw[i + 1])) AS bg FROM cl),
+      |bdf AS (SELECT bg, count(*) AS df FROM cb GROUP BY bg),
+      |d1 AS (SELECT doc_id AS dk,
+      |    array_to_string(tw[1:2] || tw[4:8], ' ') AS dn,
+      |    tw[1:2] || tw[4:8] AS dw FROM d0),
+      |dbg AS (SELECT dk, dn, unnest(list_transform(range(1, 7),
+      |    i -> dw[i] || ' ' || dw[i + 1])) AS bg FROM d1),
+      |rare AS (SELECT dk, dn, bg FROM (
+      |    SELECT dbg.dk, dbg.dn, dbg.bg, row_number() OVER
+      |      (PARTITION BY dbg.dk ORDER BY bdf.df, dbg.bg) AS rn
+      |    FROM dbg JOIN bdf USING (bg)) t WHERE rn = 1),
+      |ci AS (SELECT DISTINCT ck, bg FROM cb),
+      |cand AS (SELECT DISTINCT rare.dk, rare.dn, ci.ck
+      |  FROM rare JOIN ci USING (bg))""".stripMargin
+
   /** The corpus token stream shared by q73's vocabulary head and BOTH of
     * q79's passes (the CMS aggregation and the exact top-20). What is
     * CACHED is the per-document token ARRAY (one row per doc — the same
@@ -348,24 +428,7 @@ object AdvancedQueries {
           .sessionStats(Tables(s, dir, "events"), keyCol = "user_id",
             seqCol = "event_id", gap = 500)
           .orderBy(col("user_id")),
-      Some(
-        """WITH g AS (
-          |  SELECT user_id, event_id,
-          |    CASE WHEN event_id - lag(event_id) OVER w IS NULL
-          |           OR event_id - lag(event_id) OVER w > 500
-          |         THEN 1 ELSE 0 END AS brk
-          |  FROM events
-          |  WINDOW w AS (PARTITION BY user_id ORDER BY event_id)),
-          |s AS (
-          |  SELECT user_id, event_id,
-          |    sum(brk) OVER (PARTITION BY user_id ORDER BY event_id) AS sess
-          |  FROM g),
-          |sl AS (
-          |  SELECT user_id, sess, count(*) AS sess_len
-          |  FROM s GROUP BY user_id, sess)
-          |SELECT user_id, count(*) AS n_sessions, max(sess_len) AS max_sess_len,
-          |  CAST(sum(sess_len) AS BIGINT) AS n_events
-          |FROM sl GROUP BY user_id ORDER BY user_id""".stripMargin)),
+      Some(duckSessions)),
 
     // Bivariate statistics per group: corr/covariance/stddev are one-pass
     // partial-aggregatable moments (Spark merges per-partition moment
@@ -947,16 +1010,7 @@ object AdvancedQueries {
             col("asof_purchase_value"))
           .orderBy(col("event_id"))
       },
-      Some(
-        """WITH v AS (SELECT event_id, user_id, ts, value FROM events
-          |  WHERE event_type = 'view'),
-          |p AS (SELECT user_id, ts, max(value) AS pv FROM events
-          |  WHERE event_type = 'purchase' GROUP BY 1, 2)
-          |SELECT v.event_id, v.user_id, v.value,
-          |  p.pv AS asof_purchase_value
-          |FROM v ASOF LEFT JOIN p
-          |  ON v.user_id = p.user_id AND p.ts <= v.ts
-          |ORDER BY event_id""".stripMargin)),
+      Some(duckAsof)),
 
     // Range (interval) join (graft.analytics.RangeJoin) — the attribution
     // query: every view landing inside a purchase's 6-hour window for the
@@ -1021,16 +1075,7 @@ object AdvancedQueries {
             col("asof_purchase_value"))
           .orderBy(col("event_id"))
       },
-      Some(
-        """WITH v AS (SELECT event_id, user_id, ts, value FROM events
-          |  WHERE event_type = 'view'),
-          |p AS (SELECT user_id, ts, max(value) AS pv FROM events
-          |  WHERE event_type = 'purchase' GROUP BY 1, 2)
-          |SELECT v.event_id, v.user_id, v.value,
-          |  p.pv AS asof_purchase_value
-          |FROM v ASOF LEFT JOIN p
-          |  ON v.user_id = p.user_id AND p.ts <= v.ts
-          |ORDER BY event_id""".stripMargin)),
+      Some(duckAsof)),
 
     // Funnel analysis BY COMPOSITION — no new operator: the classic
     // view → click → purchase funnel is two chained as-of joins. Each
@@ -1331,14 +1376,7 @@ object AdvancedQueries {
             round(avg(col("value")), 6).as("mean_v"))
           .orderBy(col("event_type"), col("day"))
       },
-      Some(
-        """SELECT event_type, epoch_ns(ts) // 86400000000000 AS day,
-          |  arg_min(value, epoch_ns(ts)) AS open,
-          |  max(value) AS high, min(value) AS low,
-          |  arg_max(value, epoch_ns(ts)) AS close,
-          |  count(*) AS n, round(avg(value), 6) AS mean_v
-          |FROM events GROUP BY event_type, day
-          |ORDER BY event_type, day""".stripMargin)),
+      Some(duckOhlc)),
 
     // Statistics-driven broadcast planning end-to-end: ANALYZE lineitem
     // (TableStats.analyze — one aggregate pass: count, NDV, octile
@@ -1455,26 +1493,7 @@ object AdvancedQueries {
             (col("m.ck") === col("dk")).cast("int").as("matched_self"))
           .orderBy(col("src_key"))
       },
-      Some(
-        """WITH d0 AS (SELECT doc_id, string_split(text, ' ')[1:8] AS tw
-          |  FROM documents WHERE len(string_split(text, ' ')) >= 8),
-          |cl AS (SELECT doc_id AS ck, array_to_string(tw, ' ') AS cn, tw
-          |  FROM d0),
-          |cb AS (SELECT ck, unnest(list_transform(range(1, 8),
-          |    i -> tw[i] || ' ' || tw[i + 1])) AS bg FROM cl),
-          |bdf AS (SELECT bg, count(*) AS df FROM cb GROUP BY bg),
-          |d1 AS (SELECT doc_id AS dk,
-          |    array_to_string(tw[1:2] || tw[4:8], ' ') AS dn,
-          |    tw[1:2] || tw[4:8] AS dw FROM d0),
-          |dbg AS (SELECT dk, dn, unnest(list_transform(range(1, 7),
-          |    i -> dw[i] || ' ' || dw[i + 1])) AS bg FROM d1),
-          |rare AS (SELECT dk, dn, bg FROM (
-          |    SELECT dbg.dk, dbg.dn, dbg.bg, row_number() OVER
-          |      (PARTITION BY dbg.dk ORDER BY bdf.df, dbg.bg) AS rn
-          |    FROM dbg JOIN bdf USING (bg)) t WHERE rn = 1),
-          |ci AS (SELECT DISTINCT ck, bg FROM cb),
-          |cand AS (SELECT DISTINCT rare.dk, rare.dn, ci.ck
-          |  FROM rare JOIN ci USING (bg)),
+      Some(duckLinkageCands + """,
           |scored AS (SELECT cand.dk, cand.ck,
           |    levenshtein(cand.dn, cl.cn) AS dist
           |  FROM cand JOIN cl ON cand.ck = cl.ck)
@@ -1680,26 +1699,7 @@ object AdvancedQueries {
             (col("m.ck") === col("dk")).cast("int").as("matched_self"))
           .orderBy(col("src_key"))
       },
-      Some(
-        """WITH d0 AS (SELECT doc_id, string_split(text, ' ')[1:8] AS tw
-          |  FROM documents WHERE len(string_split(text, ' ')) >= 8),
-          |cl AS (SELECT doc_id AS ck, array_to_string(tw, ' ') AS cn, tw
-          |  FROM d0),
-          |cb AS (SELECT ck, unnest(list_transform(range(1, 8),
-          |    i -> tw[i] || ' ' || tw[i + 1])) AS bg FROM cl),
-          |bdf AS (SELECT bg, count(*) AS df FROM cb GROUP BY bg),
-          |d1 AS (SELECT doc_id AS dk,
-          |    array_to_string(tw[1:2] || tw[4:8], ' ') AS dn,
-          |    tw[1:2] || tw[4:8] AS dw FROM d0),
-          |dbg AS (SELECT dk, dn, unnest(list_transform(range(1, 7),
-          |    i -> dw[i] || ' ' || dw[i + 1])) AS bg FROM d1),
-          |rare AS (SELECT dk, dn, bg FROM (
-          |    SELECT dbg.dk, dbg.dn, dbg.bg, row_number() OVER
-          |      (PARTITION BY dbg.dk ORDER BY bdf.df, dbg.bg) AS rn
-          |    FROM dbg JOIN bdf USING (bg)) t WHERE rn = 1),
-          |ci AS (SELECT DISTINCT ck, bg FROM cb),
-          |cand AS (SELECT DISTINCT rare.dk, rare.dn, ci.ck
-          |  FROM rare JOIN ci USING (bg)),
+      Some(duckLinkageCands + """,
           |scored AS (SELECT cand.dk, cand.ck,
           |    jaro_winkler_similarity(cand.dn, cl.cn) AS jw
           |  FROM cand JOIN cl ON cand.ck = cl.ck)
@@ -1737,12 +1737,7 @@ object AdvancedQueries {
               .as("ewma_last"))
           .orderBy(col("user_id"))
       },
-      Some(
-        """SELECT user_id, count(*) AS n_events,
-          |  round(list_reduce(list(value ORDER BY ts, event_id),
-          |    (acc, x) -> CAST(0.2 AS DOUBLE) * x
-          |      + CAST(0.8 AS DOUBLE) * acc), 4) AS ewma_last
-          |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin)),
+      Some(duckEwma)),
 
     // l-diversity audit — k-anonymity's (q194) stronger sibling: a QI
     // group that is large (k-safe) but UNIFORM in its sensitive value
@@ -1806,11 +1801,6 @@ object AdvancedQueries {
               .as("ewma_last"))
           .orderBy(col("user_id"))
       },
-      Some(
-        """SELECT user_id, count(*) AS n_events,
-          |  round(list_reduce(list(value ORDER BY ts, event_id),
-          |    (acc, x) -> CAST(0.2 AS DOUBLE) * x
-          |      + CAST(0.8 AS DOUBLE) * acc), 4) AS ewma_last
-          |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin))
+      Some(duckEwma))
   )
 }

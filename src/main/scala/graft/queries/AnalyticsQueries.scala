@@ -63,6 +63,12 @@ object AnalyticsQueries {
       AlertPipeline.eventAlerts(Tables(s, dir, "events"))
     }
 
+  /** q107's oracle: the documents table in doc_id order — the ground truth
+    * of every lossless corpus round-trip (q107, q134, q174). */
+  private[queries] lazy val duckCorpus: String =
+    """SELECT doc_id, text, lang, source, n_chars
+      |FROM documents ORDER BY doc_id""".stripMargin
+
   val all: Seq[Q] = Seq(
     // P3: alert counts per (stat, key) — countings.txt analog.
     Q("q19_alert_counts",
@@ -143,8 +149,7 @@ object AnalyticsQueries {
           requiredCols = Seq("doc_id", "text"))
           .orderBy(col("doc_id"))
       },
-      Some("""SELECT doc_id, text, lang, source, n_chars
-             |FROM documents ORDER BY doc_id""".stripMargin)),
+      Some(duckCorpus)),
 
     // WARC-lite web-archive round-trip (graft.sources.WarcLite) — the
     // crawl-ingest format: bounded-size archive files, each a stream of
@@ -203,8 +208,7 @@ object AnalyticsQueries {
           .orc(path)
           .orderBy(col("doc_id"))
       },
-      Some("""SELECT doc_id, text, lang, source, n_chars
-             |FROM documents ORDER BY doc_id""".stripMargin)),
+      Some(duckCorpus)),
 
     // Snapshot reconciliation (graft.analytics.Snapshots.diff): which
     // documents are new, gone, or edited between two corpus snapshots —

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Session-scoped caches behind the query layer, with an explicit
   * lifecycle: intermediates that several queries share (the shingle table,
   * the LSH band table, the parsed alert stream) are cached once per
-  * (session, sf-dir) and trained IVF centroids once per (session, dir,
+  * (session, sf-dir) and trained quantizers once per (session, dir,
   * config), and everything — including memoized SIDE EFFECTS, via their
   * registered cleanup — is released by [[evict]].
   *
@@ -76,8 +76,6 @@ object Caches {
   }
 
   private val frames = TrieMap.empty[Key, Entry[_]]
-  private val centroids = TrieMap.empty[Key, Entry[_]]
-  private val pqBooks = TrieMap.empty[Key, Entry[_]]
   private val memos = TrieMap.empty[Key, Entry[_]]
 
   /** The cached frame for `tag` over (session, dir), building (and
@@ -99,24 +97,9 @@ object Caches {
       df
     }
 
-  /** Trained coarse-quantizer centroids for `config` over (session, dir) —
-    * training is deterministic, so every query sharing a configuration
-    * reuses one training run (q65/q66/q67 pay the Lloyd iterations once). */
-  def cells(s: SparkSession, dir: String, config: String)(
-      build: => Array[(Int, Array[Double])]): Array[(Int, Array[Double])] =
-    singleFlight[Array[(Int, Array[Double])]](
-      centroids, (s, dir, config), _ => ())(build)
-
-  /** Trained product-quantization codebooks `(sub, code, centroid)` for
-    * `config` over (session, dir) — same deterministic-training lifecycle
-    * as [[cells]] (q103/q104 pay the subspace Lloyd iterations once). */
-  def pq(s: SparkSession, dir: String, config: String)(
-      build: => Array[(Int, Int, Array[Double])])
-      : Array[(Int, Int, Array[Double])] =
-    singleFlight[Array[(Int, Int, Array[Double])]](
-      pqBooks, (s, dir, config), _ => ())(build)
-
-  /** Arbitrary memoized value for `tag` over (session, dir) — the
+  /** Arbitrary memoized value for `tag` over (session, dir). It holds
+    * trained centroids and PQ codebooks (training is deterministic, so one
+    * run per configuration, tagged `cells/…` and `pq/…`), and it is the
     * lifecycle home for one-time side effects whose product is a small
     * HANDLE rather than a frame (the q185 bucketed-layout table names):
     * the side effect runs once per (session, dir), every later query in
@@ -152,8 +135,6 @@ object Caches {
           catch { case scala.util.control.NonFatal(_) => () }
       }
     }
-    centroids.keys.filter(_._1 eq session).foreach(centroids.remove)
-    pqBooks.keys.filter(_._1 eq session).foreach(pqBooks.remove)
     memos.keys.filter(_._1 eq session).foreach { k =>
       memos.remove(k).foreach { e =>
         try e.cleanIfBuilt()
@@ -164,6 +145,5 @@ object Caches {
 
   /** Visible for tests: number of live entries for `session`. */
   private[graft] def liveEntries(session: SparkSession): Int =
-    frames.keys.count(_._1 eq session) + centroids.keys.count(_._1 eq session) +
-      pqBooks.keys.count(_._1 eq session) + memos.keys.count(_._1 eq session)
+    frames.keys.count(_._1 eq session) + memos.keys.count(_._1 eq session)
 }

@@ -472,27 +472,7 @@ object CorpusQueries {
         graft.similarity.Hybrid.rrf(Seq(bmRanked, cosRanked))
           .orderBy(col("rrf_score").desc, col("doc_id")).limit(10)
       },
-      Some(
-        """WITH dl AS (SELECT doc_id,
-          |    len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS dl
-          |  FROM documents),
-          |c AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM dl),
-          |tf AS (SELECT doc_id, tok, count(*) AS tf FROM (
-          |    SELECT doc_id, unnest(list_filter(
-          |      string_split_regex(lower(text), '[^a-z0-9]+'),
-          |      t -> len(t) > 0)) AS tok
-          |    FROM documents)
-          |  WHERE tok IN ('join', 'vector', 'dup') GROUP BY 1, 2),
-          |df AS (SELECT tok, count(DISTINCT doc_id) AS df FROM tf GROUP BY 1),
-          |s AS (SELECT tf.doc_id,
-          |    ln(CAST(1.0 AS DOUBLE)
-          |       + (c.n - df.df + CAST(0.5 AS DOUBLE))
-          |         / (df.df + CAST(0.5 AS DOUBLE)))
-          |    * (tf.tf * CAST(2.5 AS DOUBLE))
-          |      / (tf.tf + CAST(1.5 AS DOUBLE)
-          |         * (CAST(0.25 AS DOUBLE)
-          |            + CAST(0.75 AS DOUBLE) * dl.dl / c.avgdl)) AS s
-          |  FROM tf JOIN df USING (tok) JOIN dl USING (doc_id) CROSS JOIN c),
+      Some(ExtQueries.duckBm25 + """,
           |bmtop AS (SELECT doc_id, round(sum(s), 6) AS score
           |  FROM s GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 20),
           |bm AS (SELECT doc_id,

@@ -16,6 +16,81 @@ object CurationQueries {
     * real pipelines carry — wiki before web before crawl). */
   private val srcPrio = substring(col("source"), 4, 10).cast("int")
 
+  /** Oracle prefix of q108's passage units: tokens `d(doc_id, toks)` and
+    * their non-overlapping 32-token chunks `c(doc_id, ch)`, `ch` holding
+    * `chunk_id` and `ctoks`. */
+  private[queries] lazy val duckChunks32: String =
+    s"""WITH d AS (SELECT doc_id, ${ExtQueries.duckTokens} AS toks
+       |  FROM documents),
+       |c AS (SELECT doc_id,
+       |    unnest(list_transform(generate_series(0, (len(toks) - 1) // 32),
+       |      i -> {'chunk_id': i,
+       |            'ctoks': toks[i * 32 + 1 : least(i * 32 + 32,
+       |                                             len(toks))]})) AS ch
+       |  FROM d WHERE len(toks) >= 1)""".stripMargin
+
+  /** [[duckChunks32]] plus every unit's whitespace-normalized lowercase
+    * text as `u(doc_id, chunk_id, norm)` — the unit identity of q108 and
+    * q111. */
+  private[queries] lazy val duckUnits: String =
+    s"""$duckChunks32,
+       |u AS (SELECT doc_id, ch.chunk_id AS chunk_id,
+       |    lower(trim(regexp_replace(array_to_string(ch.ctoks, ' '),
+       |      '\\s+', ' ', 'g'))) AS norm
+       |  FROM c)""".stripMargin
+
+  /** q212's oracle: the keep-first passage index rebuilt over the corpus
+    * without the doc_id % 7 == 2 takedown slice — the ground truth of
+    * q212 and q217. */
+  private[queries] lazy val duckRetainedIndex: String =
+    s"""$duckChunks32,
+       |u AS (SELECT doc_id, ch.chunk_id AS chunk_id,
+       |    lower(trim(regexp_replace(array_to_string(ch.ctoks, ' '),
+       |      '\\s+', ' ', 'g'))) AS norm
+       |  FROM c WHERE doc_id % 7 <> 2),
+       |w AS (SELECT doc_id, chunk_id, norm,
+       |    count(*) OVER (PARTITION BY norm) AS n_occ,
+       |    row_number() OVER (PARTITION BY norm
+       |      ORDER BY doc_id, chunk_id) AS rn
+       |  FROM u)
+       |SELECT md5(norm) AS unit_hash, doc_id AS keeper_doc,
+       |  chunk_id AS keeper_chunk, CAST(n_occ AS BIGINT) AS n_occ
+       |FROM w WHERE rn = 1 ORDER BY unit_hash""".stripMargin
+
+  /** q170's oracle: per document, the occurrences of each lexicon word,
+    * counted by replace-and-measure — the ground truth of q170 and
+    * q173. */
+  private[queries] lazy val duckKeywordTags: String =
+    """WITH kw(kw) AS (VALUES ('a'), ('art'), ('data'), ('he'),
+      |    ('row'), ('scan'), ('table'), ('the')),
+      |c AS (SELECT doc_id, kw,
+      |    (length(text) - length(replace(text, kw, '')))
+      |      // length(kw) AS n
+      |  FROM documents CROSS JOIN kw)
+      |SELECT doc_id, kw AS keyword, CAST(n AS BIGINT) AS n
+      |FROM c WHERE n > 0 ORDER BY doc_id, keyword""".stripMargin
+
+  /** Oracle prefix of q94's Gopher gates: whitespace words `w(doc_id,
+    * words)` and their statistics `m(doc_id, n_words, mean_word_len,
+    * n_stop_distinct, alpha_frac)` (q94, q116). */
+  private lazy val duckGopherStats: String =
+    """WITH w AS (SELECT doc_id,
+      |    list_filter(regexp_split_to_array(text, '\s+'),
+      |      x -> len(x) > 0) AS words
+      |  FROM documents),
+      |m AS (SELECT doc_id, len(words) AS n_words,
+      |    round(CAST(list_aggregate(list_transform(words,
+      |        x -> len(x)), 'sum') AS DOUBLE)
+      |      / nullif(CAST(len(words) AS DOUBLE), 0.0), 6)
+      |      AS mean_word_len,
+      |    len(list_intersect(list_transform(words, x -> lower(x)),
+      |      ['the','a','of','and','to','in','is','on','for','with']))
+      |      AS n_stop_distinct,
+      |    round(CAST(len(list_filter(words,
+      |        x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE)
+      |      / nullif(CAST(len(words) AS DOUBLE), 0.0), 6) AS alpha_frac
+      |  FROM w)""".stripMargin
+
   val all: Seq[Q] = Seq(
 
     // Source-priority canonical selection: for every near-dup cluster
@@ -43,14 +118,7 @@ object CurationQueries {
             col("canonical_n_chars"))
           .orderBy(col("cluster_id"))
       },
-      Some(DedupQueries.duckLshEdges.replaceFirst("WITH ", "WITH RECURSIVE ") +
-        """,
-          |und AS (SELECT doc_a AS s, doc_b AS t FROM jp
-          |        UNION ALL SELECT doc_b, doc_a FROM jp),
-          |reach AS (SELECT s, t FROM und
-          |          UNION
-          |          SELECT r.s, u.t FROM reach r JOIN und u ON r.t = u.s
-          |          WHERE u.t <> r.s),
+      Some(DedupQueries.duckClusterReach + """,
           |cl AS (SELECT d.doc_id,
           |    least(d.doc_id, coalesce(min(r.t), d.doc_id)) AS cluster_id
           |  FROM documents d LEFT JOIN reach r ON d.doc_id = r.s
@@ -81,23 +149,7 @@ object CurationQueries {
             col("gate_word_len"), col("gate_stop"), col("gate_alpha"),
             col("pass"))
           .orderBy(col("doc_id")),
-      Some(
-        """WITH w AS (SELECT doc_id,
-          |    list_filter(regexp_split_to_array(text, '\s+'),
-          |      x -> len(x) > 0) AS words
-          |  FROM documents),
-          |m AS (SELECT doc_id, len(words) AS n_words,
-          |    round(CAST(list_aggregate(list_transform(words,
-          |        x -> len(x)), 'sum') AS DOUBLE)
-          |      / nullif(CAST(len(words) AS DOUBLE), 0.0), 6)
-          |      AS mean_word_len,
-          |    len(list_intersect(list_transform(words, x -> lower(x)),
-          |      ['the','a','of','and','to','in','is','on','for','with']))
-          |      AS n_stop_distinct,
-          |    round(CAST(len(list_filter(words,
-          |        x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE)
-          |      / nullif(CAST(len(words) AS DOUBLE), 0.0), 6) AS alpha_frac
-          |  FROM w)
+      Some(duckGopherStats + """
           |SELECT doc_id, n_words, mean_word_len, n_stop_distinct,
           |  alpha_frac,
           |  n_words >= 50 AND n_words <= 100000 AS gate_words,
@@ -428,18 +480,7 @@ object CurationQueries {
           .orderBy(col("doc_id"), col("chunk_id"))
       },
       Some(
-        s"""WITH d AS (SELECT doc_id, ${ExtQueries.duckTokens} AS toks
-          |  FROM documents),
-          |c AS (SELECT doc_id,
-          |    unnest(list_transform(generate_series(0, (len(toks) - 1) // 32),
-          |      i -> {'chunk_id': i,
-          |            'ctoks': toks[i * 32 + 1 : least(i * 32 + 32,
-          |                                             len(toks))]})) AS ch
-          |  FROM d WHERE len(toks) >= 1),
-          |u AS (SELECT doc_id, ch.chunk_id AS chunk_id,
-          |    lower(trim(regexp_replace(array_to_string(ch.ctoks, ' '),
-          |      '\\s+', ' ', 'g'))) AS norm
-          |  FROM c),
+        s"""$duckUnits,
           |w AS (SELECT doc_id, chunk_id,
           |    count(*) OVER (PARTITION BY norm) AS n_occ,
           |    row_number() OVER (PARTITION BY norm
@@ -489,27 +530,7 @@ object CurationQueries {
             col("chunk_id").as("keeper_chunk"), col("n_occ"))
           .orderBy(col("unit_hash"))
       },
-      Some(
-        s"""WITH d AS (SELECT doc_id, ${ExtQueries.duckTokens} AS toks
-          |  FROM documents),
-          |c AS (SELECT doc_id,
-          |    unnest(list_transform(generate_series(0, (len(toks) - 1) // 32),
-          |      i -> {'chunk_id': i,
-          |            'ctoks': toks[i * 32 + 1 : least(i * 32 + 32,
-          |                                             len(toks))]})) AS ch
-          |  FROM d WHERE len(toks) >= 1),
-          |u AS (SELECT doc_id, ch.chunk_id AS chunk_id,
-          |    lower(trim(regexp_replace(array_to_string(ch.ctoks, ' '),
-          |      '\\s+', ' ', 'g'))) AS norm
-          |  FROM c WHERE doc_id % 7 <> 2),
-          |w AS (SELECT doc_id, chunk_id, norm,
-          |    count(*) OVER (PARTITION BY norm) AS n_occ,
-          |    row_number() OVER (PARTITION BY norm
-          |      ORDER BY doc_id, chunk_id) AS rn
-          |  FROM u)
-          |SELECT md5(norm) AS unit_hash, doc_id AS keeper_doc,
-          |  chunk_id AS keeper_chunk, CAST(n_occ AS BIGINT) AS n_occ
-          |FROM w WHERE rn = 1 ORDER BY unit_hash""".stripMargin)),
+      Some(duckRetainedIndex)),
 
     // The COMPOSED curation pipeline — what a reference user actually runs
     // end-to-end, chained as ONE query so stage handoffs (and their plan
@@ -576,22 +597,7 @@ object CurationQueries {
           .orderBy(col("doc_id"))
       },
       Some(
-        s"""WITH w AS (SELECT doc_id,
-          |    list_filter(regexp_split_to_array(text, '\\s+'),
-          |      x -> len(x) > 0) AS words
-          |  FROM documents),
-          |m AS (SELECT doc_id, len(words) AS n_words,
-          |    round(CAST(list_aggregate(list_transform(words,
-          |        x -> len(x)), 'sum') AS DOUBLE)
-          |      / nullif(CAST(len(words) AS DOUBLE), 0.0), 6)
-          |      AS mean_word_len,
-          |    len(list_intersect(list_transform(words, x -> lower(x)),
-          |      ['the','a','of','and','to','in','is','on','for','with']))
-          |      AS n_stop_distinct,
-          |    round(CAST(len(list_filter(words,
-          |        x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE)
-          |      / nullif(CAST(len(words) AS DOUBLE), 0.0), 6) AS alpha_frac
-          |  FROM w),
+        s"""$duckGopherStats,
           |g AS (SELECT doc_id FROM m
           |  WHERE (n_words >= 50 AND n_words <= 100000)
           |    AND coalesce(mean_word_len >= 3.0 AND mean_word_len <= 10.0,
@@ -698,15 +704,7 @@ object CurationQueries {
             Tables.sharded(s, dir, "documents", "doc_id"),
             Seq("a", "art", "data", "he", "row", "scan", "table", "the"))
           .orderBy(col("doc_id"), col("keyword")),
-      Some(
-        """WITH kw(kw) AS (VALUES ('a'), ('art'), ('data'), ('he'),
-          |    ('row'), ('scan'), ('table'), ('the')),
-          |c AS (SELECT doc_id, kw,
-          |    (length(text) - length(replace(text, kw, '')))
-          |      // length(kw) AS n
-          |  FROM documents CROSS JOIN kw)
-          |SELECT doc_id, kw AS keyword, CAST(n AS BIGINT) AS n
-          |FROM c WHERE n > 0 ORDER BY doc_id, keyword""".stripMargin)),
+      Some(duckKeywordTags)),
 
     // Boilerplate removal / main-content extraction
     // (graft.text.Boilerplate) — the step between a raw crawl page and

@@ -244,6 +244,144 @@ object DedupQueries {
     |       JOIN sizes sb ON doc_b = sb.doc_id
     |       WHERE CAST(common AS DOUBLE) / (sa.n + sb.n - common) >= 0.5)""".stripMargin
 
+  /** Oracle prefix of the LSH candidate set: [[duckMinhash]] plus every
+    * band-key collision pair as CTE `cands(doc_a, doc_b)`, doc_a < doc_b. */
+  private[queries] lazy val duckBandCands: String = duckMinhash + """,
+    |cands AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
+    |          FROM bands x JOIN bands y
+    |            ON x.band = y.band AND x.band_key = y.band_key
+    |           AND x.doc_id < y.doc_id)""".stripMargin
+
+  /** [[duckBandCands]] plus every pair's shared-gram count as CTE
+    * `common(doc_a, doc_b, common)` — q28's candidate + verify input. */
+  private lazy val duckBandCommon: String = duckBandCands + """,
+    |common AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
+    |           FROM e a JOIN e b ON a.gram = b.gram AND a.doc_id < b.doc_id
+    |           GROUP BY 1, 2)""".stripMargin
+
+  /** [[duckBandCommon]] plus the candidates verified at Jaccard >= 0.5 as
+    * CTE `cte(doc_a, doc_b, jaccard)` — the verified LSH pairs of q80, q82
+    * and q102. */
+  private def duckBandJaccard(cte: String): String = duckBandCommon + s""",
+    |$cte AS (SELECT c.doc_a, c.doc_b,
+    |    CAST(common AS DOUBLE) / (sa.n + sb.n - common) AS jaccard
+    |  FROM cands c
+    |  JOIN common m ON c.doc_a = m.doc_a AND c.doc_b = m.doc_b
+    |  JOIN sizes sa ON c.doc_a = sa.doc_id
+    |  JOIN sizes sb ON c.doc_b = sb.doc_id
+    |  WHERE CAST(common AS DOUBLE) / (sa.n + sb.n - common) >= 0.5)""".stripMargin
+
+  /** The closure `reach(s, t)` of an undirected edge CTE `und(s, t)`: the
+    * recursive-CTE connected components every cluster-map oracle runs
+    * (the query must open WITH RECURSIVE). */
+  private[queries] val duckReach: String =
+    """reach AS (SELECT s, t FROM und
+      |          UNION
+      |          SELECT r.s, u.t FROM reach r JOIN und u ON r.t = u.s
+      |          WHERE u.t <> r.s)""".stripMargin
+
+  /** Oracle prefix of q55's cluster map: [[duckLshEdges]] under WITH
+    * RECURSIVE and the [[duckReach]] closure of its edges `jp`. */
+  private[queries] lazy val duckClusterReach: String =
+    duckLshEdges.replaceFirst("WITH ", "WITH RECURSIVE ") + s""",
+      |und AS (SELECT doc_a AS s, doc_b AS t FROM jp
+      |        UNION ALL SELECT doc_b, doc_a FROM jp),
+      |$duckReach""".stripMargin
+
+  /** q55's oracle: every document's cluster id, the min doc_id of its
+    * component — the ground truth of q55, q171, q206 and q207. */
+  private[queries] lazy val duckClusters: String = duckClusterReach + """
+    |SELECT d.doc_id,
+    |  least(d.doc_id, coalesce(min(r.t), d.doc_id)) AS cluster_id
+    |FROM documents d LEFT JOIN reach r ON d.doc_id = r.s
+    |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin
+
+  /** q213's oracle: the cluster map recomputed over the retained graph,
+    * the doc_id % 10 == 3 takedown slice removed from both edge endpoints
+    * and the doc set — the ground truth of q213, q215 and q216. */
+  private[queries] lazy val duckRetainedClusters: String =
+    duckLshEdges.replaceFirst("WITH ", "WITH RECURSIVE ") + s""",
+      |jpr AS (SELECT doc_a, doc_b FROM jp
+      |        WHERE doc_a % 10 <> 3 AND doc_b % 10 <> 3),
+      |und AS (SELECT doc_a AS s, doc_b AS t FROM jpr
+      |        UNION ALL SELECT doc_b, doc_a FROM jpr),
+      |$duckReach
+      |SELECT d.doc_id,
+      |  least(d.doc_id, coalesce(min(r.t), d.doc_id)) AS cluster_id
+      |FROM documents d LEFT JOIN reach r ON d.doc_id = r.s
+      |WHERE d.doc_id % 10 <> 3
+      |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin
+
+  /** q209's oracle: each doc_id % 10 == 0 probe's history documents that
+    * contain at least 4/5 of its grams — the ground truth of q209 and
+    * q211. */
+  private[queries] lazy val duckContainment: String = duckGrams + """,
+    |co AS (SELECT a.doc_id AS probe_id, b.doc_id AS doc_id,
+    |    count(*) AS common
+    |  FROM e a JOIN e b ON a.gram = b.gram
+    |  WHERE a.doc_id % 10 = 0 AND b.doc_id % 10 <> 0
+    |  GROUP BY 1, 2)
+    |SELECT probe_id, co.doc_id AS doc_id,
+    |  CAST(common AS INT) AS common,
+    |  round(common * 1.0 / sa.n, 6) AS containment
+    |FROM co
+    |JOIN sizes sa ON probe_id = sa.doc_id
+    |WHERE 5 * common >= 4 * sa.n
+    |ORDER BY probe_id, co.doc_id""".stripMargin
+
+  /** q71's oracle: per non-benchmark document, the number of its distinct
+    * word 8-grams that occur in the doc_id % 10 == 7 benchmark slice — the
+    * ground truth of q71 and q77. */
+  private lazy val duckDecontam: String =
+    """WITH d AS (SELECT doc_id,
+      |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
+      |                t -> len(t) > 0) AS toks
+      |  FROM documents),
+      |g AS (SELECT doc_id, unnest(list_distinct(
+      |    CASE WHEN len(toks) >= 8
+      |      THEN list_transform(generate_series(1, len(toks) - 7),
+      |        i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' '
+      |          || toks[i+3] || ' ' || toks[i+4] || ' ' || toks[i+5]
+      |          || ' ' || toks[i+6] || ' ' || toks[i+7])
+      |      ELSE [] END)) AS gram
+      |  FROM d),
+      |bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % 10 = 7)
+      |SELECT g.doc_id, count(*) AS n_hits
+      |FROM g JOIN bench USING (gram)
+      |WHERE g.doc_id % 10 <> 7
+      |GROUP BY g.doc_id ORDER BY g.doc_id""".stripMargin
+
+  /** Oracle prefix of q30/q44: the 16-bit SimHash votes per document as
+    * CTE `votes(doc_id, j, v)`, one md5 nibble per token and bit. */
+  private lazy val duckSimhashVotes: String =
+    """WITH d AS (SELECT doc_id,
+      |  list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> len(t) > 0) AS toks
+      |  FROM documents),
+      |toksd AS (SELECT DISTINCT doc_id, unnest(toks) AS tok FROM d),
+      |js AS (SELECT unnest(generate_series(1, 16)) AS j),
+      |votes AS (SELECT doc_id, j,
+      |  sum(CASE WHEN substr(md5(tok), j, 1) IN ('8','9','a','b','c','d','e','f')
+      |           THEN 1 ELSE -1 END) AS v
+      |  FROM toksd CROSS JOIN js GROUP BY doc_id, j)""".stripMargin
+
+  /** Oracle prefix of q143's recurring-crawl dedup: the history digests
+    * `hist(k)` (doc_id % 10 < 8), the delta batch (the doc_id % 10 >= 8
+    * tail plus re-ingested copies under +100000 and +200000) and its
+    * digests `dk(doc_id, k)` (q143, q145). */
+  private[queries] lazy val duckDeltaDigests: String =
+    """WITH hist AS (SELECT DISTINCT
+      |    md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS k
+      |  FROM documents WHERE doc_id % 10 < 8),
+      |delta AS (
+      |  SELECT doc_id, text FROM documents WHERE doc_id % 10 >= 8
+      |  UNION ALL SELECT doc_id + 100000, text FROM documents
+      |    WHERE doc_id % 10 = 0
+      |  UNION ALL SELECT doc_id + 200000, text FROM documents
+      |    WHERE doc_id % 10 = 8),
+      |dk AS (SELECT doc_id,
+      |    md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS k
+      |  FROM delta)""".stripMargin
+
   val all: Seq[Q] = Seq(
     // Exact n-gram Jaccard near-dup pairs (threshold 0.5) — the baseline
     // the LSH path is verified against.
@@ -338,14 +476,7 @@ object DedupQueries {
             col("jaccard"))
           .orderBy(col("doc_a"), col("doc_b"))
       },
-      Some(duckMinhash + """,
-        |cands AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        |          FROM bands x JOIN bands y
-        |            ON x.band = y.band AND x.band_key = y.band_key
-        |           AND x.doc_id < y.doc_id),
-        |common AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
-        |           FROM e a JOIN e b ON a.gram = b.gram AND a.doc_id < b.doc_id
-        |           GROUP BY 1, 2)
+      Some(duckBandCommon + """
         |SELECT c.doc_a, c.doc_b,
         |  CAST(common AS DOUBLE) / (sa.n + sb.n - common) AS jaccard
         |FROM cands c
@@ -437,16 +568,7 @@ object DedupQueries {
             "").as("simhash16"))
           .orderBy(col("doc_id"))
       },
-      Some(
-        """WITH d AS (SELECT doc_id,
-          |  list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> len(t) > 0) AS toks
-          |  FROM documents),
-          |toksd AS (SELECT DISTINCT doc_id, unnest(toks) AS tok FROM d),
-          |js AS (SELECT unnest(generate_series(1, 16)) AS j),
-          |votes AS (SELECT doc_id, j,
-          |  sum(CASE WHEN substr(md5(tok), j, 1) IN ('8','9','a','b','c','d','e','f')
-          |           THEN 1 ELSE -1 END) AS v
-          |  FROM toksd CROSS JOIN js GROUP BY doc_id, j)
+      Some(duckSimhashVotes + """
           |SELECT doc_id,
           |  string_agg(CASE WHEN v > 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS simhash16
           |FROM votes GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
@@ -513,16 +635,7 @@ object DedupQueries {
           .distinct()
           .orderBy(col("doc_a"), col("doc_b"))
       },
-      Some(
-        """WITH d AS (SELECT doc_id,
-          |  list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> len(t) > 0) AS toks
-          |  FROM documents),
-          |toksd AS (SELECT DISTINCT doc_id, unnest(toks) AS tok FROM d),
-          |js AS (SELECT unnest(generate_series(1, 16)) AS j),
-          |votes AS (SELECT doc_id, j,
-          |  sum(CASE WHEN substr(md5(tok), j, 1) IN ('8','9','a','b','c','d','e','f')
-          |           THEN 1 ELSE -1 END) AS v
-          |  FROM toksd CROSS JOIN js GROUP BY doc_id, j),
+      Some(duckSimhashVotes + """,
           |sh AS (SELECT doc_id,
           |  string_agg(CASE WHEN v > 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS simhash16
           |  FROM votes GROUP BY doc_id),
@@ -623,17 +736,7 @@ object DedupQueries {
     // never data.
     Q("q55_dedup_clusters",
       (s, dir) => clustersFrame(s, dir).orderBy(col("doc_id")),
-      Some(duckLshEdges.replaceFirst("WITH ", "WITH RECURSIVE ") + """,
-        |und AS (SELECT doc_a AS s, doc_b AS t FROM jp
-        |        UNION ALL SELECT doc_b, doc_a FROM jp),
-        |reach AS (SELECT s, t FROM und
-        |          UNION
-        |          SELECT r.s, u.t FROM reach r JOIN und u ON r.t = u.s
-        |          WHERE u.t <> r.s)
-        |SELECT d.doc_id,
-        |  least(d.doc_id, coalesce(min(r.t), d.doc_id)) AS cluster_id
-        |FROM documents d LEFT JOIN reach r ON d.doc_id = r.s
-        |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin)),
+      Some(duckClusters)),
 
     // The SAME cluster map as q55, computed by alternating star
     // contraction (large-star/small-star, Kiveris et al. 2014) instead of
@@ -652,17 +755,7 @@ object DedupQueries {
           Tables(s, dir, "documents").select(col("doc_id")),
           clusterEdges(s, dir))
         .orderBy(col("doc_id")),
-      Some(duckLshEdges.replaceFirst("WITH ", "WITH RECURSIVE ") + """,
-        |und AS (SELECT doc_a AS s, doc_b AS t FROM jp
-        |        UNION ALL SELECT doc_b, doc_a FROM jp),
-        |reach AS (SELECT s, t FROM und
-        |          UNION
-        |          SELECT r.s, u.t FROM reach r JOIN und u ON r.t = u.s
-        |          WHERE u.t <> r.s)
-        |SELECT d.doc_id,
-        |  least(d.doc_id, coalesce(min(r.t), d.doc_id)) AS cluster_id
-        |FROM documents d LEFT JOIN reach r ON d.doc_id = r.s
-        |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin)),
+      Some(duckClusters)),
 
     // INCREMENTAL connected components (Graphs.ccDelta) — the near-dup
     // (history split + shared labels frame: isHistDoc/histLabelsFrame
@@ -687,17 +780,7 @@ object DedupQueries {
           .ccDelta(histLabelsFrame(s, dir), deltaEdges, docs)
           .orderBy(col("doc_id"))
       },
-      Some(duckLshEdges.replaceFirst("WITH ", "WITH RECURSIVE ") + """,
-        |und AS (SELECT doc_a AS s, doc_b AS t FROM jp
-        |        UNION ALL SELECT doc_b, doc_a FROM jp),
-        |reach AS (SELECT s, t FROM und
-        |          UNION
-        |          SELECT r.s, u.t FROM reach r JOIN und u ON r.t = u.s
-        |          WHERE u.t <> r.s)
-        |SELECT d.doc_id,
-        |  least(d.doc_id, coalesce(min(r.t), d.doc_id)) AS cluster_id
-        |FROM documents d LEFT JOIN reach r ON d.doc_id = r.s
-        |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin)),
+      Some(duckClusters)),
 
     // Triangle participation in the near-dup graph
     // (graft.analytics.Graphs.triangleCounts) — the clique-density
@@ -756,13 +839,7 @@ object DedupQueries {
             round(avg(col("quality")), 6).as("avg_quality"))
           .orderBy(col("source"))
       },
-      Some(duckLshEdges.replaceFirst("WITH ", "WITH RECURSIVE ") + """,
-        |und AS (SELECT doc_a AS s, doc_b AS t FROM jp
-        |        UNION ALL SELECT doc_b, doc_a FROM jp),
-        |reach AS (SELECT s, t FROM und
-        |          UNION
-        |          SELECT r.s, u.t FROM reach r JOIN und u ON r.t = u.s
-        |          WHERE u.t <> r.s),
+      Some(duckClusterReach + """,
         |canon AS (SELECT dd.doc_id FROM documents dd
         |          LEFT JOIN reach r ON dd.doc_id = r.s
         |          GROUP BY dd.doc_id
@@ -873,21 +950,7 @@ object DedupQueries {
               col("__eb")), 6).as("cos_sim"))
           .orderBy(col("doc_a"), col("doc_b"))
       },
-      Some(duckMinhash + """,
-        |cands AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        |          FROM bands x JOIN bands y
-        |            ON x.band = y.band AND x.band_key = y.band_key
-        |           AND x.doc_id < y.doc_id),
-        |common AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
-        |           FROM e a JOIN e b ON a.gram = b.gram AND a.doc_id < b.doc_id
-        |           GROUP BY 1, 2),
-        |jac AS (SELECT c.doc_a, c.doc_b,
-        |    CAST(common AS DOUBLE) / (sa.n + sb.n - common) AS jaccard
-        |  FROM cands c
-        |  JOIN common m ON c.doc_a = m.doc_a AND c.doc_b = m.doc_b
-        |  JOIN sizes sa ON c.doc_a = sa.doc_id
-        |  JOIN sizes sb ON c.doc_b = sb.doc_id
-        |  WHERE CAST(common AS DOUBLE) / (sa.n + sb.n - common) >= 0.5),
+      Some(duckBandJaccard("jac") + """,
         |emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev
         |        FROM embeddings)
         |SELECT j.doc_a, j.doc_b, j.jaccard,
@@ -918,24 +981,7 @@ object DedupQueries {
           .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hits"))
           .orderBy(col("doc_id"))
       },
-      Some(
-        """WITH d AS (SELECT doc_id,
-          |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-          |                t -> len(t) > 0) AS toks
-          |  FROM documents),
-          |g AS (SELECT doc_id, unnest(list_distinct(
-          |    CASE WHEN len(toks) >= 8
-          |      THEN list_transform(generate_series(1, len(toks) - 7),
-          |        i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' '
-          |          || toks[i+3] || ' ' || toks[i+4] || ' ' || toks[i+5]
-          |          || ' ' || toks[i+6] || ' ' || toks[i+7])
-          |      ELSE [] END)) AS gram
-          |  FROM d),
-          |bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % 10 = 7)
-          |SELECT g.doc_id, count(*) AS n_hits
-          |FROM g JOIN bench USING (gram)
-          |WHERE g.doc_id % 10 <> 7
-          |GROUP BY g.doc_id ORDER BY g.doc_id""".stripMargin)),
+      Some(duckDecontam)),
 
     // Bloom-filter decontamination (graft.dedup.Dedup.bloomDecontaminate):
     // q71's semantics through the TRUE 100 TB membership shape — a Bloom
@@ -960,24 +1006,7 @@ object DedupQueries {
           cacheBench = b => Caches.frame(s, dir, "benchgrams")(b))
           .orderBy(col("doc_id"))
       },
-      Some(
-        """WITH d AS (SELECT doc_id,
-          |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-          |                t -> len(t) > 0) AS toks
-          |  FROM documents),
-          |g AS (SELECT doc_id, unnest(list_distinct(
-          |    CASE WHEN len(toks) >= 8
-          |      THEN list_transform(generate_series(1, len(toks) - 7),
-          |        i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' '
-          |          || toks[i+3] || ' ' || toks[i+4] || ' ' || toks[i+5]
-          |          || ' ' || toks[i+6] || ' ' || toks[i+7])
-          |      ELSE [] END)) AS gram
-          |  FROM d),
-          |bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % 10 = 7)
-          |SELECT g.doc_id, count(*) AS n_hits
-          |FROM g JOIN bench USING (gram)
-          |WHERE g.doc_id % 10 <> 7
-          |GROUP BY g.doc_id ORDER BY g.doc_id""".stripMargin)),
+      Some(duckDecontam)),
 
     // Embedding-cosine near-dup DECISION path (vs q31's exact top-k
     // baseline and q37's per-vector ANN): banded hyperplane LSH — the
@@ -1154,23 +1183,7 @@ object DedupQueries {
               6).as("est_jaccard"))
           .orderBy(col("doc_a"), col("doc_b"))
       },
-      Some(duckMinhash + s""",
-          |cands AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-          |          FROM bands x JOIN bands y
-          |            ON x.band = y.band AND x.band_key = y.band_key
-          |           AND x.doc_id < y.doc_id),
-          |common AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-          |                  count(*) AS common
-          |           FROM e a JOIN e b ON a.gram = b.gram
-          |             AND a.doc_id < b.doc_id
-          |           GROUP BY 1, 2),
-          |jac AS (SELECT c.doc_a, c.doc_b,
-          |    CAST(common AS DOUBLE) / (sa.n + sb.n - common) AS jaccard
-          |  FROM cands c
-          |  JOIN common m ON c.doc_a = m.doc_a AND c.doc_b = m.doc_b
-          |  JOIN sizes sa ON c.doc_a = sa.doc_id
-          |  JOIN sizes sb ON c.doc_b = sb.doc_id
-          |  WHERE CAST(common AS DOUBLE) / (sa.n + sb.n - common) >= 0.5),
+      Some(duckBandJaccard("jac") + s""",
           |m AS (SELECT j.doc_a, j.doc_b,
           |    count(*) FILTER (WHERE a.h = b.h) AS matches
           |  FROM jac j JOIN eh a ON a.doc_id = j.doc_a
@@ -1203,11 +1216,7 @@ object DedupQueries {
             levenshtein(col("__pa"), col("__pb")).as("edit_dist"))
           .orderBy(col("doc_a"), col("doc_b"))
       },
-      Some(duckMinhash + """,
-          |cands AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-          |          FROM bands x JOIN bands y
-          |            ON x.band = y.band AND x.band_key = y.band_key
-          |           AND x.doc_id < y.doc_id),
+      Some(duckBandCands + """,
           |pfx AS (SELECT doc_id,
           |    substr(regexp_replace(lower(text), '[^a-z0-9]+', '', 'g'),
           |           1, 100) AS pfx
@@ -1302,21 +1311,7 @@ object DedupQueries {
           .where(col("split_a") =!= col("split_b"))
           .orderBy(col("doc_a"), col("doc_b"))
       },
-      Some(duckMinhash + """,
-        |cands AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        |          FROM bands x JOIN bands y
-        |            ON x.band = y.band AND x.band_key = y.band_key
-        |           AND x.doc_id < y.doc_id),
-        |common AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
-        |           FROM e a JOIN e b ON a.gram = b.gram AND a.doc_id < b.doc_id
-        |           GROUP BY 1, 2),
-        |jp AS (SELECT c.doc_a, c.doc_b,
-        |         CAST(common AS DOUBLE) / (sa.n + sb.n - common) AS jaccard
-        |       FROM cands c
-        |       JOIN common m ON c.doc_a = m.doc_a AND c.doc_b = m.doc_b
-        |       JOIN sizes sa ON c.doc_a = sa.doc_id
-        |       JOIN sizes sb ON c.doc_b = sb.doc_id
-        |       WHERE CAST(common AS DOUBLE) / (sa.n + sb.n - common) >= 0.5),
+      Some(duckBandJaccard("jp") + """,
         |sp AS (SELECT doc_id,
         |         CASE WHEN uu < 0.8 THEN 'train'
         |              WHEN uu < 0.9 THEN 'val'
@@ -1376,14 +1371,7 @@ object DedupQueries {
           .orderBy(col("id_a"), col("id_b"))
       },
       Some(
-        s"""WITH d AS (SELECT doc_id, ${ExtQueries.duckTokens} AS toks
-          |  FROM documents),
-          |c AS (SELECT doc_id,
-          |    unnest(list_transform(generate_series(0, (len(toks) - 1) // 32),
-          |      i -> {'chunk_id': i,
-          |            'ctoks': toks[i * 32 + 1 : least(i * 32 + 32,
-          |                                             len(toks))]})) AS ch
-          |  FROM d WHERE len(toks) >= 1),
+        s"""${CurationQueries.duckChunks32},
           |un AS (
           |  SELECT doc_id * 100000 + ch.chunk_id AS uid, ch.ctoks AS toks
           |  FROM c
@@ -1507,19 +1495,7 @@ object DedupQueries {
             col("keep"))
           .orderBy(col("doc_id"))
       },
-      Some(
-        """WITH hist AS (SELECT DISTINCT
-          |    md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS k
-          |  FROM documents WHERE doc_id % 10 < 8),
-          |delta AS (
-          |  SELECT doc_id, text FROM documents WHERE doc_id % 10 >= 8
-          |  UNION ALL SELECT doc_id + 100000, text FROM documents
-          |    WHERE doc_id % 10 = 0
-          |  UNION ALL SELECT doc_id + 200000, text FROM documents
-          |    WHERE doc_id % 10 = 8),
-          |dk AS (SELECT doc_id,
-          |    md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS k
-          |  FROM delta),
+      Some(duckDeltaDigests + """,
           |f AS (SELECT k, min(doc_id) AS first_id,
           |    count(*) AS n_occ_delta FROM dk GROUP BY k)
           |SELECT dk.doc_id, f.n_occ_delta,
@@ -1647,19 +1623,7 @@ object DedupQueries {
             round(col("containment"), 6).as("containment"))
           .orderBy(col("probe_id"), col("doc_id"))
       },
-      Some(duckGrams + """,
-        |co AS (SELECT a.doc_id AS probe_id, b.doc_id AS doc_id,
-        |    count(*) AS common
-        |  FROM e a JOIN e b ON a.gram = b.gram
-        |  WHERE a.doc_id % 10 = 0 AND b.doc_id % 10 <> 0
-        |  GROUP BY 1, 2)
-        |SELECT probe_id, co.doc_id AS doc_id,
-        |  CAST(common AS INT) AS common,
-        |  round(common * 1.0 / sa.n, 6) AS containment
-        |FROM co
-        |JOIN sizes sa ON probe_id = sa.doc_id
-        |WHERE 5 * common >= 4 * sa.n
-        |ORDER BY probe_id, co.doc_id""".stripMargin)),
+      Some(duckContainment)),
 
     // DECREMENTAL connected components (Graphs.ccRetract) — the
     // takedown/GDPR path completing q206's add-only fold (r14 verdict
@@ -1681,20 +1645,7 @@ object DedupQueries {
             docs.where(col("doc_id") % 10 === 3))
           .orderBy(col("doc_id"))
       },
-      Some(duckLshEdges.replaceFirst("WITH ", "WITH RECURSIVE ") + """,
-        |jpr AS (SELECT doc_a, doc_b FROM jp
-        |        WHERE doc_a % 10 <> 3 AND doc_b % 10 <> 3),
-        |und AS (SELECT doc_a AS s, doc_b AS t FROM jpr
-        |        UNION ALL SELECT doc_b, doc_a FROM jpr),
-        |reach AS (SELECT s, t FROM und
-        |          UNION
-        |          SELECT r.s, u.t FROM reach r JOIN und u ON r.t = u.s
-        |          WHERE u.t <> r.s)
-        |SELECT d.doc_id,
-        |  least(d.doc_id, coalesce(min(r.t), d.doc_id)) AS cluster_id
-        |FROM documents d LEFT JOIN reach r ON d.doc_id = r.s
-        |WHERE d.doc_id % 10 <> 3
-        |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin)),
+      Some(duckRetainedClusters)),
 
     // EDGE-CACHE retraction (Dedup.retractEdges) — the r15 verdict's
     // task 6: q185's layouts and the IVF postings had takedown paths,

@@ -167,18 +167,17 @@ object ExtQueries {
     }
 
   /** The shared k=8 / 2-iteration quantizer: trained once per (session,
-    * dir) and reused by every trained-IVF query ([[Caches.cells]]). */
-  private[queries] def trainedCells(s: org.apache.spark.sql.SparkSession, dir: String)
-      : Array[(Int, Array[Double])] =
-    Caches.cells(s, dir, "k8_i2") {
+    * dir) and reused by every trained-IVF query. */
+  private[queries] def trainedCells(s: org.apache.spark.sql.SparkSession,
+      dir: String) =
+    Caches.memo[Array[(Int, Array[Double])]](s, dir, "cells/k8_i2") {
       graft.similarity.Similarity.trainCells(embFrame(s, dir), k = 8, iters = 2)
     }
 
   /** The shared m=8 / ksub=16 / 2-iteration PQ codebooks: trained once
-    * per (session, dir) and reused by q103/q104 ([[Caches.pq]]). */
-  private def trainedPq(s: org.apache.spark.sql.SparkSession, dir: String)
-      : Array[(Int, Int, Array[Double])] =
-    Caches.pq(s, dir, "m8_k16_i2") {
+    * per (session, dir) and reused by q103/q104. */
+  private def trainedPq(s: org.apache.spark.sql.SparkSession, dir: String) =
+    Caches.memo[Array[(Int, Int, Array[Double])]](s, dir, "pq/m8_k16_i2") {
       graft.similarity.Similarity
         .trainPq(embFrame(s, dir), m = 8, ksub = 16, iters = 2)
     }
@@ -197,9 +196,8 @@ object ExtQueries {
         graft.similarity.Similarity.permuteVec(col("e"), perm).as("e"))
     }
 
-  private def trainedOpqPq(s: org.apache.spark.sql.SparkSession, dir: String)
-      : Array[(Int, Int, Array[Double])] =
-    Caches.pq(s, dir, "opq_m8_k16_i2") {
+  private def trainedOpqPq(s: org.apache.spark.sql.SparkSession, dir: String) =
+    Caches.memo[Array[(Int, Int, Array[Double])]](s, dir, "pq/opq_m8_k16_i2") {
       graft.similarity.Similarity
         .trainPq(opqFrame(s, dir), m = 8, ksub = 16, iters = 2)
     }
@@ -209,9 +207,8 @@ object ExtQueries {
     * code — measured at sf0.1 this closes the entire quantized-ranking
     * recall gap (0.8825 → 0.9363 = the exact-scoring ceiling at p=4/a=2,
     * s=384; PLANS.md table). q118 oracle-gates this production config. */
-  private def trainedPq256(s: org.apache.spark.sql.SparkSession, dir: String)
-      : Array[(Int, Int, Array[Double])] =
-    Caches.pq(s, dir, "m8_k256_i2") {
+  private def trainedPq256(s: org.apache.spark.sql.SparkSession, dir: String) =
+    Caches.memo[Array[(Int, Int, Array[Double])]](s, dir, "pq/m8_k256_i2") {
       graft.similarity.Similarity
         .trainPq(embFrame(s, dir), m = 8, ksub = 256, iters = 2)
     }
@@ -250,6 +247,301 @@ object ExtQueries {
         .select(col("img_id"),
           lpad(bin(col("h")), 56, "0").as("fingerprint"))
     }
+
+  /** Oracle body of the probed IVF top-3 over [[ivfTrainCtes]] with
+    * `probes`: every vector's probed cells `aprobe` joined to the assigned
+    * corpus `afin`, ranked by rounded cosine then neighbor id (q67, q214). */
+  private lazy val duckProbedRank: String =
+    """
+      |SELECT vec_id, neighbor_id, cos_sim FROM (
+      |  SELECT q.vec_id AS vec_id, b.vec_id AS neighbor_id,
+      |    round(list_cosine_similarity(q.e, b.e), 6) AS cos_sim,
+      |    row_number() OVER (PARTITION BY q.vec_id
+      |      ORDER BY round(list_cosine_similarity(q.e, b.e), 6) DESC,
+      |        b.vec_id) AS rk
+      |  FROM aprobe q JOIN afin b ON q.cell = b.cell AND q.vec_id <> b.vec_id""".stripMargin
+
+  /** q214's oracle: the 2-probe top-3 over the k=8 quantizer with the
+    * vec_id % 10 == 3 takedown slice excluded on both sides — the ground
+    * truth of q214 and q221. */
+  private[queries] lazy val duckIvfRetract: String =
+    ivfTrainCtes(k = 8, iters = 2, dim = 64, probes = Some(2)) +
+      duckProbedRank + """
+      |  WHERE q.vec_id % 10 <> 3 AND b.vec_id % 10 <> 3
+      |) t WHERE rk <= 3 ORDER BY vec_id, neighbor_id""".stripMargin
+
+  /** Oracle prefix of q222/q223: the 3-probe ranking over a quantizer
+    * trained on the drifted embeddings (vec_id % 10 == 7 scaled by 3 and
+    * shifted by 0.5), epoch 1, up to the join of `aprobe` and `afin`. */
+  private lazy val duckDriftedRank: String =
+    ivfTrainCtes(k = 8, iters = 2, dim = 64, probes = Some(3),
+      embCte = """emb AS (SELECT vec_id, CASE WHEN vec_id % 10 = 7
+        |  THEN list_transform(CAST(embedding AS DOUBLE[]),
+        |       x -> x * 3.0 + 0.5)
+        |  ELSE CAST(embedding AS DOUBLE[]) END AS e FROM embeddings)"""
+        .stripMargin) + """
+      |SELECT vec_id, neighbor_id, cos_sim, CAST(1 AS BIGINT) AS epoch
+      |FROM (
+      |  SELECT q.vec_id AS vec_id, b.vec_id AS neighbor_id,
+      |    round(list_cosine_similarity(q.e, b.e), 6) AS cos_sim,
+      |    row_number() OVER (PARTITION BY q.vec_id
+      |      ORDER BY round(list_cosine_similarity(q.e, b.e), 6) DESC,
+      |        b.vec_id) AS rk
+      |  FROM aprobe q JOIN afin b ON q.cell = b.cell AND q.vec_id <> b.vec_id""".stripMargin
+
+  /** Oracle tail of the PQ-ADC searches (q104, q109, q118, q119): the ADC
+    * shortlist `pshort(vec_id, neighbor_id)` re-ranked by exact cosine over
+    * `emb`, top 3 per query. */
+  private lazy val duckPqRerank: String =
+    """SELECT vec_id, neighbor_id, cos_sim FROM (
+      |  SELECT sh.vec_id, sh.neighbor_id,
+      |    round(list_cosine_similarity(a.e, b.e), 6) AS cos_sim,
+      |    row_number() OVER (PARTITION BY sh.vec_id
+      |      ORDER BY round(list_cosine_similarity(a.e, b.e), 6) DESC,
+      |        sh.neighbor_id) AS rk
+      |  FROM pshort sh JOIN emb a ON a.vec_id = sh.vec_id
+      |  JOIN emb b ON b.vec_id = sh.neighbor_id) t
+      |WHERE rk <= 3 ORDER BY vec_id, neighbor_id""".stripMargin
+
+  /** Oracle tail of the single-probe PQ-ADC searches (q104, q118): the
+    * ADC score of every same-cell pair as `padc`, the top-20 shortlist
+    * `pshort` and its exact re-rank [[duckPqRerank]]. */
+  private lazy val duckPqCellSearch: String =
+    s""",
+       |padc AS (SELECT q.vec_id AS vec_id, b.vec_id AS neighbor_id,
+       |    round(list_aggregate(list_transform(generate_series(1, 8),
+       |      s -> l.lut[s][c.codes[s] + 1]), 'sum') / c.cnrm, 6) AS adc
+       |  FROM afin q JOIN afin b ON q.cell = b.cell
+       |    AND q.vec_id <> b.vec_id
+       |  JOIN plut l ON l.vec_id = q.vec_id
+       |  JOIN pcodes c ON c.vec_id = b.vec_id),
+       |pshort AS (SELECT vec_id, neighbor_id FROM (
+       |    SELECT vec_id, neighbor_id, row_number() OVER (
+       |      PARTITION BY vec_id ORDER BY adc DESC, neighbor_id) AS rk
+       |    FROM padc) t WHERE rk <= 20)
+       |$duckPqRerank""".stripMargin
+
+  /** Oracle prefix of q76's BM25 (k1 = 1.5, b = 0.75) over the query terms
+    * 'join', 'vector' and 'dup': one CTE `s(doc_id, s)` per (document,
+    * matched term) — the ground truth of q76 and q172's BM25 list. */
+  private[queries] lazy val duckBm25: String =
+    """WITH dl AS (SELECT doc_id,
+      |    len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS dl
+      |  FROM documents),
+      |c AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM dl),
+      |tf AS (SELECT doc_id, tok, count(*) AS tf FROM (
+      |    SELECT doc_id, unnest(list_filter(
+      |      string_split_regex(lower(text), '[^a-z0-9]+'),
+      |      t -> len(t) > 0)) AS tok
+      |    FROM documents)
+      |  WHERE tok IN ('join', 'vector', 'dup') GROUP BY 1, 2),
+      |df AS (SELECT tok, count(DISTINCT doc_id) AS df FROM tf GROUP BY 1),
+      |s AS (SELECT tf.doc_id,
+      |    ln(CAST(1.0 AS DOUBLE)
+      |       + (c.n - df.df + CAST(0.5 AS DOUBLE))
+      |         / (df.df + CAST(0.5 AS DOUBLE)))
+      |    * (tf.tf * CAST(2.5 AS DOUBLE))
+      |      / (tf.tf + CAST(1.5 AS DOUBLE)
+      |         * (CAST(0.25 AS DOUBLE)
+      |            + CAST(0.75 AS DOUBLE) * dl.dl / c.avgdl)) AS s
+      |  FROM tf JOIN df USING (tok) JOIN dl USING (doc_id) CROSS JOIN c)""".stripMargin
+
+  /** Oracle CTEs of the bigram counts over `d(doc_id, toks)`: per-document
+    * bigram counts `bgc(doc_id, w1, w2, c)` and corpus counts
+    * `cb(w1, w2, c2)` (q87, q182). */
+  private lazy val duckBigramCounts: String =
+    """bg AS (SELECT doc_id,
+      |    unnest(list_transform(generate_series(1, len(toks) - 1),
+      |      i -> {'w1': toks[i], 'w2': toks[i + 1]})) AS b
+      |  FROM d WHERE len(toks) >= 2),
+      |bgc AS (SELECT doc_id, b.w1 AS w1, b.w2 AS w2, count(*) AS c
+      |  FROM bg GROUP BY 1, 2, 3),
+      |cb AS (SELECT w1, w2, sum(c) AS c2 FROM bgc GROUP BY 1, 2)""".stripMargin
+
+  /** q115's oracle: per-channel pixel sums of the synthetic BMP rasters —
+    * the ground truth of q115 and of q156's BMP → PNG transcode. */
+  private lazy val duckBmpPixels: String =
+    """WITH d AS (SELECT doc_id,
+      |    CAST(3 + doc_id % 5 AS INT) AS width,
+      |    CAST(2 + doc_id % 4 AS INT) AS height
+      |  FROM documents),
+      |px AS (SELECT doc_id, width, height,
+      |    unnest(generate_series(0, width * height * 3 - 1)) AS i
+      |  FROM d)
+      |SELECT doc_id, width, height,
+      |  CAST(sum(CASE WHEN i % 3 = 0 THEN (doc_id * 37 + i) % 256 END)
+      |    AS BIGINT) AS sum_r,
+      |  CAST(sum(CASE WHEN i % 3 = 1 THEN (doc_id * 37 + i) % 256 END)
+      |    AS BIGINT) AS sum_g,
+      |  CAST(sum(CASE WHEN i % 3 = 2 THEN (doc_id * 37 + i) % 256 END)
+      |    AS BIGINT) AS sum_b
+      |FROM px GROUP BY doc_id, width, height ORDER BY doc_id""".stripMargin
+
+  /** Oracle tail of q181/q204: every pair of `fp(doc_id, fingerprint)`
+    * 32-bit fingerprints within Hamming distance 3. */
+  private lazy val duckFingerprintPairs: String =
+    """pairs AS (SELECT x.doc_id AS id_a, y.doc_id AS id_b,
+      |    CAST(len(list_filter(range(1, 33), i ->
+      |      substr(x.fingerprint, CAST(i AS INT), 1)
+      |        <> substr(y.fingerprint, CAST(i AS INT), 1)))
+      |      AS INT) AS hamming
+      |  FROM fp x JOIN fp y ON x.doc_id < y.doc_id)
+      |SELECT id_a, id_b, hamming FROM pairs
+      |WHERE hamming <= 3 ORDER BY id_a, id_b""".stripMargin
+
+  /** The media columns of q146's oracle: each document's synthetic media
+    * kind and the width, height and frame count its decoder must report. */
+  private lazy val duckMediaCols: String =
+    """SELECT doc_id,
+      |  CASE doc_id % 9 WHEN 0 THEN 'image/ppm' WHEN 1 THEN 'image/bmp'
+      |    WHEN 2 THEN 'image/png' WHEN 3 THEN 'audio/wav'
+      |    WHEN 4 THEN 'video/y4m' WHEN 5 THEN 'image/gif'
+      |    WHEN 6 THEN 'image/jpeg' WHEN 7 THEN 'audio/mp3'
+      |    ELSE 'video/h264' END AS kind,
+      |  CAST(CASE doc_id % 9
+      |    WHEN 0 THEN 4 + doc_id % 5 WHEN 1 THEN 3 + doc_id % 5
+      |    WHEN 2 THEN 3 + doc_id % 5
+      |    WHEN 3 THEN 1 + doc_id % 2
+      |    WHEN 4 THEN 3 + doc_id % 3
+      |    WHEN 5 THEN 3 + doc_id % 5
+      |    WHEN 6 THEN 10 + doc_id % 23
+      |    WHEN 7 THEN CASE WHEN doc_id % 4 = 3 THEN 1 ELSE 2 END
+      |    ELSE 16 * (2 + doc_id % 6)
+      |      - CASE WHEN doc_id % 2 = 0 THEN 2 ELSE 0 END
+      |    END AS INT) AS width,
+      |  CAST(CASE doc_id % 9
+      |    WHEN 0 THEN 3 + doc_id % 4 WHEN 1 THEN 2 + doc_id % 4
+      |    WHEN 2 THEN 5 + doc_id % 4
+      |    WHEN 3 THEN 8000 + (doc_id % 3) * 4000
+      |    WHEN 4 THEN 2 + doc_id % 3
+      |    WHEN 5 THEN 4 + doc_id % 4
+      |    WHEN 6 THEN 10 + doc_id % 17
+      |    WHEN 7 THEN CASE doc_id % 3 WHEN 0 THEN 44100
+      |      WHEN 1 THEN 48000 ELSE 32000 END
+      |    ELSE 16 * (2 + doc_id % 4)
+      |      - CASE WHEN doc_id % 2 = 0 THEN 2 ELSE 0 END
+      |    END AS INT) AS height,
+      |  CAST(CASE doc_id % 9
+      |    WHEN 3 THEN 20 + doc_id % 7
+      |    WHEN 4 THEN 3 + doc_id % 4
+      |    WHEN 7 THEN 8 + doc_id % 5
+      |    WHEN 8 THEN (2 + doc_id % 3) * (2 + doc_id % 4)
+      |    ELSE 1 END AS INT) AS n_frames""".stripMargin
+
+  /** q146's oracle: [[duckMediaCols]] per document — the ground truth of
+    * q146 and of q152's streamed decode. */
+  private[queries] lazy val duckMedia: String =
+    duckMediaCols + "\nFROM documents ORDER BY doc_id"
+
+  /** Oracle prefix of the image dedup family (q158, q161): the base
+    * corpus plus a perturbed re-ingest of every 3rd doc as `imgs`, their
+    * 56-bit dHash as `hs(img_id, hash)` and one representative image per
+    * hash as `reps(hash, rep)`. */
+  private lazy val duckImageReps: String =
+    """WITH imgs AS (
+      |  SELECT doc_id AS img_id, doc_id, 0 AS pert FROM documents
+      |  UNION ALL
+      |  SELECT doc_id + 100000, doc_id, 1 FROM documents
+      |  WHERE doc_id % 3 = 0),
+      |dims AS (SELECT img_id, doc_id, pert,
+      |    CAST(4 + doc_id % 5 AS INT) AS w,
+      |    CAST(3 + doc_id % 4 AS INT) AS h
+      |  FROM imgs),
+      |ys AS (SELECT unnest(generate_series(0, 7)) AS y),
+      |xs AS (SELECT unnest(generate_series(0, 7)) AS x),
+      |cell AS (SELECT img_id, doc_id, pert, y, x,
+      |    ((y * h // 8) * w + (x * w // 8)) * 3 AS i0
+      |  FROM dims CROSS JOIN ys CROSS JOIN xs),
+      |g AS (SELECT img_id, y, x,
+      |    ((CASE WHEN pert = 1 AND i0 = 0 THEN (doc_id * 31 + 128) % 256
+      |           ELSE (doc_id * 31 + i0) % 256 END)
+      |      + (doc_id * 31 + i0 + 1) % 256
+      |      + (doc_id * 31 + i0 + 2) % 256) // 3 AS gv
+      |  FROM cell),
+      |bits AS (SELECT a.img_id, a.y, a.x,
+      |    CASE WHEN b.gv > a.gv THEN 1 ELSE 0 END AS bit
+      |  FROM g a JOIN g b ON a.img_id = b.img_id AND a.y = b.y
+      |    AND b.x = a.x + 1
+      |  WHERE a.x < 7),
+      |hs AS (SELECT img_id,
+      |    CAST(sum(bit * (CAST(1 AS BIGINT) << (y * 7 + x)))
+      |      AS BIGINT) AS hash
+      |  FROM bits GROUP BY img_id),
+      |reps AS (SELECT hash, min(img_id) AS rep FROM hs GROUP BY hash)""".stripMargin
+
+  /** Oracle CTEs `d$n`/`a$n` of integer Lloyd step `n` over the points
+    * `pts(vec_id, d, v)`: squared-L2 distance to every centroid of
+    * `c{n-1}` and the packed argmin `comb = dist * 2^20 + cid`. */
+  private def duckLloydAssign(pts: String, n: Int): String =
+    s"""d$n AS (SELECT $pts.vec_id AS vec_id, c.cid AS cid,
+       |    sum(($pts.v - c.v) * ($pts.v - c.v)) AS dist
+       |  FROM $pts JOIN c${n - 1} c ON $pts.d = c.d GROUP BY 1, 2),
+       |a$n AS (SELECT vec_id, min(dist * 1048576 + cid) AS comb
+       |  FROM d$n GROUP BY 1)""".stripMargin
+
+  /** One integer Lloyd step over `pts(vec_id, d, v)`: [[duckLloydAssign]]
+    * plus the floor-mean centroid update `c$n` — the DuckDB ground truth
+    * of [[graft.similarity.Clustering.lloydCentroids]] (q144, q147, q163,
+    * q164, q203, q205). */
+  private def duckLloydStep(pts: String, n: Int): String =
+    s"""${duckLloydAssign(pts, n)},
+       |m$n AS (SELECT vec_id, comb % 1048576 AS cid FROM a$n),
+       |c$n AS (SELECT m.cid AS cid, $pts.d AS d,
+       |    CAST(floor(CAST(sum($pts.v) AS DOUBLE) / count(*)) AS BIGINT)
+       |      AS v
+       |  FROM $pts JOIN m$n m USING (vec_id) GROUP BY 1, 2)""".stripMargin
+
+  /** Oracle prefix of q144/q164: the embeddings quantized to integer
+    * milli-units as `qd(vec_id, d, v)` and the 4 lowest ids as the seed
+    * centroids `c0`. */
+  private lazy val duckLloydSeeds: String =
+    """WITH q AS (SELECT vec_id,
+      |    unnest(list_transform(embedding, (x, i) -> {'d': i,
+      |      'v': CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT)})) AS e
+      |  FROM embeddings),
+      |qd AS (SELECT vec_id, e.d AS d, e.v AS v FROM q),
+      |seeds AS (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT 4),
+      |c0 AS (SELECT qd.vec_id AS cid, d, v
+      |  FROM qd JOIN seeds USING (vec_id))""".stripMargin
+
+  /** Oracle prefix of q147/q163: the SemDeDup corpus (embeddings plus a
+    * perturbed copy of every 50th vector) quantized as `qd(vec_id, d, v)`,
+    * with the 4 lowest ids as the seed centroids `c0`. */
+  private lazy val duckSemdedupSeeds: String =
+    """WITH corpus AS (
+      |  SELECT vec_id,
+      |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS embedding
+      |  FROM embeddings
+      |  UNION ALL
+      |  SELECT vec_id + 100000, list_transform(embedding,
+      |    (x, i) -> CASE WHEN i = 1 THEN CAST(x AS DOUBLE) + 0.5
+      |                   ELSE CAST(x AS DOUBLE) END)
+      |  FROM embeddings WHERE vec_id % 50 = 0),
+      |q AS (SELECT vec_id,
+      |    unnest(list_transform(embedding, (x, i) -> {'d': i,
+      |      'v': CAST(floor(x * 1000) AS BIGINT)})) AS e
+      |  FROM corpus),
+      |qd AS (SELECT vec_id, e.d AS d, e.v AS v FROM q),
+      |seeds AS (SELECT vec_id FROM corpus ORDER BY vec_id LIMIT 4),
+      |c0 AS (SELECT qd.vec_id AS cid, d, v
+      |  FROM qd JOIN seeds USING (vec_id))""".stripMargin
+
+  /** Oracle prefix of q203/q205: k=4 centroids trained by two integer
+    * Lloyd steps over the history `h` (vec_id % 10 != 7) as `c2`, with the
+    * whole quantized table as `qd(vec_id, d, v)`. */
+  private[queries] lazy val duckHistCentroids: String =
+    s"""WITH q AS (SELECT vec_id,
+       |    unnest(list_transform(embedding, (x, i) -> {'d': i,
+       |      'v': CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT)})) AS e
+       |  FROM embeddings),
+       |qd AS (SELECT vec_id, e.d AS d, e.v AS v FROM q),
+       |h AS (SELECT * FROM qd WHERE vec_id % 10 != 7),
+       |seeds AS (SELECT vec_id FROM embeddings WHERE vec_id % 10 != 7
+       |  ORDER BY vec_id LIMIT 4),
+       |c0 AS (SELECT h.vec_id AS cid, d, v
+       |  FROM h JOIN seeds USING (vec_id)),
+       |${duckLloydStep("h", 1)},
+       |${duckLloydStep("h", 2)}""".stripMargin
 
   val all: Seq[Q] = Seq(
     // ---- Deduplication -------------------------------------------------
@@ -444,14 +736,7 @@ object ExtQueries {
           .orderBy(col("vec_id"), col("neighbor_id"))
       },
       Some(ivfTrainCtes(k = 8, iters = 2, dim = 64, probes = Some(3)) +
-        """
-          |SELECT vec_id, neighbor_id, cos_sim FROM (
-          |  SELECT q.vec_id AS vec_id, b.vec_id AS neighbor_id,
-          |    round(list_cosine_similarity(q.e, b.e), 6) AS cos_sim,
-          |    row_number() OVER (PARTITION BY q.vec_id
-          |      ORDER BY round(list_cosine_similarity(q.e, b.e), 6) DESC,
-          |        b.vec_id) AS rk
-          |  FROM aprobe q JOIN afin b ON q.cell = b.cell AND q.vec_id <> b.vec_id
+        duckProbedRank + """
           |) t WHERE rk <= 3 ORDER BY vec_id, neighbor_id""".stripMargin)),
 
     // ANN index DELETION (Similarity.ivfTombstoneTopK) — the
@@ -480,17 +765,7 @@ object ExtQueries {
           .select(col("vec_id"), col("neighbor_id"), col("cos_sim"))
           .orderBy(col("vec_id"), col("neighbor_id"))
       },
-      Some(ivfTrainCtes(k = 8, iters = 2, dim = 64, probes = Some(2)) +
-        """
-          |SELECT vec_id, neighbor_id, cos_sim FROM (
-          |  SELECT q.vec_id AS vec_id, b.vec_id AS neighbor_id,
-          |    round(list_cosine_similarity(q.e, b.e), 6) AS cos_sim,
-          |    row_number() OVER (PARTITION BY q.vec_id
-          |      ORDER BY round(list_cosine_similarity(q.e, b.e), 6) DESC,
-          |        b.vec_id) AS rk
-          |  FROM aprobe q JOIN afin b ON q.cell = b.cell AND q.vec_id <> b.vec_id
-          |  WHERE q.vec_id % 10 <> 3 AND b.vec_id % 10 <> 3
-          |) t WHERE rk <= 3 ORDER BY vec_id, neighbor_id""".stripMargin)),
+      Some(duckIvfRetract)),
 
     // The full recommended ANN configuration (round-6): query side probes
     // its p=4 nearest trained cells, the candidate INDEX holds each vector
@@ -603,27 +878,8 @@ object ExtQueries {
           .select(col("vec_id"), col("neighbor_id"), col("cos_sim"))
           .orderBy(col("vec_id"), col("neighbor_id")),
       Some(ivfTrainCtes(k = 8, iters = 2, dim = 64) + ",\n" +
-        pqCtes(m = 8, ksub = 16, iters = 2, sd = 8, adc = true) + """,
-          |padc AS (SELECT q.vec_id AS vec_id, b.vec_id AS neighbor_id,
-          |    round(list_aggregate(list_transform(generate_series(1, 8),
-          |      s -> l.lut[s][c.codes[s] + 1]), 'sum') / c.cnrm, 6) AS adc
-          |  FROM afin q JOIN afin b ON q.cell = b.cell
-          |    AND q.vec_id <> b.vec_id
-          |  JOIN plut l ON l.vec_id = q.vec_id
-          |  JOIN pcodes c ON c.vec_id = b.vec_id),
-          |pshort AS (SELECT vec_id, neighbor_id FROM (
-          |    SELECT vec_id, neighbor_id, row_number() OVER (
-          |      PARTITION BY vec_id ORDER BY adc DESC, neighbor_id) AS rk
-          |    FROM padc) t WHERE rk <= 20)
-          |SELECT vec_id, neighbor_id, cos_sim FROM (
-          |  SELECT sh.vec_id, sh.neighbor_id,
-          |    round(list_cosine_similarity(a.e, b.e), 6) AS cos_sim,
-          |    row_number() OVER (PARTITION BY sh.vec_id
-          |      ORDER BY round(list_cosine_similarity(a.e, b.e), 6) DESC,
-          |        sh.neighbor_id) AS rk
-          |  FROM pshort sh JOIN emb a ON a.vec_id = sh.vec_id
-          |  JOIN emb b ON b.vec_id = sh.neighbor_id) t
-          |WHERE rk <= 3 ORDER BY vec_id, neighbor_id""".stripMargin)),
+        pqCtes(m = 8, ksub = 16, iters = 2, sd = 8, adc = true) +
+        duckPqCellSearch)),
 
     // Multi-probe IVF-PQ (round 7): q104's two-quantizer search with the
     // query probing its 2 nearest cells — the recall knob composed with
@@ -644,7 +900,7 @@ object ExtQueries {
           .orderBy(col("vec_id"), col("neighbor_id")),
       Some(ivfTrainCtes(k = 8, iters = 2, dim = 64, probes = Some(2)) +
         ",\n" +
-        pqCtes(m = 8, ksub = 16, iters = 2, sd = 8, adc = true) + """,
+        pqCtes(m = 8, ksub = 16, iters = 2, sd = 8, adc = true) + s""",
           |padc AS (SELECT q.vec_id AS vec_id, b.vec_id AS neighbor_id,
           |    round(list_aggregate(list_transform(generate_series(1, 8),
           |      s -> l.lut[s][c.codes[s] + 1]), 'sum') / c.cnrm, 6) AS adc
@@ -656,15 +912,7 @@ object ExtQueries {
           |    SELECT vec_id, neighbor_id, row_number() OVER (
           |      PARTITION BY vec_id ORDER BY adc DESC, neighbor_id) AS rk
           |    FROM padc) t WHERE rk <= 40)
-          |SELECT vec_id, neighbor_id, cos_sim FROM (
-          |  SELECT sh.vec_id, sh.neighbor_id,
-          |    round(list_cosine_similarity(a.e, b.e), 6) AS cos_sim,
-          |    row_number() OVER (PARTITION BY sh.vec_id
-          |      ORDER BY round(list_cosine_similarity(a.e, b.e), 6) DESC,
-          |        sh.neighbor_id) AS rk
-          |  FROM pshort sh JOIN emb a ON a.vec_id = sh.vec_id
-          |  JOIN emb b ON b.vec_id = sh.neighbor_id) t
-          |WHERE rk <= 3 ORDER BY vec_id, neighbor_id""".stripMargin)),
+          |$duckPqRerank""".stripMargin)),
 
     // IVF-PQ at the 1-BYTE-CODE operating point (m=8, ksub=256): the SAME
     // 8-byte-per-vector index budget as q104's m8/k16, spending the full
@@ -685,27 +933,8 @@ object ExtQueries {
           .select(col("vec_id"), col("neighbor_id"), col("cos_sim"))
           .orderBy(col("vec_id"), col("neighbor_id")),
       Some(ivfTrainCtes(k = 8, iters = 2, dim = 64) + ",\n" +
-        pqCtes(m = 8, ksub = 256, iters = 2, sd = 8, adc = true) + """,
-          |padc AS (SELECT q.vec_id AS vec_id, b.vec_id AS neighbor_id,
-          |    round(list_aggregate(list_transform(generate_series(1, 8),
-          |      s -> l.lut[s][c.codes[s] + 1]), 'sum') / c.cnrm, 6) AS adc
-          |  FROM afin q JOIN afin b ON q.cell = b.cell
-          |    AND q.vec_id <> b.vec_id
-          |  JOIN plut l ON l.vec_id = q.vec_id
-          |  JOIN pcodes c ON c.vec_id = b.vec_id),
-          |pshort AS (SELECT vec_id, neighbor_id FROM (
-          |    SELECT vec_id, neighbor_id, row_number() OVER (
-          |      PARTITION BY vec_id ORDER BY adc DESC, neighbor_id) AS rk
-          |    FROM padc) t WHERE rk <= 20)
-          |SELECT vec_id, neighbor_id, cos_sim FROM (
-          |  SELECT sh.vec_id, sh.neighbor_id,
-          |    round(list_cosine_similarity(a.e, b.e), 6) AS cos_sim,
-          |    row_number() OVER (PARTITION BY sh.vec_id
-          |      ORDER BY round(list_cosine_similarity(a.e, b.e), 6) DESC,
-          |        sh.neighbor_id) AS rk
-          |  FROM pshort sh JOIN emb a ON a.vec_id = sh.vec_id
-          |  JOIN emb b ON b.vec_id = sh.neighbor_id) t
-          |WHERE rk <= 3 ORDER BY vec_id, neighbor_id""".stripMargin),
+        pqCtes(m = 8, ksub = 256, iters = 2, sd = 8, adc = true) +
+        duckPqCellSearch),
       bench = false),
 
     // The TWO-TABLE IVF-PQ search (Similarity.pqAdcSearchTopK) — the
@@ -731,7 +960,7 @@ object ExtQueries {
       },
       Some(ivfTrainCtes(k = 8, iters = 2, dim = 64, probes = Some(2)) +
         ",\n" +
-        pqCtes(m = 8, ksub = 16, iters = 2, sd = 8, adc = true) + """,
+        pqCtes(m = 8, ksub = 16, iters = 2, sd = 8, adc = true) + s""",
           |padc AS (SELECT q.vec_id AS vec_id, b.vec_id AS neighbor_id,
           |    round(list_aggregate(list_transform(generate_series(1, 8),
           |      s -> l.lut[s][c.codes[s] + 1]), 'sum') / c.cnrm, 6) AS adc
@@ -743,15 +972,7 @@ object ExtQueries {
           |    SELECT vec_id, neighbor_id, row_number() OVER (
           |      PARTITION BY vec_id ORDER BY adc DESC, neighbor_id) AS rk
           |    FROM padc) t WHERE rk <= 20)
-          |SELECT vec_id, neighbor_id, cos_sim FROM (
-          |  SELECT sh.vec_id, sh.neighbor_id,
-          |    round(list_cosine_similarity(a.e, b.e), 6) AS cos_sim,
-          |    row_number() OVER (PARTITION BY sh.vec_id
-          |      ORDER BY round(list_cosine_similarity(a.e, b.e), 6) DESC,
-          |        sh.neighbor_id) AS rk
-          |  FROM pshort sh JOIN emb a ON a.vec_id = sh.vec_id
-          |  JOIN emb b ON b.vec_id = sh.neighbor_id) t
-          |WHERE rk <= 3 ORDER BY vec_id, neighbor_id""".stripMargin)),
+          |$duckPqRerank""".stripMargin)),
 
     // SemDeDup (Abbas et al. 2023): semantic dedup composed from the
     // trained-IVF pieces. Round-6: the pair stage runs on the p=2
@@ -798,27 +1019,7 @@ object ExtQueries {
             queryTokens = Seq("join", "vector", "dup"))
           .orderBy(col("score").desc, col("doc_id"))
           .limit(20),
-      Some(
-        """WITH dl AS (SELECT doc_id,
-          |    len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS dl
-          |  FROM documents),
-          |c AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM dl),
-          |tf AS (SELECT doc_id, tok, count(*) AS tf FROM (
-          |    SELECT doc_id, unnest(list_filter(
-          |      string_split_regex(lower(text), '[^a-z0-9]+'),
-          |      t -> len(t) > 0)) AS tok
-          |    FROM documents)
-          |  WHERE tok IN ('join', 'vector', 'dup') GROUP BY 1, 2),
-          |df AS (SELECT tok, count(DISTINCT doc_id) AS df FROM tf GROUP BY 1),
-          |s AS (SELECT tf.doc_id,
-          |    ln(CAST(1.0 AS DOUBLE)
-          |       + (c.n - df.df + CAST(0.5 AS DOUBLE))
-          |         / (df.df + CAST(0.5 AS DOUBLE)))
-          |    * (tf.tf * CAST(2.5 AS DOUBLE))
-          |      / (tf.tf + CAST(1.5 AS DOUBLE)
-          |         * (CAST(0.25 AS DOUBLE)
-          |            + CAST(0.75 AS DOUBLE) * dl.dl / c.avgdl)) AS s
-          |  FROM tf JOIN df USING (tok) JOIN dl USING (doc_id) CROSS JOIN c)
+      Some(duckBm25 + """
           |SELECT doc_id, count(*) AS n_hit, round(sum(s), 6) AS score
           |FROM s GROUP BY doc_id
           |ORDER BY score DESC, doc_id LIMIT 20""".stripMargin)),
@@ -842,13 +1043,7 @@ object ExtQueries {
           |tok AS (SELECT unnest(toks) AS w1 FROM d),
           |uni AS (SELECT w1, count(*) AS c1 FROM tok GROUP BY 1),
           |v AS (SELECT count(DISTINCT w1) AS v FROM tok),
-          |bg AS (SELECT doc_id,
-          |    unnest(list_transform(generate_series(1, len(toks) - 1),
-          |      i -> {'w1': toks[i], 'w2': toks[i + 1]})) AS b
-          |  FROM d WHERE len(toks) >= 2),
-          |bgc AS (SELECT doc_id, b.w1 AS w1, b.w2 AS w2, count(*) AS c
-          |  FROM bg GROUP BY 1, 2, 3),
-          |cb AS (SELECT w1, w2, sum(c) AS c2 FROM bgc GROUP BY 1, 2),
+          |$duckBigramCounts,
           |sc AS (SELECT g.doc_id, g.c,
           |    ln((cb.c2 + CAST(1.0 AS DOUBLE)) / (uni.c1 + v.v)) AS lp
           |  FROM bgc g JOIN cb USING (w1, w2) JOIN uni USING (w1)
@@ -873,13 +1068,7 @@ object ExtQueries {
           .orderBy(col("doc_id")),
       Some(
         s"""WITH d AS (SELECT doc_id, $duckTokens AS toks FROM documents),
-          |bg AS (SELECT doc_id,
-          |    unnest(list_transform(generate_series(1, len(toks) - 1),
-          |      i -> {'w1': toks[i], 'w2': toks[i + 1]})) AS b
-          |  FROM d WHERE len(toks) >= 2),
-          |bgc AS (SELECT doc_id, b.w1 AS w1, b.w2 AS w2, count(*) AS c
-          |  FROM bg GROUP BY 1, 2, 3),
-          |cb AS (SELECT w1, w2, sum(c) AS c2 FROM bgc GROUP BY 1, 2),
+          |$duckBigramCounts,
           |ls AS (SELECT w1, sum(c2) AS cw1, count(*) AS n1f
           |  FROM cb GROUP BY 1),
           |rc AS (SELECT w2, count(*) AS n1b FROM cb GROUP BY 1),
@@ -973,22 +1162,7 @@ object ExtQueries {
         graft.ext.Multimodal.bmpPixelStats(files).toDF()
           .orderBy(col("doc_id"))
       },
-      Some(
-        """WITH d AS (SELECT doc_id,
-          |    CAST(3 + doc_id % 5 AS INT) AS width,
-          |    CAST(2 + doc_id % 4 AS INT) AS height
-          |  FROM documents),
-          |px AS (SELECT doc_id, width, height,
-          |    unnest(generate_series(0, width * height * 3 - 1)) AS i
-          |  FROM d)
-          |SELECT doc_id, width, height,
-          |  CAST(sum(CASE WHEN i % 3 = 0 THEN (doc_id * 37 + i) % 256 END)
-          |    AS BIGINT) AS sum_r,
-          |  CAST(sum(CASE WHEN i % 3 = 1 THEN (doc_id * 37 + i) % 256 END)
-          |    AS BIGINT) AS sum_g,
-          |  CAST(sum(CASE WHEN i % 3 = 2 THEN (doc_id * 37 + i) % 256 END)
-          |    AS BIGINT) AS sum_b
-          |FROM px GROUP BY doc_id, width, height ORDER BY doc_id""".stripMargin)),
+      Some(duckBmpPixels)),
 
     // The THIRD real decode format, and the first AUDIO one: each
     // document becomes a genuine PCM WAV byte stream (RIFF chunk
@@ -1055,7 +1229,7 @@ object ExtQueries {
           .orderBy(col("id_a"), col("id_b"))
       },
       Some(
-        """WITH d AS (SELECT doc_id, doc_id % 63 AS fam FROM documents
+        s"""WITH d AS (SELECT doc_id, doc_id % 63 AS fam FROM documents
           |  WHERE doc_id % 9 = 3),
           |f AS (SELECT doc_id, fam,
           |    unnest(generate_series(0, 32)) AS k FROM d),
@@ -1069,14 +1243,7 @@ object ExtQueries {
           |      ORDER BY a.k) AS fingerprint
           |  FROM e a JOIN e b ON a.doc_id = b.doc_id AND b.k = a.k + 1
           |  GROUP BY a.doc_id),
-          |pairs AS (SELECT x.doc_id AS id_a, y.doc_id AS id_b,
-          |    CAST(len(list_filter(range(1, 33), i ->
-          |      substr(x.fingerprint, CAST(i AS INT), 1)
-          |        <> substr(y.fingerprint, CAST(i AS INT), 1)))
-          |      AS INT) AS hamming
-          |  FROM fp x JOIN fp y ON x.doc_id < y.doc_id)
-          |SELECT id_a, id_b, hamming FROM pairs
-          |WHERE hamming <= 3 ORDER BY id_a, id_b""".stripMargin)),
+          |$duckFingerprintPairs""".stripMargin)),
 
     // VIDEO near-dup fingerprinting (Multimodal.y4mFingerprints): the
     // last modality joins the shared near-dup machinery — frame-luma-sum
@@ -1102,7 +1269,7 @@ object ExtQueries {
           .orderBy(col("id_a"), col("id_b"))
       },
       Some(
-        """WITH d AS (SELECT doc_id, doc_id % 63 AS fam FROM documents
+        s"""WITH d AS (SELECT doc_id, doc_id % 63 AS fam FROM documents
           |  WHERE doc_id % 9 = 4),
           |f AS (SELECT doc_id, fam,
           |    unnest(generate_series(0, 32)) AS f FROM d),
@@ -1121,14 +1288,7 @@ object ExtQueries {
           |      ORDER BY a.f) AS fingerprint
           |  FROM s a JOIN s b ON a.doc_id = b.doc_id AND b.f = a.f + 1
           |  GROUP BY a.doc_id),
-          |pairs AS (SELECT x.doc_id AS id_a, y.doc_id AS id_b,
-          |    CAST(len(list_filter(range(1, 33), i ->
-          |      substr(x.fingerprint, CAST(i AS INT), 1)
-          |        <> substr(y.fingerprint, CAST(i AS INT), 1)))
-          |      AS INT) AS hamming
-          |  FROM fp x JOIN fp y ON x.doc_id < y.doc_id)
-          |SELECT id_a, id_b, hamming FROM pairs
-          |WHERE hamming <= 3 ORDER BY id_a, id_b""".stripMargin)),
+          |$duckFingerprintPairs""".stripMargin)),
 
     // Semi-structured property extraction: the events stream carries a
     // JSON `props` string; pull a typed field out (get_json_object — a
@@ -1414,34 +1574,10 @@ object ExtQueries {
             k = 4, rounds = 3, scale = 1000)
           .orderBy(col("vec_id")),
       Some {
-        def iter(n: Int): String = {
-          val p = n - 1
-          s"""d$n AS (SELECT qd.vec_id AS vec_id, c.cid AS cid,
-             |    sum((qd.v - c.v) * (qd.v - c.v)) AS dist
-             |  FROM qd JOIN c$p c ON qd.d = c.d GROUP BY 1, 2),
-             |a$n AS (SELECT vec_id, min(dist * 1048576 + cid) AS comb
-             |  FROM d$n GROUP BY 1),
-             |m$n AS (SELECT vec_id, comb % 1048576 AS cid FROM a$n),
-             |c$n AS (SELECT m.cid AS cid, qd.d AS d,
-             |    CAST(floor(CAST(sum(qd.v) AS DOUBLE) / count(*)) AS BIGINT)
-             |      AS v
-             |  FROM qd JOIN m$n m USING (vec_id) GROUP BY 1, 2)""".stripMargin
-        }
-        s"""WITH q AS (SELECT vec_id,
-           |    unnest(list_transform(embedding, (x, i) -> {'d': i,
-           |      'v': CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT)})) AS e
-           |  FROM embeddings),
-           |qd AS (SELECT vec_id, e.d AS d, e.v AS v FROM q),
-           |seeds AS (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT 4),
-           |c0 AS (SELECT qd.vec_id AS cid, d, v
-           |  FROM qd JOIN seeds USING (vec_id)),
-           |${iter(1)},
-           |${iter(2)},
-           |d3 AS (SELECT qd.vec_id AS vec_id, c.cid AS cid,
-           |    sum((qd.v - c.v) * (qd.v - c.v)) AS dist
-           |  FROM qd JOIN c2 c ON qd.d = c.d GROUP BY 1, 2),
-           |a3 AS (SELECT vec_id, min(dist * 1048576 + cid) AS comb
-           |  FROM d3 GROUP BY 1)
+        s"""$duckLloydSeeds,
+           |${duckLloydStep("qd", 1)},
+           |${duckLloydStep("qd", 2)},
+           |${duckLloydAssign("qd", 3)}
            |SELECT vec_id, CAST(comb % 1048576 AS BIGINT) AS cluster,
            |  CAST(comb // 1048576 AS BIGINT) AS dist2
            |FROM a3 ORDER BY vec_id""".stripMargin
@@ -1467,43 +1603,7 @@ object ExtQueries {
             col("width"), col("height"), col("nFrames").as("n_frames"))
           .orderBy(col("doc_id"))
       },
-      Some(
-        """SELECT doc_id,
-          |  CASE doc_id % 9 WHEN 0 THEN 'image/ppm' WHEN 1 THEN 'image/bmp'
-          |    WHEN 2 THEN 'image/png' WHEN 3 THEN 'audio/wav'
-          |    WHEN 4 THEN 'video/y4m' WHEN 5 THEN 'image/gif'
-          |    WHEN 6 THEN 'image/jpeg' WHEN 7 THEN 'audio/mp3'
-          |    ELSE 'video/h264' END AS kind,
-          |  CAST(CASE doc_id % 9
-          |    WHEN 0 THEN 4 + doc_id % 5 WHEN 1 THEN 3 + doc_id % 5
-          |    WHEN 2 THEN 3 + doc_id % 5
-          |    WHEN 3 THEN 1 + doc_id % 2
-          |    WHEN 4 THEN 3 + doc_id % 3
-          |    WHEN 5 THEN 3 + doc_id % 5
-          |    WHEN 6 THEN 10 + doc_id % 23
-          |    WHEN 7 THEN CASE WHEN doc_id % 4 = 3 THEN 1 ELSE 2 END
-          |    ELSE 16 * (2 + doc_id % 6)
-          |      - CASE WHEN doc_id % 2 = 0 THEN 2 ELSE 0 END
-          |    END AS INT) AS width,
-          |  CAST(CASE doc_id % 9
-          |    WHEN 0 THEN 3 + doc_id % 4 WHEN 1 THEN 2 + doc_id % 4
-          |    WHEN 2 THEN 5 + doc_id % 4
-          |    WHEN 3 THEN 8000 + (doc_id % 3) * 4000
-          |    WHEN 4 THEN 2 + doc_id % 3
-          |    WHEN 5 THEN 4 + doc_id % 4
-          |    WHEN 6 THEN 10 + doc_id % 17
-          |    WHEN 7 THEN CASE doc_id % 3 WHEN 0 THEN 44100
-          |      WHEN 1 THEN 48000 ELSE 32000 END
-          |    ELSE 16 * (2 + doc_id % 4)
-          |      - CASE WHEN doc_id % 2 = 0 THEN 2 ELSE 0 END
-          |    END AS INT) AS height,
-          |  CAST(CASE doc_id % 9
-          |    WHEN 3 THEN 20 + doc_id % 7
-          |    WHEN 4 THEN 3 + doc_id % 4
-          |    WHEN 7 THEN 8 + doc_id % 5
-          |    WHEN 8 THEN (2 + doc_id % 3) * (2 + doc_id % 4)
-          |    ELSE 1 END AS INT) AS n_frames
-          |FROM documents ORDER BY doc_id""".stripMargin)),
+      Some(duckMedia)),
 
     // SemDeDup COMPOSED end-to-end from the in-engine operators: Lloyd
     // k-means clusters the corpus (q144's operator, 2 rounds), then the
@@ -1540,42 +1640,9 @@ object ExtQueries {
           .orderBy(col("vec_id"))
       },
       Some {
-        def iter(n: Int): String = {
-          val p = n - 1
-          s"""d$n AS (SELECT qd.vec_id AS vec_id, c.cid AS cid,
-             |    sum((qd.v - c.v) * (qd.v - c.v)) AS dist
-             |  FROM qd JOIN c$p c ON qd.d = c.d GROUP BY 1, 2),
-             |a$n AS (SELECT vec_id, min(dist * 1048576 + cid) AS comb
-             |  FROM d$n GROUP BY 1),
-             |m$n AS (SELECT vec_id, comb % 1048576 AS cid FROM a$n),
-             |c$n AS (SELECT m.cid AS cid, qd.d AS d,
-             |    CAST(floor(CAST(sum(qd.v) AS DOUBLE) / count(*)) AS BIGINT)
-             |      AS v
-             |  FROM qd JOIN m$n m USING (vec_id) GROUP BY 1, 2)""".stripMargin
-        }
-        s"""WITH corpus AS (
-           |  SELECT vec_id,
-           |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS embedding
-           |  FROM embeddings
-           |  UNION ALL
-           |  SELECT vec_id + 100000, list_transform(embedding,
-           |    (x, i) -> CASE WHEN i = 1 THEN CAST(x AS DOUBLE) + 0.5
-           |                   ELSE CAST(x AS DOUBLE) END)
-           |  FROM embeddings WHERE vec_id % 50 = 0),
-           |q AS (SELECT vec_id,
-           |    unnest(list_transform(embedding, (x, i) -> {'d': i,
-           |      'v': CAST(floor(x * 1000) AS BIGINT)})) AS e
-           |  FROM corpus),
-           |qd AS (SELECT vec_id, e.d AS d, e.v AS v FROM q),
-           |seeds AS (SELECT vec_id FROM corpus ORDER BY vec_id LIMIT 4),
-           |c0 AS (SELECT qd.vec_id AS cid, d, v
-           |  FROM qd JOIN seeds USING (vec_id)),
-           |${iter(1)},
-           |d2 AS (SELECT qd.vec_id AS vec_id, c.cid AS cid,
-           |    sum((qd.v - c.v) * (qd.v - c.v)) AS dist
-           |  FROM qd JOIN c1 c ON qd.d = c.d GROUP BY 1, 2),
-           |a2 AS (SELECT vec_id, min(dist * 1048576 + cid) AS comb
-           |  FROM d2 GROUP BY 1),
+        s"""$duckSemdedupSeeds,
+           |${duckLloydStep("qd", 1)},
+           |${duckLloydAssign("qd", 2)},
            |asg AS (SELECT vec_id, comb % 1048576 AS cluster FROM a2),
            |n2 AS (SELECT vec_id, sum(v * v) AS n2 FROM qd GROUP BY 1),
            |dots AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
@@ -1878,22 +1945,7 @@ object ExtQueries {
         graft.ext.Multimodal.pngPixelStats(files).toDF()
           .orderBy(col("doc_id"))
       },
-      Some(
-        """WITH d AS (SELECT doc_id,
-          |    CAST(3 + doc_id % 5 AS INT) AS width,
-          |    CAST(2 + doc_id % 4 AS INT) AS height
-          |  FROM documents),
-          |px AS (SELECT doc_id, width, height,
-          |    unnest(generate_series(0, width * height * 3 - 1)) AS i
-          |  FROM d)
-          |SELECT doc_id, width, height,
-          |  CAST(sum(CASE WHEN i % 3 = 0 THEN (doc_id * 37 + i) % 256 END)
-          |    AS BIGINT) AS sum_r,
-          |  CAST(sum(CASE WHEN i % 3 = 1 THEN (doc_id * 37 + i) % 256 END)
-          |    AS BIGINT) AS sum_g,
-          |  CAST(sum(CASE WHEN i % 3 = 2 THEN (doc_id * 37 + i) % 256 END)
-          |    AS BIGINT) AS sum_b
-          |FROM px GROUP BY doc_id, width, height ORDER BY doc_id""".stripMargin)),
+      Some(duckBmpPixels)),
 
     // Video SCENE-CUT detection (Multimodal.y4mSceneCuts): temporal
     // segmentation by luma-sum delta — the per-shot sampling primitive
@@ -1962,37 +2014,7 @@ object ExtQueries {
           nBlocks = 4, maxHamming = 3)
           .orderBy(col("id_a"), col("id_b"))
       },
-      Some(
-        """WITH imgs AS (
-          |  SELECT doc_id AS img_id, doc_id, 0 AS pert FROM documents
-          |  UNION ALL
-          |  SELECT doc_id + 100000, doc_id, 1 FROM documents
-          |  WHERE doc_id % 3 = 0),
-          |dims AS (SELECT img_id, doc_id, pert,
-          |    CAST(4 + doc_id % 5 AS INT) AS w,
-          |    CAST(3 + doc_id % 4 AS INT) AS h
-          |  FROM imgs),
-          |ys AS (SELECT unnest(generate_series(0, 7)) AS y),
-          |xs AS (SELECT unnest(generate_series(0, 7)) AS x),
-          |cell AS (SELECT img_id, doc_id, pert, y, x,
-          |    ((y * h // 8) * w + (x * w // 8)) * 3 AS i0
-          |  FROM dims CROSS JOIN ys CROSS JOIN xs),
-          |g AS (SELECT img_id, y, x,
-          |    ((CASE WHEN pert = 1 AND i0 = 0 THEN (doc_id * 31 + 128) % 256
-          |           ELSE (doc_id * 31 + i0) % 256 END)
-          |      + (doc_id * 31 + i0 + 1) % 256
-          |      + (doc_id * 31 + i0 + 2) % 256) // 3 AS gv
-          |  FROM cell),
-          |bits AS (SELECT a.img_id, a.y, a.x,
-          |    CASE WHEN b.gv > a.gv THEN 1 ELSE 0 END AS bit
-          |  FROM g a JOIN g b ON a.img_id = b.img_id AND a.y = b.y
-          |    AND b.x = a.x + 1
-          |  WHERE a.x < 7),
-          |hs AS (SELECT img_id,
-          |    CAST(sum(bit * (CAST(1 AS BIGINT) << (y * 7 + x)))
-          |      AS BIGINT) AS hash
-          |  FROM bits GROUP BY img_id),
-          |reps AS (SELECT hash, min(img_id) AS rep FROM hs GROUP BY hash),
+      Some(duckImageReps + """,
           |bands AS (SELECT rep, hash, b,
           |    (hash >> (42 - 14 * b)) & 16383 AS bv
           |  FROM reps CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b)),
@@ -2130,37 +2152,7 @@ object ExtQueries {
         graft.analytics.Graphs.freeLocalCheckpoint(reps)
         labels.orderBy(col("img_id"))
       },
-      Some(
-        """WITH RECURSIVE imgs AS (
-          |  SELECT doc_id AS img_id, doc_id, 0 AS pert FROM documents
-          |  UNION ALL
-          |  SELECT doc_id + 100000, doc_id, 1 FROM documents
-          |  WHERE doc_id % 3 = 0),
-          |dims AS (SELECT img_id, doc_id, pert,
-          |    CAST(4 + doc_id % 5 AS INT) AS w,
-          |    CAST(3 + doc_id % 4 AS INT) AS h
-          |  FROM imgs),
-          |ys AS (SELECT unnest(generate_series(0, 7)) AS y),
-          |xs AS (SELECT unnest(generate_series(0, 7)) AS x),
-          |cell AS (SELECT img_id, doc_id, pert, y, x,
-          |    ((y * h // 8) * w + (x * w // 8)) * 3 AS i0
-          |  FROM dims CROSS JOIN ys CROSS JOIN xs),
-          |g AS (SELECT img_id, y, x,
-          |    ((CASE WHEN pert = 1 AND i0 = 0 THEN (doc_id * 31 + 128) % 256
-          |           ELSE (doc_id * 31 + i0) % 256 END)
-          |      + (doc_id * 31 + i0 + 1) % 256
-          |      + (doc_id * 31 + i0 + 2) % 256) // 3 AS gv
-          |  FROM cell),
-          |bits AS (SELECT a.img_id, a.y, a.x,
-          |    CASE WHEN b.gv > a.gv THEN 1 ELSE 0 END AS bit
-          |  FROM g a JOIN g b ON a.img_id = b.img_id AND a.y = b.y
-          |    AND b.x = a.x + 1
-          |  WHERE a.x < 7),
-          |hs AS (SELECT img_id,
-          |    CAST(sum(bit * (CAST(1 AS BIGINT) << (y * 7 + x)))
-          |      AS BIGINT) AS hash
-          |  FROM bits GROUP BY img_id),
-          |reps AS (SELECT hash, min(img_id) AS rep FROM hs GROUP BY hash),
+      Some(duckImageReps.replaceFirst("WITH ", "WITH RECURSIVE ") + s""",
           |exact AS (SELECT hs.img_id AS s, r.rep AS t
           |  FROM hs JOIN reps r ON hs.hash = r.hash
           |  WHERE hs.img_id <> r.rep),
@@ -2173,10 +2165,7 @@ object ExtQueries {
           |  WHERE bit_count(xor(a.hash, b.hash)) <= 3),
           |und AS (SELECT s, t FROM exact UNION ALL SELECT t, s FROM exact
           |  UNION ALL SELECT s, t FROM near UNION ALL SELECT t, s FROM near),
-          |reach AS (SELECT s, t FROM und
-          |  UNION
-          |  SELECT r.s, u.t FROM reach r JOIN und u ON r.t = u.s
-          |  WHERE u.t <> r.s)
+          |${DedupQueries.duckReach}
           |SELECT i.img_id,
           |  least(i.img_id, coalesce(min(r.t), i.img_id)) AS cluster_id
           |FROM imgs i LEFT JOIN reach r ON i.img_id = r.s
@@ -2206,41 +2195,7 @@ object ExtQueries {
           .orderBy(col("kind"))
       },
       Some(
-        """WITH m AS (SELECT doc_id,
-          |  CASE doc_id % 9 WHEN 0 THEN 'image/ppm' WHEN 1 THEN 'image/bmp'
-          |    WHEN 2 THEN 'image/png' WHEN 3 THEN 'audio/wav'
-          |    WHEN 4 THEN 'video/y4m' WHEN 5 THEN 'image/gif'
-          |    WHEN 6 THEN 'image/jpeg' WHEN 7 THEN 'audio/mp3'
-          |    ELSE 'video/h264' END AS kind,
-          |  CAST(CASE doc_id % 9
-          |    WHEN 0 THEN 4 + doc_id % 5 WHEN 1 THEN 3 + doc_id % 5
-          |    WHEN 2 THEN 3 + doc_id % 5
-          |    WHEN 3 THEN 1 + doc_id % 2
-          |    WHEN 4 THEN 3 + doc_id % 3
-          |    WHEN 5 THEN 3 + doc_id % 5
-          |    WHEN 6 THEN 10 + doc_id % 23
-          |    WHEN 7 THEN CASE WHEN doc_id % 4 = 3 THEN 1 ELSE 2 END
-          |    ELSE 16 * (2 + doc_id % 6)
-          |      - CASE WHEN doc_id % 2 = 0 THEN 2 ELSE 0 END
-          |    END AS INT) AS width,
-          |  CAST(CASE doc_id % 9
-          |    WHEN 0 THEN 3 + doc_id % 4 WHEN 1 THEN 2 + doc_id % 4
-          |    WHEN 2 THEN 5 + doc_id % 4
-          |    WHEN 3 THEN 8000 + (doc_id % 3) * 4000
-          |    WHEN 4 THEN 2 + doc_id % 3
-          |    WHEN 5 THEN 4 + doc_id % 4
-          |    WHEN 6 THEN 10 + doc_id % 17
-          |    WHEN 7 THEN CASE doc_id % 3 WHEN 0 THEN 44100
-          |      WHEN 1 THEN 48000 ELSE 32000 END
-          |    ELSE 16 * (2 + doc_id % 4)
-          |      - CASE WHEN doc_id % 2 = 0 THEN 2 ELSE 0 END
-          |    END AS INT) AS height,
-          |  CAST(CASE doc_id % 9
-          |    WHEN 3 THEN 20 + doc_id % 7
-          |    WHEN 4 THEN 3 + doc_id % 4
-          |    WHEN 7 THEN 8 + doc_id % 5
-          |    WHEN 8 THEN (2 + doc_id % 3) * (2 + doc_id % 4)
-          |    ELSE 1 END AS INT) AS n_frames
+        s"""WITH m AS ($duckMediaCols
           |  FROM documents)
           |SELECT kind, count(*) AS n,
           |  CAST(count(DISTINCT (width, height)) AS BIGINT) AS n_dims,
@@ -2293,33 +2248,8 @@ object ExtQueries {
           .orderBy(col("vec_id"))
       },
       Some {
-        s"""WITH corpus AS (
-           |  SELECT vec_id,
-           |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS embedding
-           |  FROM embeddings
-           |  UNION ALL
-           |  SELECT vec_id + 100000, list_transform(embedding,
-           |    (x, i) -> CASE WHEN i = 1 THEN CAST(x AS DOUBLE) + 0.5
-           |                   ELSE CAST(x AS DOUBLE) END)
-           |  FROM embeddings WHERE vec_id % 50 = 0),
-           |q AS (SELECT vec_id,
-           |    unnest(list_transform(embedding, (x, i) -> {'d': i,
-           |      'v': CAST(floor(x * 1000) AS BIGINT)})) AS e
-           |  FROM corpus),
-           |qd AS (SELECT vec_id, e.d AS d, e.v AS v FROM q),
-           |seeds AS (SELECT vec_id FROM corpus ORDER BY vec_id LIMIT 4),
-           |c0 AS (SELECT qd.vec_id AS cid, d, v
-           |  FROM qd JOIN seeds USING (vec_id)),
-           |d1 AS (SELECT qd.vec_id AS vec_id, c.cid AS cid,
-           |    sum((qd.v - c.v) * (qd.v - c.v)) AS dist
-           |  FROM qd JOIN c0 c ON qd.d = c.d GROUP BY 1, 2),
-           |a1 AS (SELECT vec_id, min(dist * 1048576 + cid) AS comb
-           |  FROM d1 GROUP BY 1),
-           |m1 AS (SELECT vec_id, comb % 1048576 AS cid FROM a1),
-           |c1 AS (SELECT m.cid AS cid, qd.d AS d,
-           |    CAST(floor(CAST(sum(qd.v) AS DOUBLE) / count(*)) AS BIGINT)
-           |      AS v
-           |  FROM qd JOIN m1 m USING (vec_id) GROUP BY 1, 2),
+        s"""$duckSemdedupSeeds,
+           |${duckLloydStep("qd", 1)},
            |d2 AS (SELECT qd.vec_id AS vec_id, c.cid AS cid,
            |    sum((qd.v - c.v) * (qd.v - c.v)) AS dist
            |  FROM qd JOIN c1 c ON qd.d = c.d GROUP BY 1, 2),
@@ -2365,34 +2295,10 @@ object ExtQueries {
             max(col("dist2")).as("worst_dist2"))
           .orderBy(col("cluster")),
       Some {
-        def iter(n: Int): String = {
-          val p = n - 1
-          s"""d$n AS (SELECT qd.vec_id AS vec_id, c.cid AS cid,
-             |    sum((qd.v - c.v) * (qd.v - c.v)) AS dist
-             |  FROM qd JOIN c$p c ON qd.d = c.d GROUP BY 1, 2),
-             |a$n AS (SELECT vec_id, min(dist * 1048576 + cid) AS comb
-             |  FROM d$n GROUP BY 1),
-             |m$n AS (SELECT vec_id, comb % 1048576 AS cid FROM a$n),
-             |c$n AS (SELECT m.cid AS cid, qd.d AS d,
-             |    CAST(floor(CAST(sum(qd.v) AS DOUBLE) / count(*)) AS BIGINT)
-             |      AS v
-             |  FROM qd JOIN m$n m USING (vec_id) GROUP BY 1, 2)""".stripMargin
-        }
-        s"""WITH q AS (SELECT vec_id,
-           |    unnest(list_transform(embedding, (x, i) -> {'d': i,
-           |      'v': CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT)})) AS e
-           |  FROM embeddings),
-           |qd AS (SELECT vec_id, e.d AS d, e.v AS v FROM q),
-           |seeds AS (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT 4),
-           |c0 AS (SELECT qd.vec_id AS cid, d, v
-           |  FROM qd JOIN seeds USING (vec_id)),
-           |${iter(1)},
-           |${iter(2)},
-           |d3 AS (SELECT qd.vec_id AS vec_id, c.cid AS cid,
-           |    sum((qd.v - c.v) * (qd.v - c.v)) AS dist
-           |  FROM qd JOIN c2 c ON qd.d = c.d GROUP BY 1, 2),
-           |a3 AS (SELECT vec_id, min(dist * 1048576 + cid) AS comb
-           |  FROM d3 GROUP BY 1)
+        s"""$duckLloydSeeds,
+           |${duckLloydStep("qd", 1)},
+           |${duckLloydStep("qd", 2)},
+           |${duckLloydAssign("qd", 3)}
            |SELECT CAST(comb % 1048576 AS BIGINT) AS cluster,
            |  count(*) AS n,
            |  CAST(sum(comb // 1048576) AS BIGINT) AS inertia,
@@ -2598,31 +2504,7 @@ object ExtQueries {
           .orderBy(col("cluster"))
       },
       Some {
-        def iter(n: Int): String = {
-          val p = n - 1
-          s"""d$n AS (SELECT h.vec_id AS vec_id, c.cid AS cid,
-             |    sum((h.v - c.v) * (h.v - c.v)) AS dist
-             |  FROM h JOIN c$p c ON h.d = c.d GROUP BY 1, 2),
-             |a$n AS (SELECT vec_id, min(dist * 1048576 + cid) AS comb
-             |  FROM d$n GROUP BY 1),
-             |m$n AS (SELECT vec_id, comb % 1048576 AS cid FROM a$n),
-             |c$n AS (SELECT m.cid AS cid, h.d AS d,
-             |    CAST(floor(CAST(sum(h.v) AS DOUBLE) / count(*)) AS BIGINT)
-             |      AS v
-             |  FROM h JOIN m$n m USING (vec_id) GROUP BY 1, 2)""".stripMargin
-        }
-        s"""WITH q AS (SELECT vec_id,
-           |    unnest(list_transform(embedding, (x, i) -> {'d': i,
-           |      'v': CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT)})) AS e
-           |  FROM embeddings),
-           |qd AS (SELECT vec_id, e.d AS d, e.v AS v FROM q),
-           |h AS (SELECT * FROM qd WHERE vec_id % 10 != 7),
-           |seeds AS (SELECT vec_id FROM embeddings WHERE vec_id % 10 != 7
-           |  ORDER BY vec_id LIMIT 4),
-           |c0 AS (SELECT h.vec_id AS cid, d, v
-           |  FROM h JOIN seeds USING (vec_id)),
-           |${iter(1)},
-           |${iter(2)},
+        s"""$duckHistCentroids,
            |df AS (SELECT qd.vec_id AS vec_id, c.cid AS cid,
            |    sum((qd.v - c.v) * (qd.v - c.v)) AS dist
            |  FROM qd JOIN c2 c ON qd.d = c.d GROUP BY 1, 2),
@@ -2683,7 +2565,8 @@ object ExtQueries {
         // training shared per (session, dir) exactly like trainedCells
         // (the q65 lifecycle); the swap's from-scratch retrain inside
         // maybeSwap stays per-run, which is the thing this query gates
-        val histCents = Caches.cells(s, dir, "histCents_k8_i2_drift7") {
+        val histCents = Caches.memo[Array[(Int, Array[Double])]](
+            s, dir, "cells/histCents_k8_i2_drift7") {
           graft.similarity.Similarity.trainCells(hist, k = 8, iters = 2)
         }
         val old = graft.similarity.Retrain.IvfEpoch(0L, histCents,
@@ -2705,21 +2588,7 @@ object ExtQueries {
             lit(serving.epoch).as("epoch"))
           .orderBy(col("vec_id"), col("neighbor_id"))
       },
-      Some(ivfTrainCtes(k = 8, iters = 2, dim = 64, probes = Some(3),
-        embCte = """emb AS (SELECT vec_id, CASE WHEN vec_id % 10 = 7
-          |  THEN list_transform(CAST(embedding AS DOUBLE[]),
-          |       x -> x * 3.0 + 0.5)
-          |  ELSE CAST(embedding AS DOUBLE[]) END AS e FROM embeddings)"""
-          .stripMargin) +
-        """
-          |SELECT vec_id, neighbor_id, cos_sim, CAST(1 AS BIGINT) AS epoch
-          |FROM (
-          |  SELECT q.vec_id AS vec_id, b.vec_id AS neighbor_id,
-          |    round(list_cosine_similarity(q.e, b.e), 6) AS cos_sim,
-          |    row_number() OVER (PARTITION BY q.vec_id
-          |      ORDER BY round(list_cosine_similarity(q.e, b.e), 6) DESC,
-          |        b.vec_id) AS rk
-          |  FROM aprobe q JOIN afin b ON q.cell = b.cell AND q.vec_id <> b.vec_id
+      Some(duckDriftedRank + """
           |) t WHERE rk <= 3 ORDER BY vec_id, neighbor_id""".stripMargin)),
 
     // ONLINE epoch swap (graft.streaming.StreamingIvfRetrain) — q222's
@@ -2753,7 +2622,8 @@ object ExtQueries {
         // — one deterministic training per session, the trainedCells
         // lifecycle); the in-stream monitor folds, swap retrain, and
         // takedown fold stay per-run — they are what this query gates
-        val histCents = Caches.cells(s, dir, "histCents_k8_i2_drift7") {
+        val histCents = Caches.memo[Array[(Int, Array[Double])]](
+            s, dir, "cells/histCents_k8_i2_drift7") {
           graft.similarity.Similarity.trainCells(hist, k = 8, iters = 2)
         }
         val monitor = Caches.memo[Seq[(Long, Array[Long])]](
@@ -2793,21 +2663,7 @@ object ExtQueries {
             lit(served.epoch).as("epoch"))
           .orderBy(col("vec_id"), col("neighbor_id"))
       },
-      Some(ivfTrainCtes(k = 8, iters = 2, dim = 64, probes = Some(3),
-        embCte = """emb AS (SELECT vec_id, CASE WHEN vec_id % 10 = 7
-          |  THEN list_transform(CAST(embedding AS DOUBLE[]),
-          |       x -> x * 3.0 + 0.5)
-          |  ELSE CAST(embedding AS DOUBLE[]) END AS e FROM embeddings)"""
-          .stripMargin) +
-        """
-          |SELECT vec_id, neighbor_id, cos_sim, CAST(1 AS BIGINT) AS epoch
-          |FROM (
-          |  SELECT q.vec_id AS vec_id, b.vec_id AS neighbor_id,
-          |    round(list_cosine_similarity(q.e, b.e), 6) AS cos_sim,
-          |    row_number() OVER (PARTITION BY q.vec_id
-          |      ORDER BY round(list_cosine_similarity(q.e, b.e), 6) DESC,
-          |        b.vec_id) AS rk
-          |  FROM aprobe q JOIN afin b ON q.cell = b.cell AND q.vec_id <> b.vec_id
+      Some(duckDriftedRank + """
           |  WHERE q.vec_id % 20 <> 7 AND b.vec_id % 20 <> 7
           |) t WHERE rk <= 3 ORDER BY vec_id, neighbor_id""".stripMargin)),
 

@@ -144,18 +144,7 @@ object StreamingQueries {
           .orderBy(col("doc_id"), col("chunk_id"))
       },
       Some(
-        s"""WITH d AS (SELECT doc_id, ${ExtQueries.duckTokens} AS toks
-          |  FROM documents),
-          |c AS (SELECT doc_id,
-          |    unnest(list_transform(generate_series(0, (len(toks) - 1) // 32),
-          |      i -> {'chunk_id': i,
-          |            'ctoks': toks[i * 32 + 1 : least(i * 32 + 32,
-          |                                             len(toks))]})) AS ch
-          |  FROM d WHERE len(toks) >= 1),
-          |u AS (SELECT doc_id, ch.chunk_id AS chunk_id,
-          |    lower(trim(regexp_replace(array_to_string(ch.ctoks, ' '),
-          |      '\\s+', ' ', 'g'))) AS norm
-          |  FROM c),
+        s"""${CurationQueries.duckUnits},
           |w AS (SELECT doc_id, chunk_id,
           |    row_number() OVER (PARTITION BY norm
           |      ORDER BY doc_id, chunk_id) AS rn
@@ -212,11 +201,7 @@ object StreamingQueries {
           .distinct()
           .orderBy(col("doc_a"), col("doc_b"))
       },
-      Some(DedupQueries.duckMinhash + """,
-          |cands AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-          |          FROM bands x JOIN bands y
-          |            ON x.band = y.band AND x.band_key = y.band_key
-          |           AND x.doc_id < y.doc_id)
+      Some(DedupQueries.duckBandCands + """
           |SELECT doc_a, doc_b FROM cands ORDER BY doc_a, doc_b""".stripMargin)),
 
     // Streaming heavy hitters (sharded SpaceSaving), oracle-gated IN THE
@@ -343,24 +328,7 @@ object StreamingQueries {
             sum(col("sess_len")).cast("long").as("n_events"))
           .orderBy(col("user_id"))
       },
-      Some(
-        """WITH g AS (
-          |  SELECT user_id, event_id,
-          |    CASE WHEN event_id - lag(event_id) OVER w IS NULL
-          |           OR event_id - lag(event_id) OVER w > 500
-          |         THEN 1 ELSE 0 END AS brk
-          |  FROM events
-          |  WINDOW w AS (PARTITION BY user_id ORDER BY event_id)),
-          |s AS (
-          |  SELECT user_id, event_id,
-          |    sum(brk) OVER (PARTITION BY user_id ORDER BY event_id) AS sess
-          |  FROM g),
-          |sl AS (
-          |  SELECT user_id, sess, count(*) AS sess_len
-          |  FROM s GROUP BY user_id, sess)
-          |SELECT user_id, count(*) AS n_sessions, max(sess_len) AS max_sess_len,
-          |  CAST(sum(sess_len) AS BIGINT) AS n_events
-          |FROM sl GROUP BY user_id ORDER BY user_id""".stripMargin)),
+      Some(AdvancedQueries.duckSessions)),
 
     // Streaming INGEST under the gate: q107's JSONL corpus reader on the
     // readStream path — the same explicit-schema parse and drop-don't-fail
@@ -389,8 +357,7 @@ object StreamingQueries {
           requiredCols = Seq("doc_id", "text"))
         runToTable(stream, "jsonl_ingest").orderBy(col("doc_id"))
       },
-      Some("""SELECT doc_id, text, lang, source, n_chars
-             |FROM documents ORDER BY doc_id""".stripMargin)),
+      Some(AnalyticsQueries.duckCorpus)),
 
     // Streaming incremental dedup under the gate — q143's recurring-crawl
     // shape with the delta as a LIVE STREAM: the history digest index is
@@ -428,19 +395,7 @@ object StreamingQueries {
             col("inHistory").as("in_history"), col("keep"))
           .orderBy(col("doc_id"))
       },
-      Some(
-        """WITH hist AS (SELECT DISTINCT
-          |    md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS k
-          |  FROM documents WHERE doc_id % 10 < 8),
-          |delta AS (
-          |  SELECT doc_id, text FROM documents WHERE doc_id % 10 >= 8
-          |  UNION ALL SELECT doc_id + 100000, text FROM documents
-          |    WHERE doc_id % 10 = 0
-          |  UNION ALL SELECT doc_id + 200000, text FROM documents
-          |    WHERE doc_id % 10 = 8),
-          |dk AS (SELECT doc_id,
-          |    md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS k
-          |  FROM delta),
+      Some(DedupQueries.duckDeltaDigests + """,
           |f AS (SELECT k, min(doc_id) AS first_id FROM dk GROUP BY k)
           |SELECT dk.doc_id, hist.k IS NOT NULL AS in_history,
           |  hist.k IS NULL AND dk.doc_id = f.first_id AS keep
@@ -467,43 +422,7 @@ object StreamingQueries {
             col("width"), col("height"), col("nFrames").as("n_frames"))
         runToTable(metas, "stream_media").orderBy(col("doc_id"))
       },
-      Some(
-        """SELECT doc_id,
-          |  CASE doc_id % 9 WHEN 0 THEN 'image/ppm' WHEN 1 THEN 'image/bmp'
-          |    WHEN 2 THEN 'image/png' WHEN 3 THEN 'audio/wav'
-          |    WHEN 4 THEN 'video/y4m' WHEN 5 THEN 'image/gif'
-          |    WHEN 6 THEN 'image/jpeg' WHEN 7 THEN 'audio/mp3'
-          |    ELSE 'video/h264' END AS kind,
-          |  CAST(CASE doc_id % 9
-          |    WHEN 0 THEN 4 + doc_id % 5 WHEN 1 THEN 3 + doc_id % 5
-          |    WHEN 2 THEN 3 + doc_id % 5
-          |    WHEN 3 THEN 1 + doc_id % 2
-          |    WHEN 4 THEN 3 + doc_id % 3
-          |    WHEN 5 THEN 3 + doc_id % 5
-          |    WHEN 6 THEN 10 + doc_id % 23
-          |    WHEN 7 THEN CASE WHEN doc_id % 4 = 3 THEN 1 ELSE 2 END
-          |    ELSE 16 * (2 + doc_id % 6)
-          |      - CASE WHEN doc_id % 2 = 0 THEN 2 ELSE 0 END
-          |    END AS INT) AS width,
-          |  CAST(CASE doc_id % 9
-          |    WHEN 0 THEN 3 + doc_id % 4 WHEN 1 THEN 2 + doc_id % 4
-          |    WHEN 2 THEN 5 + doc_id % 4
-          |    WHEN 3 THEN 8000 + (doc_id % 3) * 4000
-          |    WHEN 4 THEN 2 + doc_id % 3
-          |    WHEN 5 THEN 4 + doc_id % 4
-          |    WHEN 6 THEN 10 + doc_id % 17
-          |    WHEN 7 THEN CASE doc_id % 3 WHEN 0 THEN 44100
-          |      WHEN 1 THEN 48000 ELSE 32000 END
-          |    ELSE 16 * (2 + doc_id % 4)
-          |      - CASE WHEN doc_id % 2 = 0 THEN 2 ELSE 0 END
-          |    END AS INT) AS height,
-          |  CAST(CASE doc_id % 9
-          |    WHEN 3 THEN 20 + doc_id % 7
-          |    WHEN 4 THEN 3 + doc_id % 4
-          |    WHEN 7 THEN 8 + doc_id % 5
-          |    WHEN 8 THEN (2 + doc_id % 3) * (2 + doc_id % 4)
-          |    ELSE 1 END AS INT) AS n_frames
-          |FROM documents ORDER BY doc_id""".stripMargin)),
+      Some(ExtQueries.duckMedia)),
 
     // Streaming lexicon tagging — q170's Aho–Corasick operator on the
     // document stream: the automaton broadcasts once (bounded driver
@@ -520,15 +439,7 @@ object StreamingQueries {
         runToTable(tags, "stream_kw_tags")
           .orderBy(col("doc_id"), col("keyword"))
       },
-      Some(
-        """WITH kw(kw) AS (VALUES ('a'), ('art'), ('data'), ('he'),
-          |    ('row'), ('scan'), ('table'), ('the')),
-          |c AS (SELECT doc_id, kw,
-          |    (length(text) - length(replace(text, kw, '')))
-          |      // length(kw) AS n
-          |  FROM documents CROSS JOIN kw)
-          |SELECT doc_id, kw AS keyword, CAST(n AS BIGINT) AS n
-          |FROM c WHERE n > 0 ORDER BY doc_id, keyword""".stripMargin)),
+      Some(CurationQueries.duckKeywordTags)),
 
     // Stream-static as-of SERVING (graft.streaming.StreamingAsof): the
     // view-event stream attaches each row's latest prior purchase value
@@ -565,17 +476,7 @@ object StreamingQueries {
             col("asof_purchase_value"))
           .orderBy(col("event_id"))
       },
-      Some(
-        """WITH v AS (SELECT event_id, user_id, ts, value FROM events
-          |  WHERE event_type = 'view'),
-          |p AS (SELECT user_id, ts, max(value) AS pv FROM events
-          |  WHERE event_type = 'purchase' GROUP BY 1, 2)
-          |SELECT v.event_id, v.user_id, v.value,
-          |  p.pv AS asof_purchase_value
-          |FROM v ASOF LEFT JOIN p
-          |  ON v.user_id = p.user_id AND p.ts <= v.ts
-          |ORDER BY event_id""".stripMargin))
-    ,
+      Some(AdvancedQueries.duckAsof)),
 
     // Streaming EWMA under the gate — q196's recurrence as an ONLINE
     // FEATURE: per-event decayed averages emitted in the arrival
@@ -609,12 +510,7 @@ object StreamingQueries {
               .as("ewma_last"))
           .orderBy(col("user_id"))
       },
-      Some(
-        """SELECT user_id, count(*) AS n_events,
-          |  round(list_reduce(list(value ORDER BY ts, event_id),
-          |    (acc, x) -> CAST(0.2 AS DOUBLE) * x
-          |      + CAST(0.8 AS DOUBLE) * acc), 4) AS ewma_last
-          |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin)),
+      Some(AdvancedQueries.duckEwma)),
 
     // Streaming tumbling-window OHLC under the gate — the one Structured
     // Streaming primitive the family didn't yet gate: a built-in
@@ -656,14 +552,7 @@ object StreamingQueries {
             round(col("__avg"), 6).as("mean_v"))
           .orderBy(col("event_type"), col("day"))
       },
-      Some(
-        """SELECT event_type, epoch_ns(ts) // 86400000000000 AS day,
-          |  arg_min(value, epoch_ns(ts)) AS open,
-          |  max(value) AS high, min(value) AS low,
-          |  arg_max(value, epoch_ns(ts)) AS close,
-          |  count(*) AS n, round(avg(value), 6) AS mean_v
-          |FROM events GROUP BY event_type, day
-          |ORDER BY event_type, day""".stripMargin)),
+      Some(AdvancedQueries.duckOhlc)),
 
     // Streaming incremental IVF maintenance — q203's delta assignment
     // served ONLINE, the production shape exactly: centroids are a
@@ -698,31 +587,7 @@ object StreamingQueries {
           .orderBy(col("cluster"))
       },
       Some {
-        def iter(n: Int): String = {
-          val p = n - 1
-          s"""d$n AS (SELECT h.vec_id AS vec_id, c.cid AS cid,
-             |    sum((h.v - c.v) * (h.v - c.v)) AS dist
-             |  FROM h JOIN c$p c ON h.d = c.d GROUP BY 1, 2),
-             |a$n AS (SELECT vec_id, min(dist * 1048576 + cid) AS comb
-             |  FROM d$n GROUP BY 1),
-             |m$n AS (SELECT vec_id, comb % 1048576 AS cid FROM a$n),
-             |c$n AS (SELECT m.cid AS cid, h.d AS d,
-             |    CAST(floor(CAST(sum(h.v) AS DOUBLE) / count(*)) AS BIGINT)
-             |      AS v
-             |  FROM h JOIN m$n m USING (vec_id) GROUP BY 1, 2)""".stripMargin
-        }
-        s"""WITH q AS (SELECT vec_id,
-           |    unnest(list_transform(embedding, (x, i) -> {'d': i,
-           |      'v': CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT)})) AS e
-           |  FROM embeddings),
-           |qd AS (SELECT vec_id, e.d AS d, e.v AS v FROM q),
-           |h AS (SELECT * FROM qd WHERE vec_id % 10 != 7),
-           |seeds AS (SELECT vec_id FROM embeddings WHERE vec_id % 10 != 7
-           |  ORDER BY vec_id LIMIT 4),
-           |c0 AS (SELECT h.vec_id AS cid, d, v
-           |  FROM h JOIN seeds USING (vec_id)),
-           |${iter(1)},
-           |${iter(2)},
+        s"""${ExtQueries.duckHistCentroids},
            |df AS (SELECT qd.vec_id AS vec_id, c.cid AS cid,
            |    sum((qd.v - c.v) * (qd.v - c.v)) AS dist
            |  FROM qd JOIN c2 c ON qd.d = c.d
@@ -772,18 +637,7 @@ object StreamingQueries {
           .maintain(stream, histLabels, docs, s"$staging/_ckpt")
           .orderBy(col("doc_id"))
       },
-      Some(DedupQueries.duckLshEdges
-          .replaceFirst("WITH ", "WITH RECURSIVE ") + """,
-        |und AS (SELECT doc_a AS s, doc_b AS t FROM jp
-        |        UNION ALL SELECT doc_b, doc_a FROM jp),
-        |reach AS (SELECT s, t FROM und
-        |          UNION
-        |          SELECT r.s, u.t FROM reach r JOIN und u ON r.t = u.s
-        |          WHERE u.t <> r.s)
-        |SELECT d.doc_id,
-        |  least(d.doc_id, coalesce(min(r.t), d.doc_id)) AS cluster_id
-        |FROM documents d LEFT JOIN reach r ON d.doc_id = r.s
-        |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin)),
+      Some(DedupQueries.duckClusters)),
 
     // Streaming containment DECONTAMINATION (StreamingContainment) —
     // q209's cross-corpus exact containment served as its natural
@@ -796,7 +650,8 @@ object StreamingQueries {
     // static index, so the streamed union is batch-split-invariant
     // (StreamingContainmentSpec pins it); the per-probe window the probe
     // stage needs runs inside foreachBatch (the rich-stateless recipe),
-    // landing exactly-once via idempotent per-batchId overwrite dirs.
+    // landing exactly-once via the batchId-keyed map of checkpointed hit
+    // frames (a replayed batch supersedes its own entry).
     // Oracle = q209's batch oracle VERBATIM: one ground truth, batch and
     // streamed route.
     Q("q211_streaming_containment_decontam",
@@ -831,19 +686,7 @@ object StreamingQueries {
             round(col("containment"), 6).as("containment"))
           .orderBy(col("probe_id"), col("doc_id"))
       },
-      Some(DedupQueries.duckGrams + """,
-        |co AS (SELECT a.doc_id AS probe_id, b.doc_id AS doc_id,
-        |    count(*) AS common
-        |  FROM e a JOIN e b ON a.gram = b.gram
-        |  WHERE a.doc_id % 10 = 0 AND b.doc_id % 10 <> 0
-        |  GROUP BY 1, 2)
-        |SELECT probe_id, co.doc_id AS doc_id,
-        |  CAST(common AS INT) AS common,
-        |  round(common * 1.0 / sa.n, 6) AS containment
-        |FROM co
-        |JOIN sizes sa ON probe_id = sa.doc_id
-        |WHERE 5 * common >= 4 * sa.n
-        |ORDER BY probe_id, co.doc_id""".stripMargin)),
+      Some(DedupQueries.duckContainment)),
 
     // Streaming cluster-map TAKEDOWN (StreamingCcTakedown) — q213's
     // decremental CC served as the production deletion LOOP, the
@@ -874,21 +717,7 @@ object StreamingQueries {
             DedupQueries.clusterEdgesFrame(s, dir), s"$staging/_ckpt")
           .orderBy(col("doc_id"))
       },
-      Some(DedupQueries.duckLshEdges
-          .replaceFirst("WITH ", "WITH RECURSIVE ") + """,
-        |jpr AS (SELECT doc_a, doc_b FROM jp
-        |        WHERE doc_a % 10 <> 3 AND doc_b % 10 <> 3),
-        |und AS (SELECT doc_a AS s, doc_b AS t FROM jpr
-        |        UNION ALL SELECT doc_b, doc_a FROM jpr),
-        |reach AS (SELECT s, t FROM und
-        |          UNION
-        |          SELECT r.s, u.t FROM reach r JOIN und u ON r.t = u.s
-        |          WHERE u.t <> r.s)
-        |SELECT d.doc_id,
-        |  least(d.doc_id, coalesce(min(r.t), d.doc_id)) AS cluster_id
-        |FROM documents d LEFT JOIN reach r ON d.doc_id = r.s
-        |WHERE d.doc_id % 10 <> 3
-        |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin)),
+      Some(DedupQueries.duckRetainedClusters)),
 
     // MIXED streaming maintenance (StreamingCcMixed) — the shape a
     // production ingest loop actually has: ONE stream interleaving the
@@ -930,21 +759,7 @@ object StreamingQueries {
             s"$staging/_ckpt")
           .orderBy(col("doc_id"))
       },
-      Some(DedupQueries.duckLshEdges
-          .replaceFirst("WITH ", "WITH RECURSIVE ") + """,
-        |jpr AS (SELECT doc_a, doc_b FROM jp
-        |        WHERE doc_a % 10 <> 3 AND doc_b % 10 <> 3),
-        |und AS (SELECT doc_a AS s, doc_b AS t FROM jpr
-        |        UNION ALL SELECT doc_b, doc_a FROM jpr),
-        |reach AS (SELECT s, t FROM und
-        |          UNION
-        |          SELECT r.s, u.t FROM reach r JOIN und u ON r.t = u.s
-        |          WHERE u.t <> r.s)
-        |SELECT d.doc_id,
-        |  least(d.doc_id, coalesce(min(r.t), d.doc_id)) AS cluster_id
-        |FROM documents d LEFT JOIN reach r ON d.doc_id = r.s
-        |WHERE d.doc_id % 10 <> 3
-        |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin)),
+      Some(DedupQueries.duckRetainedClusters)),
 
     // MIXED streaming maintenance of the passage-grain keep-first INDEX
     // (StreamingIndexMaint) — the r15 verdict's missing piece #3, the
@@ -1017,27 +832,7 @@ object StreamingQueries {
             col("chunk_id").as("keeper_chunk"), col("n_occ"))
           .orderBy(col("unit_hash"))
       },
-      Some(
-        s"""WITH d AS (SELECT doc_id, ${ExtQueries.duckTokens} AS toks
-          |  FROM documents),
-          |c AS (SELECT doc_id,
-          |    unnest(list_transform(generate_series(0, (len(toks) - 1) // 32),
-          |      i -> {'chunk_id': i,
-          |            'ctoks': toks[i * 32 + 1 : least(i * 32 + 32,
-          |                                             len(toks))]})) AS ch
-          |  FROM d WHERE len(toks) >= 1),
-          |u AS (SELECT doc_id, ch.chunk_id AS chunk_id,
-          |    lower(trim(regexp_replace(array_to_string(ch.ctoks, ' '),
-          |      '\\s+', ' ', 'g'))) AS norm
-          |  FROM c WHERE doc_id % 7 <> 2),
-          |w AS (SELECT doc_id, chunk_id, norm,
-          |    count(*) OVER (PARTITION BY norm) AS n_occ,
-          |    row_number() OVER (PARTITION BY norm
-          |      ORDER BY doc_id, chunk_id) AS rn
-          |  FROM u)
-          |SELECT md5(norm) AS unit_hash, doc_id AS keeper_doc,
-          |  chunk_id AS keeper_chunk, CAST(n_occ AS BIGINT) AS n_occ
-          |FROM w WHERE rn = 1 ORDER BY unit_hash""".stripMargin)),
+      Some(CurationQueries.duckRetainedIndex)),
 
     // MIXED add/remove streaming ANN index maintenance
     // (StreamingIvfMixed) — the retraction matrix's LAST quadrant (r16
@@ -1095,17 +890,6 @@ object StreamingQueries {
           .select(col("vec_id"), col("neighbor_id"), col("cos_sim"))
           .orderBy(col("vec_id"), col("neighbor_id"))
       },
-      Some(ExtQueries.ivfTrainCtes(k = 8, iters = 2, dim = 64,
-        probes = Some(2)) +
-        """
-          |SELECT vec_id, neighbor_id, cos_sim FROM (
-          |  SELECT q.vec_id AS vec_id, b.vec_id AS neighbor_id,
-          |    round(list_cosine_similarity(q.e, b.e), 6) AS cos_sim,
-          |    row_number() OVER (PARTITION BY q.vec_id
-          |      ORDER BY round(list_cosine_similarity(q.e, b.e), 6) DESC,
-          |        b.vec_id) AS rk
-          |  FROM aprobe q JOIN afin b ON q.cell = b.cell AND q.vec_id <> b.vec_id
-          |  WHERE q.vec_id % 10 <> 3 AND b.vec_id % 10 <> 3
-          |) t WHERE rk <= 3 ORDER BY vec_id, neighbor_id""".stripMargin))
+      Some(ExtQueries.duckIvfRetract))
   )
 }

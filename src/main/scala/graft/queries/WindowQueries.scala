@@ -32,6 +32,17 @@ object WindowQueries {
        |                ROWS BETWEEN ${N - 1} PRECEDING AND CURRENT ROW)
        |)""".stripMargin
 
+  /** The six window measures over the sorted trailing-30 list `xs`, as
+    * columns `m_mean` … `m_sm2` — the DuckDB ground truth of
+    * `SortedWindow.measures` (q33 and the alerts' `meas`). */
+  private val duckMeasures: String =
+    s"""list_avg(xs) AS m_mean,
+       |(xs[${N / 2}] + xs[${N / 2 + 1}]) / 2.0 AS m_median,
+       |xs[${N / 10 + 1}] AS m_q10,
+       |(xs[1] + xs[2] + xs[3]) / ${N / 10}.0 AS m_tail,
+       |list_avg(xs) - list_aggregate(list_transform(xs, x -> abs(list_avg(xs) - x)), 'sum') / ${2 * N}.0 AS m_sm1,
+       |list_avg(xs) - list_aggregate(list_transform(xs, (x,i) -> (2*i - ${N + 1}) * x), 'sum') / ${N * N}.0 AS m_sm2""".stripMargin
+
   /** Shared measure table (user_id, event_id, m_mean … m_sm2):
     * `AlertPipeline.withMeasures` over the windowed events, one shuffle,
     * one sort per window and one fold per window for q05–q09 and q33
@@ -59,10 +70,12 @@ object WindowQueries {
            |FROM win WHERE rn >= $N""".stripMargin))
 
   val all: Seq[Q] = Seq(
-    // O6: windowed mean (plain built-in window aggregate — no array needed).
+    // O6: windowed mean (plain built-in window aggregate — no array needed),
+    // over the rows `AlertPipeline.windowed` keeps.
     Q("q04_window_mean",
       (s, dir) => {
-        val ev = Tables(s, dir, "events")
+        val ev = Tables(s, dir, "events").where(col("user_id").isNotNull &&
+          col("event_id").isNotNull && col("value").isNotNull)
         val wOrd = Window.partitionBy(col("user_id")).orderBy(col("event_id"))
         ev.select(col("user_id"), col("event_id"),
             avg(col("value")).over(wOrd.rowsBetween(-(N - 1), 0)).as("wmean"),
@@ -77,6 +90,7 @@ object WindowQueries {
            |                     ROWS BETWEEN ${N - 1} PRECEDING AND CURRENT ROW) AS wmean,
            |    row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS rn
            |  FROM events
+           |  WHERE user_id IS NOT NULL AND event_id IS NOT NULL AND value IS NOT NULL
            |) t WHERE rn >= $N""".stripMargin)),
 
     // O7: median = (15th + 16th smallest)/2 (StreamingJob.java:189).
@@ -120,12 +134,7 @@ object WindowQueries {
       Some(
         s"""$winCte
            |SELECT user_id, event_id,
-           |  list_avg(xs) AS m_mean,
-           |  (xs[${N / 2}] + xs[${N / 2 + 1}]) / 2.0 AS m_median,
-           |  xs[${N / 10 + 1}] AS m_q10,
-           |  (xs[1] + xs[2] + xs[3]) / ${N / 10}.0 AS m_tail,
-           |  list_avg(xs) - list_aggregate(list_transform(xs, x -> abs(list_avg(xs) - x)), 'sum') / ${2 * N}.0 AS m_sm1,
-           |  list_avg(xs) - list_aggregate(list_transform(xs, (x,i) -> (2*i - ${N + 1}) * x), 'sum') / ${N * N}.0 AS m_sm2
+           |$duckMeasures
            |FROM win WHERE rn >= $N""".stripMargin),
       bench = false)
   )
@@ -163,12 +172,7 @@ object WindowQueries {
            |                ROWS BETWEEN ${N - 1} PRECEDING AND CURRENT ROW)),
            |meas AS (
            |  SELECT user_id, event_id,
-           |    list_avg(xs) AS m_mean,
-           |    (xs[${N / 2}] + xs[${N / 2 + 1}]) / 2.0 AS m_median,
-           |    xs[${N / 10 + 1}] AS m_q10,
-           |    (xs[1] + xs[2] + xs[3]) / ${N / 10}.0 AS m_tail,
-           |    list_avg(xs) - list_aggregate(list_transform(xs, x -> abs(list_avg(xs) - x)), 'sum') / ${2 * N}.0 AS m_sm1,
-           |    list_avg(xs) - list_aggregate(list_transform(xs, (x,i) -> (2*i - ${N + 1}) * x), 'sum') / ${N * N}.0 AS m_sm2
+           |$duckMeasures
            |  FROM win WHERE rn >= $N),
            |unp AS (
            |  SELECT user_id, event_id, 'mean' AS stat, m_mean AS m FROM meas

@@ -36,12 +36,20 @@ object StreamingContainment {
     * `index`; returns all hits (probeIdCol, corpusIdCol, common,
     * containment). `mkGrams` turns a batch into the (probeIdCol, grams)
     * frame — shingling is per-document, so batch shingling matches the
-    * batch operator's exactly. */
+    * batch operator's exactly. `workDir` must be fresh for each run: the
+    * hits live only in this call's memory, so a checkpoint left by an
+    * earlier run would skip its committed batches and lose their hits. */
   def run(probeStream: DataFrame, index: Dedup.ContainmentIndex,
       num: Int, den: Int, workDir: String,
       mkGrams: DataFrame => DataFrame,
       probeIdCol: String = "probe_id"): DataFrame = {
     val spark = probeStream.sparkSession
+    val ckpt = new org.apache.hadoop.fs.Path(s"$workDir/_ckpt")
+    require(!ckpt.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(ckpt),
+      "StreamingContainment.run needs a fresh workDir for each run, but " +
+        s"$ckpt already exists: a reused checkpoint skips the batches it " +
+        "committed, and their hits are lost")
     // per-batch hit frames accumulate as checkpointed blocks keyed by
     // batchId — a replayed batch SUPERSEDES its earlier frame, the same
     // idempotence the r18 per-batchId parquet overwrite dirs provided,
@@ -77,7 +85,7 @@ object StreamingContainment {
           results(batchId) = hits
         } finally graft.analytics.Graphs.freeLocalCheckpoint(g)
       }
-      .option("checkpointLocation", s"$workDir/_ckpt")
+      .option("checkpointLocation", ckpt.toString)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()

@@ -30,7 +30,7 @@ class CachesSpec extends AnyFunSuite with SparkTestBase {
     assert(builds1 === 1)
     val only1 = Caches.frame(s1, dir, "spec-only-s1")(
       Tables(s1, dir, "nation"))
-    val c1 = Caches.cells(s1, dir, "spec-cfg")(
+    val c1 = Caches.memo[Array[(Int, Array[Double])]](s1, dir, "cells/spec-cfg")(
       Array((0, Array(1.0, 0.0)), (1, Array(0.0, 1.0))))
     val shared2 = Caches.frame(s2, dir, "spec-docs")(
       Tables(s2, dir, "documents"))

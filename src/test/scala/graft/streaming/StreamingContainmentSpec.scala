@@ -55,6 +55,27 @@ class StreamingContainmentSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("a second run on the same workDir fails at entry instead of " +
+      "returning fewer hits") {
+    import spark.implicits._
+    val dir =
+      java.nio.file.Files.createTempDirectory("graft_scont_r").toString
+    val corpus = Seq((100L, "the quick brown fox jumps over the lazy " +
+      "dog near the old river bank today")).toDF("doc_id", "text")
+    val idx = Dedup.containmentIndex(Dedup.shingles(corpus))
+    Seq((1L, "quick brown fox jumps over the lazy dog"))
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/probe")
+    def run() = StreamingContainment.run(
+      spark.readStream.schema("doc_id BIGINT, text STRING")
+        .parquet(s"$dir/probe"),
+      idx, num = 1, den = 2, s"$dir/work",
+      b => Dedup.shingles(b)
+        .select(col("doc_id").as("probe_id"), col("grams")))
+    assert(run().count() === 1L)
+    val e = intercept[IllegalArgumentException](run())
+    assert(e.getMessage.contains("fresh workDir"))
+  }
+
   test("empty probe slice (zero micro-batches) returns the empty hit " +
       "frame, not a path-not-found error") {
     import spark.implicits._
