@@ -141,13 +141,25 @@ object AdvancedQueries {
 
   /** q196's oracle: each user's final alpha=0.2 EWMA in (ts, event_id)
     * order, folded sequentially by `list_reduce` — the ground truth of
-    * q196, q198 and q201. */
+    * q196, q198 and q201. A row with a null user_id, ts, event_id or
+    * value is dropped, as [[ewmaEvents]] and `StreamingEwma.eventRows`
+    * drop it. */
   private[queries] lazy val duckEwma: String =
     """SELECT user_id, count(*) AS n_events,
       |  round(list_reduce(list(value ORDER BY ts, event_id),
       |    (acc, x) -> CAST(0.2 AS DOUBLE) * x
       |      + CAST(0.8 AS DOUBLE) * acc), 4) AS ewma_last
-      |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin
+      |FROM events
+      |WHERE user_id IS NOT NULL AND ts IS NOT NULL
+      |  AND event_id IS NOT NULL AND value IS NOT NULL
+      |GROUP BY user_id ORDER BY user_id""".stripMargin
+
+  /** The events the batch EWMA queries (q196, q201) fold: a row with a
+    * null user_id, ts, event_id or value is dropped. */
+  private def ewmaEvents(s: SparkSession, dir: String): DataFrame =
+    Tables(s, dir, "events").where(col("user_id").isNotNull &&
+      col("ts").isNotNull && col("event_id").isNotNull &&
+      col("value").isNotNull)
 
   /** Shared oracle prefix for q191/q195: the 8-token clean keys, their
     * rarest-bigram blocking and the candidate (dirty, clean) pairs as CTE
@@ -1727,10 +1739,9 @@ object AdvancedQueries {
     // so the risk is quantized away, not tolerance-compared away).
     Q("q196_ewma",
       (s, dir) => {
-        val e = Tables(s, dir, "events")
         graft.analytics.Recurrence
-          .ewma(e, Seq("user_id"), Seq(col("ts").asc, col("event_id").asc),
-            "value", alpha = 0.2)
+          .ewma(ewmaEvents(s, dir), Seq("user_id"),
+            Seq(col("ts").asc, col("event_id").asc), "value", alpha = 0.2)
           .groupBy(col("user_id"))
           .agg(count(lit(1)).as("n_events"),
             round(max_by(col("ewma"), struct(col("ts"), col("event_id"))), 4)
@@ -1790,9 +1801,8 @@ object AdvancedQueries {
     // engine shapes, one ground truth, like q175/q177.
     Q("q201_ewma_bucketed",
       (s, dir) => {
-        val e = Tables(s, dir, "events")
         graft.analytics.Recurrence
-          .ewmaBucketed(e, Seq("user_id"), "ts",
+          .ewmaBucketed(ewmaEvents(s, dir), Seq("user_id"), "ts",
             Seq(col("ts").asc, col("event_id").asc), "value", alpha = 0.2,
             bucket = 6L * 3600L * 1000000000L)
           .groupBy(col("user_id"))

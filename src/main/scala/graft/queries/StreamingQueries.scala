@@ -52,10 +52,11 @@ object StreamingQueries {
     val ckpt =
       AnalyticsQueries.tempDirCleanedOnExit(s"graft_${tag}_ckpt_").toString
     // every stateful operator in the registry runs on the RocksDB state
-    // store — heap-resident default state is the 100 TB scale ceiling
-    // (see StateBackend); stateless queries ignore the setting. The
-    // provider is captured at start(), so the save/restore wrapper keeps
-    // RocksDB for this stream's life without leaving the session conf
+    // store — heap-resident default state is the 100 TB scale ceiling —
+    // and every stream, stateless ones too, writes its offset and commit
+    // logs through the FileSystem checkpoint manager (see StateBackend).
+    // Both are captured at start(), so the save/restore wrapper keeps
+    // them for this stream's life without leaving the session conf
     // flipped for streams a host application starts later.
     graft.streaming.StateBackend.withRocksDb(spark) {
       val q = stream.writeStream

@@ -16,41 +16,62 @@ import org.apache.spark.sql.SparkSession
   * heap-bounded, and micro-batch cost tracks the BATCH's touched keys,
   * not the store's total size.
   *
-  * [[useRocksDb]] flips a session to the RocksDB provider (idempotent,
-  * same value from every caller — safe under concurrent sessions). The
-  * provider class is captured per-query at `start()` and recorded in the
-  * checkpoint, so restarts keep the backend they started with;
-  * `CheckpointRestartSpec`/`DeltaDedupRestartSpec`/`EwmaRestartSpec` pin
-  * restart-across-the-provider behavior, and `StateScale` measures state
-  * growth staying off-heap through 100× novel-key volume.
+  * What a checkpoint file costs. Every micro-batch writes an offset-log
+  * file, one state changelog per state partition and a commit-log file,
+  * each to a temp file that is then renamed into place. Spark's default
+  * checkpoint file manager goes through Hadoop's `FileContext`, whose
+  * local file system (without the native Hadoop library) forks a `chmod`
+  * for each created file and a `readlink` for each path of each rename:
+  * about 100 forked processes per micro-batch of the events stream, which
+  * cost more than the operator itself. [[withRocksDb]] therefore also
+  * selects Spark's `FileSystemBasedCheckpointFileManager`, which renames
+  * through `FileSystem` without those forks (one `chmod` per created temp
+  * file is left). Durability is unchanged: changelog checkpointing stays
+  * on, and every file is still written whole and renamed into place.
+  * That rename must be atomic on the checkpoint's file system, as it is
+  * on `file:` and `hdfs:`; a store without an atomic rename (an object
+  * store) needs its own manager.
+  *
+  * The provider and the file manager are captured per-query at `start()`
+  * (the stream runs on a clone of the session), and the provider is
+  * recorded in the checkpoint, so restarts keep the backend they started
+  * with; `CheckpointRestartSpec`/`DeltaDedupRestartSpec`/`EwmaRestartSpec`
+  * pin restart-across-the-provider behavior, `StateScale` measures state
+  * growth staying off-heap through 100× novel-key volume, and
+  * `StateBackendSpec` pins the save/restore contract.
   */
 object StateBackend {
   val ProviderConfKey = "spark.sql.streaming.stateStore.providerClass"
-  val ChangelogConfKey =
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
   val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+  private val ChangelogConfKey =
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+  private val CheckpointManagerConfKey =
+    "spark.sql.streaming.checkpointFileManagerClass"
+  private val FileSystemCheckpointManager = "org.apache.spark.sql.execution." +
+    "streaming.checkpointing.FileSystemBasedCheckpointFileManager"
 
-  /** Route this session's stateful streaming queries onto RocksDB.
-    * Changelog checkpointing uploads per-batch deltas instead of full
-    * SST snapshots — the production setting for large state; correctness
-    * is identical (the restart specs run against exactly this config). */
-  def useRocksDb(spark: SparkSession): Unit = {
-    spark.conf.set(ProviderConfKey, RocksDbProvider)
-    spark.conf.set(ChangelogConfKey, "true")
-  }
-
-  /** Run `body` with the RocksDB provider active, then RESTORE the
-    * session's previous backend confs. The provider class is captured
-    * per-query at `start()`, so a stream started inside `body` keeps
-    * RocksDB for its whole life; restoring afterwards just stops the
-    * session-wide conf from leaking into later stateful streams an
-    * embedding session starts on its own (the r14 ADVICE finding — the
-    * restart specs previously had to unset the keys by hand). */
+  /** Run `body` with this session's streams on RocksDB, then RESTORE the
+    * session's previous values of the three keys (set or unset).
+    * Changelog checkpointing uploads per-batch deltas instead of full SST
+    * snapshots — the production setting for large state; correctness is
+    * identical (the restart specs run against exactly this config). The
+    * `FileSystem` checkpoint manager writes the offset, commit and state
+    * logs without forking a process per file (see above); stateless
+    * streams started in `body` use it too. Both are captured per-query at
+    * `start()`, so a stream started inside `body` keeps them for its
+    * whole life; restoring afterwards just stops the session-wide conf
+    * from leaking into later streams an embedding session starts on its
+    * own. */
   def withRocksDb[T](spark: SparkSession)(body: => T): T = {
-    val prior = Seq(ProviderConfKey, ChangelogConfKey)
-      .map(k => k -> spark.conf.getOption(k))
-    useRocksDb(spark)
+    val keys = Seq(ProviderConfKey -> RocksDbProvider,
+      ChangelogConfKey -> "true",
+      CheckpointManagerConfKey -> FileSystemCheckpointManager)
+    // getAll holds only the keys set on the session: a key left at its
+    // default is restored to unset, not pinned to the default
+    val set = spark.conf.getAll
+    val prior = keys.map { case (k, _) => k -> set.get(k) }
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
     finally prior.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)

@@ -36,7 +36,10 @@ object StreamingEwma {
   final case class EwmaRow(key: Long, ts: Long, id: Long, x: Double,
       ewma: Double)
 
-  /** Typed rows from a streaming events frame — pure map stage. */
+  /** Typed rows from a streaming events frame — pure map stage. A row
+    * whose key, ts, id or value is null is dropped before the `EventRow`
+    * decode, as the batch EWMA queries (q196, q201) drop it; it would
+    * otherwise fail the query. */
   def eventRows(events: DataFrame, keyCol: String = "user_id",
       tsCol: String = "ts", idCol: String = "event_id",
       valueCol: String = "value"): Dataset[EventRow] = {
@@ -44,6 +47,8 @@ object StreamingEwma {
     events.select(col(keyCol).cast("long").as("key"),
       col(tsCol).cast("long").as("ts"), col(idCol).cast("long").as("id"),
       col(valueCol).cast("double").as("x"))
+      .where(col("key").isNotNull && col("ts").isNotNull &&
+        col("id").isNotNull && col("x").isNotNull)
       .as[EventRow]
   }
 

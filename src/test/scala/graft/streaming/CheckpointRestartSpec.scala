@@ -37,12 +37,7 @@ class CheckpointRestartSpec extends AnyFunSuite with SparkTestBase {
     def readOut() = spark.read.parquet(s"$dir/out").as[StreamAlert]
 
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/in"))
-    // explicit per-branch: defensive against any earlier
-    // session-conf writer (runToTable now save/restores via
-    // StateBackend.withRocksDb), so "default" unsets, not merely not-sets
-    if (backend == "rocksdb") StateBackend.useRocksDb(spark)
-    else spark.conf.unset(StateBackend.ProviderConfKey)
-    val (afterFirst, all) = try {
+    def run() = {
       write("in/a.json", rows.take(44)) // 22 seqs/key: windows already firing
       val q1 = startQuery()
       q1.processAllAvailable()
@@ -54,8 +49,12 @@ class CheckpointRestartSpec extends AnyFunSuite with SparkTestBase {
       q2.processAllAvailable()
       q2.stop()
       (n1, readOut().collect())
-    } finally if (backend == "rocksdb")
-      spark.conf.unset(StateBackend.ProviderConfKey)
+    }
+    // "default" unsets the provider, not merely leaves it: defensive
+    // against any earlier session-conf writer
+    val (afterFirst, all) =
+      if (backend == "rocksdb") StateBackend.withRocksDb(spark)(run())
+      else { spark.conf.unset(StateBackend.ProviderConfKey); run() }
 
     // batch truth over the full input: 2 keys x 11 windows x 6 stats
     val expected = refMeasures(data, 20)

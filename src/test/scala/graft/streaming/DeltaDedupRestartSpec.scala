@@ -47,12 +47,7 @@ class DeltaDedupRestartSpec extends AnyFunSuite with SparkTestBase {
           .outputMode("append").start()
       }
 
-      // explicit per-branch: defensive against any earlier
-      // session-conf writer (runToTable now save/restores via
-      // StateBackend.withRocksDb), so "default" unsets, not merely not-sets
-      if (backend == "rocksdb") StateBackend.useRocksDb(spark)
-      else spark.conf.unset(StateBackend.ProviderConfKey)
-      try {
+      def run(): Unit = {
         // phase 1: a novel doc (kept) + a history dup
         feed("b1", Seq((10L, "novel alpha"), (11L, "curated")))
         val q1 = startQuery()
@@ -65,8 +60,11 @@ class DeltaDedupRestartSpec extends AnyFunSuite with SparkTestBase {
         val q2 = startQuery()
         q2.processAllAvailable()
         q2.stop()
-      } finally if (backend == "rocksdb")
-        spark.conf.unset(StateBackend.ProviderConfKey)
+      }
+      // "default" unsets the provider, not merely leaves it: defensive
+      // against any earlier session-conf writer
+      if (backend == "rocksdb") StateBackend.withRocksDb(spark)(run())
+      else { spark.conf.unset(StateBackend.ProviderConfKey); run() }
 
       val out = spark.read.parquet(s"$dir/out")
         .select(col("docId"), col("inHistory"), col("keep")).collect()

@@ -41,12 +41,7 @@ class EwmaRestartSpec extends AnyFunSuite with SparkTestBase {
           .outputMode("append").start()
       }
 
-      // explicit per-branch: defensive against any earlier
-      // session-conf writer (runToTable now save/restores via
-      // StateBackend.withRocksDb), so "default" unsets, not merely not-sets
-      if (backend == "rocksdb") StateBackend.useRocksDb(spark)
-      else spark.conf.unset(StateBackend.ProviderConfKey)
-      try {
+      def run(): Unit = {
         // phase 1: key 1 folds 8 -> 6 (= 0.5*4 + 0.5*8); key 2 seeds at 3
         feed("b1", Seq((1L, 0L, 0L, 8.0), (1L, 1L, 1L, 4.0), (2L, 0L, 2L, 3.0)))
         val q1 = startQuery()
@@ -58,8 +53,11 @@ class EwmaRestartSpec extends AnyFunSuite with SparkTestBase {
         val q2 = startQuery()
         q2.processAllAvailable()
         q2.stop()
-      } finally if (backend == "rocksdb")
-        spark.conf.unset(StateBackend.ProviderConfKey)
+      }
+      // "default" unsets the provider, not merely leaves it: defensive
+      // against any earlier session-conf writer
+      if (backend == "rocksdb") StateBackend.withRocksDb(spark)(run())
+      else { spark.conf.unset(StateBackend.ProviderConfKey); run() }
 
       val out = spark.read.parquet(s"$dir/out")
         .select(col("id"), col("ewma")).collect()

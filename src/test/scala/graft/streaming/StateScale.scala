@@ -76,15 +76,20 @@ object StateScale {
 
     def fmtMb(v: Long): String = f"${v / 1048576.0}%8.1f MB"
 
-    def run(tag: String, backend: String, in: String): Unit = {
-      if (backend == "rocksdb") {
-        StateBackend.useRocksDb(spark)
+    def run(tag: String, backend: String, in: String): Unit =
+      if (backend == "rocksdb") StateBackend.withRocksDb(spark) {
         // small write buffer so memtables FLUSH to SST within the probe's
         // batch count — the disk-bounded path is the claim being measured
         // (at production state sizes flushes happen regardless)
         spark.conf.set(
           "spark.sql.streaming.stateStore.rocksdb.writeBufferSizeMB", "4")
-      } else spark.conf.unset(StateBackend.ProviderConfKey)
+        measure(tag, backend, in)
+      } else {
+        spark.conf.unset(StateBackend.ProviderConfKey)
+        measure(tag, backend, in)
+      }
+
+    def measure(tag: String, backend: String, in: String): Unit = {
       val ckpt = s"$base/ckpt_${tag}_$backend"
       val q = StreamingDeltaDedup.decisions(StreamingDeltaDedup.rows(
           spark.readStream.schema("doc_id BIGINT, text STRING")
@@ -124,7 +129,6 @@ object StateScale {
       val in = genInput(tag)
       for (backend <- Seq("default", "rocksdb")) run(tag, backend, in)
     }
-    spark.conf.unset(StateBackend.ProviderConfKey)
     spark.stop()
   }
 }

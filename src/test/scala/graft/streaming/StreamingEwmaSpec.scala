@@ -31,6 +31,15 @@ class StreamingEwmaSpec extends AnyFunSuite with SparkTestBase {
     // the cross-batch carry is load-bearing for every key
     val (b1, b2) = all.splitAt(60)
     feed(dir, "b1", b1)
+    // one row with a null in each column, timed inside key 1's series: each
+    // is dropped before the EventRow decode, so it neither fails the query
+    // nor moves the fold
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/in/b1_nulls.json"),
+      Seq("""{"user_id":1,"ts":15,"event_id":1001,"value":null}""",
+        """{"user_id":null,"ts":25,"event_id":1002,"value":1.0}""",
+        """{"user_id":1,"ts":null,"event_id":1003,"value":1.0}""",
+        """{"user_id":1,"ts":35,"event_id":null,"value":1.0}""")
+        .mkString("\n").getBytes("UTF-8"))
 
     val stream = spark.readStream
       .schema("user_id BIGINT, ts BIGINT, event_id BIGINT, value DOUBLE")
