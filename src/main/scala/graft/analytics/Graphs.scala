@@ -496,8 +496,8 @@ object Graphs {
       .unionAll(resolved)
   }
 
-  /** The repair half of [[ccRetract]], factored so a streaming takedown
-    * maintainer ([[graft.streaming.StreamingCcTakedown]]) can accumulate
+  /** The repair half of [[ccRetract]], factored so the streaming cluster-map
+    * maintainer ([[graft.streaming.StreamingCcMixed]]) can accumulate
     * ONLY the repaired labels as a bounded override table instead of
     * rewriting the corpus per batch: returns (resolved labels for the
     * affected components' RETAINED members — the only rows whose labels
@@ -654,30 +654,29 @@ object Graphs {
     * CollectBoundSpec's registry gate (4500) by margin. */
   private val RetractSolveBound = 4000
 
-  /** Step 3 of [[ccDelta]] as the MERGE-ON-READ label view: every id's
-    * label through (base, remap) — base root first (own id for new
-    * nodes), then the broadcast remap re-points roots that deltas merged
-    * since base was compacted; absent from both = untouched singleton /
-    * component. One map-side pass over `ids`; this is the only place the
-    * corpus-sized frame is rewritten, so a maintainer that reads through
-    * this view pays the rewrite only at COMPACTION time, not per batch. */
+  /** Step 3 of [[ccDelta]]: every id's label through (base, remap) —
+    * base root first (own id for new nodes), then the broadcast remap
+    * ([[remapLabels]]) re-points roots that the delta merged; absent from
+    * both = untouched singleton / component. One map-side pass over
+    * `ids`. */
   def composeLabels(base: DataFrame, remap: Option[DataFrame],
       ids: DataFrame, idCol: String = "doc_id"): DataFrame = {
     val lbl = base.select(col(idCol).as("__n"), col("cluster_id").as("__r"))
+    // precedence: remapped touched root > base root > own id (new node)
     val withBase = ids.select(col(idCol))
       .join(lbl, col(idCol) === col("__n"), "left")
-    remap match {
-      case None => withBase.select(col(idCol),
-        coalesce(col("__r"), col(idCol)).as("cluster_id"))
-      case Some(r) => withBase
-        // coalesce order encodes the precedence:
-        // remapped touched root > base root > own id (new node)
-        .join(broadcast(r),
-          coalesce(col("__r"), col(idCol)) === col("__cn"), "left")
-        .select(col(idCol),
-          coalesce(col("__new"), col("__r"), col(idCol)).as("cluster_id"))
-    }
+      .select(col(idCol), coalesce(col("__r"), col(idCol)).as("cluster_id"))
+    remap.fold(withBase)(remapLabels(withBase, _, idCol))
   }
+
+  /** Re-point every (idCol, cluster_id) label through the broadcast root
+    * `remap` (`__cn` old root → `__new` new root); a label absent from
+    * the remap stays. `labels.cluster_id` must be non-null. */
+  private[graft] def remapLabels(labels: DataFrame, remap: DataFrame,
+      idCol: String): DataFrame =
+    labels.join(broadcast(remap), col("cluster_id") === col("__cn"), "left")
+      .select(col(idCol),
+        coalesce(col("__new"), col("cluster_id")).as("cluster_id"))
 
   /** Exact per-node triangle counts by DEGREE-ORDERED wedge join (the
     * standard scalable algorithm — Suri & Vassilvitskii 2011's

@@ -115,7 +115,11 @@ object AlertPipeline {
     * per key and evaluates measures and predicate in the same loop. There
     * is no window operator, array column, join or per-window sort; one
     * key's series is walked by one task. `ord` must be unique within a key,
-    * as for [[windowed]].
+    * as for [[windowed]]: tied rows would reach the window in the
+    * shuffle's arrival order, so the walk fails (`require`, naming the
+    * key and `ord`) on a duplicate instead of giving alerts that change
+    * from run to run. The stream's side of this contract:
+    * `CountSlidingWindow` skips a row at or below its key's last `seq`.
     *
     * Divisions by zero (the tail mean of a window shorter than 10; a
     * threshold of exactly −1) give no alert. */
@@ -137,17 +141,24 @@ object AlertPipeline {
       .mapPartitions { rows =>
         val window = new SortedWindow(n)
         var current: Any = null
+        var lastOrd: Any = null
         var live: Array[(Int, Double)] = null // (stat index, threshold) of the current key
         rows.flatMap { r =>
           val k = r.get(0)
+          val o = r.get(1)
           if (live == null || k != current) {
             current = k
             window.clear()
             val cellKey = if (keyed) k else AllKeys
             live = SortedWindow.cells(stat => cells.get((stat, cellKey)))
+          } else {
+            // tied rows would reach the window in shuffle-arrival order
+            require(o != lastOrd, s"windowAlerts: duplicate $ord = $o " +
+              s"within $key = $k; $ord must be unique within a key")
           }
+          lastOrd = o
           window.push(r.getDouble(2))
-          window.alerts(live, shortfall)((stat, m, t) => Row(k, r.get(1), stat, m, t))
+          window.alerts(live, shortfall)((stat, m, t) => Row(k, o, stat, m, t))
         }
       }(Encoders.row(schema))
   }

@@ -20,7 +20,6 @@ object ExtQueries {
 
   private val stopwords = Seq("the", "a", "of", "and", "to", "in", "is",
     "on", "for", "with")
-  private val stopList = stopwords.map(w => s"'$w'").mkString(", ")
 
   /** DuckDB replica of [[graft.similarity.Similarity.trainCells]]: the
     * Lloyd loop unrolled into CTEs (`c0 → a1 → c1 → … → c$iters`), ending

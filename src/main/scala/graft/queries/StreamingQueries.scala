@@ -33,7 +33,7 @@ object StreamingQueries {
   /** The streaming file source wants a directory; driver tables are single
     * parquet files — stage via symlink into a temp dir (absolutized so a
     * relative `dir` can't dangle), cleaned at JVM exit. */
-  private def stagedTableDir(dir: String, table: String): String = {
+  private[graft] def stagedTableDir(dir: String, table: String): String = {
     val d = AnalyticsQueries.tempDirCleanedOnExit(s"graft_stream_${table}_")
     java.nio.file.Files.createSymbolicLink(
       d.resolve(s"$table.parquet"),
@@ -69,6 +69,46 @@ object StreamingQueries {
     }
     spark.table(name)
   }
+
+  /** q207/q215/q216's cluster-map stream: stage `ops` (op, a, b) as 4
+    * parquet files, fold them one per micro-batch through
+    * [[graft.streaming.StreamingCcMixed]] against `labels` and the
+    * standing edge set `edges`, and return the final map by doc_id. */
+  private def maintainClusters(s: org.apache.spark.sql.SparkSession,
+      dir: String, tag: String, ops: DataFrame, labels: DataFrame,
+      edges: DataFrame): DataFrame = {
+    val staging = AnalyticsQueries.tempDirCleanedOnExit(tag).toString
+    ops.repartition(4).write.mode("overwrite").parquet(s"$staging/ops")
+    val stream = s.readStream.schema("op STRING, a BIGINT, b BIGINT")
+      .option("maxFilesPerTrigger", "1").parquet(s"$staging/ops")
+    graft.streaming.StreamingCcMixed
+      .maintain(stream, labels, edges,
+        Tables(s, dir, "documents").select(col("doc_id")),
+        s"$staging/_ckpt")
+      .orderBy(col("doc_id"))
+  }
+
+  /** Both ends of a cluster edge in the history slice. */
+  private def bothHist =
+    DedupQueries.isHistDoc(col("doc_a")) && DedupQueries.isHistDoc(col("doc_b"))
+
+  /** q207/q216's standing edge set: the history-only cluster edges. */
+  private def histEdges(s: org.apache.spark.sql.SparkSession,
+      dir: String): DataFrame =
+    DedupQueries.clusterEdgesFrame(s, dir).where(bothHist)
+
+  /** q207/q216's adds: every cluster edge touching a non-history doc. */
+  private def deltaAddOps(s: org.apache.spark.sql.SparkSession,
+      dir: String): DataFrame =
+    DedupQueries.clusterEdgesFrame(s, dir).where(!bothHist)
+      .select(lit("add").as("op"), col("doc_a").as("a"),
+        col("doc_b").as("b"))
+
+  /** q215/q216's removes: the doc_id % 10 == 3 takedown slice. */
+  private def takedownRmOps(s: org.apache.spark.sql.SparkSession,
+      dir: String): DataFrame =
+    Tables(s, dir, "documents").where(col("doc_id") % 10 === 3)
+      .select(lit("rm").as("op"), col("doc_id").as("a"), lit(-1L).as("b"))
 
   /** [[docStream]] fanned out by doc_id BEFORE per-document heavy work —
     * the streaming twin of `Tables.sharded`: the staged source is ONE
@@ -603,41 +643,26 @@ object StreamingQueries {
            |FROM fa GROUP BY cluster ORDER BY cluster""".stripMargin
       }),
 
-    // Streaming cluster-map maintenance (StreamingCcDelta) — q206's
-    // incremental CC served as the production ingest LOOP: the delta
-    // edge set (every LSH pair touching a doc_id % 10 == 0 doc) streams
-    // in as 4 micro-batches (4-way repartitioned staging parquet under
-    // maxFilesPerTrigger=1), and foreachBatch folds each MERGE-ON-READ:
-    // the persisted base label table is only scanned (endpoint-root
-    // lookup), the fold accumulates a touched-roots-only broadcast remap,
-    // and the corpus-sized rewrite happens solely at compaction — so
-    // per-batch cost ∝ batch, never the corpus or the history edge set
-    // (the r14 verdict's scale fix; the final map reads through
-    // base ⟕ remap). The fold invariant (labels = CC over edges seen so
-    // far) makes the final map batch-split-invariant; StreamingCcDeltaSpec
-    // pins the adversarial split where each bridge of a 4-component merge
-    // chain arrives in a DIFFERENT batch plus the forced-compaction
-    // regime, CcPersistRestartSpec pins driver-crash recovery from the
-    // persisted state. Oracle = q171/q206's full-graph recursive-CTE CC
-    // VERBATIM: batch engine, incremental engine, streamed incremental
-    // engine, and DuckDB — one ground truth, four routes.
+    // Streaming cluster-map maintenance, add-only (StreamingCcMixed) —
+    // q206's incremental CC served as the production ingest LOOP: the
+    // delta edge set (every LSH pair touching a doc_id % 10 == 0 doc)
+    // streams in as 4 micro-batches of "add" ops, and foreachBatch folds
+    // each MERGE-ON-READ: the persisted base label table is only scanned
+    // (endpoint-root lookup), the fold accumulates a touched-roots-only
+    // broadcast remap, and the corpus-sized rewrite happens solely at
+    // compaction — so per-batch cost ∝ batch, never the corpus. The fold
+    // invariant (labels = CC over edges seen so far) makes the final map
+    // batch-split-invariant; StreamingCcMixedSpec pins the adversarial
+    // split where each bridge of a 4-component merge chain arrives in a
+    // DIFFERENT batch plus the forced-compaction regime,
+    // MixedPersistRestartSpec pins driver-crash recovery. Oracle =
+    // q171/q206's full-graph recursive-CTE CC VERBATIM: batch engine,
+    // incremental engine, streamed incremental engine, and DuckDB — one
+    // ground truth, four routes.
     Q("q207_streaming_cc_maintenance",
-      (s, dir) => {
-        val docs = Tables(s, dir, "documents").select(col("doc_id"))
-        val histLabels = DedupQueries.histLabelsFrame(s, dir)
-        val staging =
-          AnalyticsQueries.tempDirCleanedOnExit("graft_sccd_").toString
-        DedupQueries.clusterEdges(s, dir)
-          .where(!DedupQueries.isHistDoc(col("doc_a")) ||
-            !DedupQueries.isHistDoc(col("doc_b")))
-          .repartition(4)
-          .write.mode("overwrite").parquet(s"$staging/delta")
-        val stream = s.readStream.schema("doc_a BIGINT, doc_b BIGINT")
-          .option("maxFilesPerTrigger", "1").parquet(s"$staging/delta")
-        graft.streaming.StreamingCcDelta
-          .maintain(stream, histLabels, docs, s"$staging/_ckpt")
-          .orderBy(col("doc_id"))
-      },
+      (s, dir) => maintainClusters(s, dir, "graft_sccd_",
+        deltaAddOps(s, dir), DedupQueries.histLabelsFrame(s, dir),
+        histEdges(s, dir)),
       Some(DedupQueries.duckClusters)),
 
     // Streaming containment DECONTAMINATION (StreamingContainment) —
@@ -689,35 +714,23 @@ object StreamingQueries {
       },
       Some(DedupQueries.duckContainment)),
 
-    // Streaming cluster-map TAKEDOWN (StreamingCcTakedown) — q213's
-    // decremental CC served as the production deletion LOOP, the
-    // remove-stream twin of q207's add-stream: the doc_id % 10 == 3
-    // takedown set streams in as 4 micro-batches and each batch repairs
-    // ONLY the components it touches against the standing labels (q55's
-    // shared clustersFrame), merge-on-read — base scanned not rewritten,
-    // repaired labels accumulate as a bounded override table (per-MEMBER,
-    // because removal can split a component — no root remap exists),
+    // Streaming cluster-map TAKEDOWN, remove-only (StreamingCcMixed) —
+    // q213's decremental CC served as the production deletion LOOP: the
+    // doc_id % 10 == 3 takedown set streams in as 4 micro-batches of "rm"
+    // ops and each batch repairs ONLY the components it touches against
+    // the standing labels (q55's shared clustersFrame), merge-on-read —
+    // base scanned not rewritten, repaired labels accumulate as a bounded
+    // override table (per-MEMBER, because removal can split a component),
     // tombstones broadcast at read, corpus rewrite only at compaction.
     // Later batches resolve against the already-repaired view, so the
-    // final map is split-invariant (StreamingCcTakedownSpec pins the
+    // final map is split-invariant (StreamingCcMixedSpec pins the
     // same-component-touched-twice split + forced compaction). Oracle =
     // q213's retained-graph recursive-CTE oracle VERBATIM: batch
     // retraction, streamed retraction, and DuckDB — one ground truth.
     Q("q215_streaming_cc_takedown",
-      (s, dir) => {
-        val staging =
-          AnalyticsQueries.tempDirCleanedOnExit("graft_sctd_").toString
-        Tables(s, dir, "documents").select(col("doc_id"))
-          .where(col("doc_id") % 10 === 3)
-          .repartition(4)
-          .write.mode("overwrite").parquet(s"$staging/removals")
-        val stream = s.readStream.schema("doc_id BIGINT")
-          .option("maxFilesPerTrigger", "1").parquet(s"$staging/removals")
-        graft.streaming.StreamingCcTakedown
-          .maintain(stream, DedupQueries.clustersFrame(s, dir),
-            DedupQueries.clusterEdgesFrame(s, dir), s"$staging/_ckpt")
-          .orderBy(col("doc_id"))
-      },
+      (s, dir) => maintainClusters(s, dir, "graft_sctd_",
+        takedownRmOps(s, dir), DedupQueries.clustersFrame(s, dir),
+        DedupQueries.clusterEdgesFrame(s, dir)),
       Some(DedupQueries.duckRetainedClusters)),
 
     // MIXED streaming maintenance (StreamingCcMixed) — the shape a
@@ -734,32 +747,9 @@ object StreamingQueries {
     // retract (q215), and mixed add+remove (q216) all land on one
     // ground truth by construction, which is the whole point.
     Q("q216_streaming_cc_mixed",
-      (s, dir) => {
-        val docs = Tables(s, dir, "documents").select(col("doc_id"))
-        val histLabels = DedupQueries.histLabelsFrame(s, dir)
-        val histEdges = DedupQueries.clusterEdgesFrame(s, dir)
-          .where(DedupQueries.isHistDoc(col("doc_a")) &&
-            DedupQueries.isHistDoc(col("doc_b")))
-        val staging =
-          AnalyticsQueries.tempDirCleanedOnExit("graft_scmx_").toString
-        DedupQueries.clusterEdgesFrame(s, dir)
-          .where(!DedupQueries.isHistDoc(col("doc_a")) ||
-            !DedupQueries.isHistDoc(col("doc_b")))
-          .select(lit("add").as("op"), col("doc_a").as("a"),
-            col("doc_b").as("b"))
-          .unionAll(docs.where(col("doc_id") % 10 === 3)
-            .select(lit("rm").as("op"), col("doc_id").as("a"),
-              lit(-1L).as("b")))
-          .repartition(4)
-          .write.mode("overwrite").parquet(s"$staging/ops")
-        val stream = s.readStream
-          .schema("op STRING, a BIGINT, b BIGINT")
-          .option("maxFilesPerTrigger", "1").parquet(s"$staging/ops")
-        graft.streaming.StreamingCcMixed
-          .maintain(stream, histLabels, histEdges, docs,
-            s"$staging/_ckpt")
-          .orderBy(col("doc_id"))
-      },
+      (s, dir) => maintainClusters(s, dir, "graft_scmx_",
+        deltaAddOps(s, dir).unionAll(takedownRmOps(s, dir)),
+        DedupQueries.histLabelsFrame(s, dir), histEdges(s, dir)),
       Some(DedupQueries.duckRetainedClusters)),
 
     // MIXED streaming maintenance of the passage-grain keep-first INDEX

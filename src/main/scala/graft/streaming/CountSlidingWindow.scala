@@ -37,7 +37,12 @@ case class Ring(buf: Array[Double], head: Int, count: Int, lastSeq: Long)
   *    once at the end;
   *  - every push that leaves a full window evaluates the six measures and
   *    the threshold predicate with `SortedWindow.alerts`, the batch
-  *    kernel's code, so both give the same alerts with bit-identical `m`.
+  *    kernel's code, so both give the same alerts with bit-identical `m`;
+  *  - a row whose `seq` is at or below its key's last pushed `seq` (a
+  *    late row, a duplicate `seq`, a replay) is skipped by the
+  *    [[Ring]]`.lastSeq` guard. The batch kernel instead requires `seq`
+  *    unique within a key and fails on a duplicate, so the two agree
+  *    only on input whose `seq` is unique per key and arrives in order.
   *
   * Checkpointing (a `checkpointLocation` on the sink) then gives restart
   * semantics the reference never had.

@@ -8,23 +8,25 @@ import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.analytics.Graphs
 
-/** MIXED streaming cluster-map maintenance — the shape a production
-  * ingest loop actually has: ONE stream interleaving delta-edge ADDS
-  * ([[StreamingCcDelta]]'s job) and takedown REMOVES
-  * ([[StreamingCcTakedown]]'s job) against one standing label state.
-  * The fold invariant is "view = CC over (history ∪ added edges so far)
+/** Streaming cluster-map maintenance — the one fold for every op mix a
+  * production ingest loop has: ONE stream of delta-edge ADDS
+  * ([[Graphs.ccDelta]] served incrementally) and takedown REMOVES
+  * ([[Graphs.ccRetract]] served incrementally), in any interleaving,
+  * against one standing label state. An add-only stream (q207) and a
+  * remove-only stream (q215) are the degenerate mixes. The fold
+  * invariant is "view = CC over (history ∪ added edges so far)
   * restricted to retained ids", so the final map is row-equal to the
   * batch computation however the operations split into micro-batches —
   * StreamingCcMixedSpec pins planted interleavings (merge-then-takedown
-  * of the same component, same-batch add+remove, takedown-then-remerge)
-  * plus randomized mixed schedules; q216 gates the sf pipeline against
-  * the retained-full-graph recursive-CTE oracle (q213's VERBATIM — the
-  * adds are the q206/q207 delta slice, the removes the q213 slice: four
-  * engine routes and DuckDB on one ground truth).
+  * of the same component, same-batch add+remove, takedown-then-remerge),
+  * an add-only cross-batch merge chain, remove-only split/handoff/vanish
+  * shapes, plus randomized mixed schedules. q207 gates the add-only
+  * stream against the full-graph recursive-CTE oracle (q171/q206's),
+  * q215 the remove-only and q216 the mixed stream against q213's
+  * retained-graph oracle.
   *
-  * State composes BOTH single-op merge-on-read layers over one
-  * persisted base, with a precedence rule and a dead-entry drop that
-  * keep them consistent:
+  * State is two merge-on-read layers over one persisted base, with a
+  * precedence rule and a dead-entry drop that keep them consistent:
   *
   *   - adds fold as a driver-side root REMAP (touched current roots →
   *     new canonical root, ≤ 2·|batch| entries — [[Graphs.ccDeltaRemap]]
@@ -260,10 +262,11 @@ object StreamingCcMixed {
       }
     }
 
-    /** The full view: member layer with the remap applied. */
+    /** The full view: the member layer's labels re-pointed through the
+      * broadcast remap (its `cluster_id` is never null, so no id
+      * fallback or self-join is needed). */
     private def view: DataFrame =
-      Graphs.composeLabels(memberLayer, remapDfOpt,
-        memberLayer.select(col(idCol)), idCol)
+      remapDfOpt.fold(memberLayer)(Graphs.remapLabels(memberLayer, _, idCol))
 
     private def allEdges: DataFrame = edges.union
 
@@ -308,7 +311,7 @@ object StreamingCcMixed {
       // driver-side) -------------------------------------------------
       val opRows = batch.select(col("op"), col("a"), col("b"))
         .collect().toSeq
-      // ---- adds: root-remap fold (StreamingCcDelta's shape) ----------
+      // ---- adds: root-remap fold ---------------------------------------
       // the dead-endpoint filter runs driver-side: the pre-r18
       // plan-side path paid a checkpoint + count + anti-join chain of
       // tiny jobs per fold on data this size (r17 verdict next-round #2)
@@ -345,7 +348,7 @@ object StreamingCcMixed {
         }
         if (edges.overCap) coalesceEdges()
       }
-      // ---- removes: member-override fold (Takedown's shape) ----------
+      // ---- removes: member-override fold -------------------------------
       val removals = {
         val seen = mutable.LinkedHashMap.empty[Any, Any]
         opRows.iterator.filter(_.getString(0) == "rm")

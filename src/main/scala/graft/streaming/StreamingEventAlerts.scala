@@ -46,19 +46,6 @@ object StreamingEventAlerts {
     CountSlidingWindow.alerts(samples, thr, n)
   }
 
-  /** The streaming file source wants a directory; the driver table is a
-    * single parquet file — stage it via symlink into a temp dir. The
-    * target is absolutized first: a relative `dir` would otherwise make
-    * the link resolve against the TEMP directory, dangle, and stream
-    * zero rows without an error. */
-  def stagedEventsDir(dir: String): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_events_stream")
-    java.nio.file.Files.createSymbolicLink(
-      d.resolve("events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet").toAbsolutePath)
-    d.toString
-  }
-
   /** Demo main: stream sf0.001 events (file source) → alerts → memory sink;
     * prints the alert count and cross-checks the batch pipeline's count. */
   def main(args: Array[String]): Unit = {
@@ -74,7 +61,7 @@ object StreamingEventAlerts {
     val stream = spark.readStream
       .schema("event_id BIGINT, user_id BIGINT, event_type STRING, " +
         "value DOUBLE, props STRING")
-      .parquet(stagedEventsDir(dir))
+      .parquet(graft.queries.StreamingQueries.stagedTableDir(dir, "events"))
     val ckpt = java.nio.file.Files.createTempDirectory("graft_sea").toString
     val q = alerts(stream, thr).writeStream
       .format("memory").queryName("stream_alerts")

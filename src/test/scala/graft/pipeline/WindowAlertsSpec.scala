@@ -151,4 +151,20 @@ class WindowAlertsSpec extends AnyFunSuite with SparkTestBase {
     assert(!got.exists(r => r.get(0) == 4L && r.getString(2) == Measures.Q10))
     assert(!got.exists(r => r.get(0) == null))
   }
+
+  test("a duplicate (key, ord) fails the walk, naming the key and ord") {
+    // key 7 holds seq 3 twice: tied rows would reach the window in the
+    // shuffle's arrival order, so the alerts could change from run to run
+    val rows = (1L to 12L).map(i => Row(7L, i, i / 10.0)) :+ Row(7L, 3L, 0.9)
+    val dup = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 3), schema)
+    val ex = intercept[Exception] {
+      AlertPipeline.windowAlerts(dup, "key", "seq", "v", globalThresholds, 4)
+        .collect()
+    }
+    val msgs = Iterator.iterate[Throwable](ex)(_.getCause)
+      .takeWhile(_ != null).map(e => String.valueOf(e.getMessage)).toSeq
+    assert(msgs.exists(_.contains("duplicate seq = 3 within key = 7")),
+      msgs.mkString("\n"))
+  }
 }

@@ -62,7 +62,12 @@ class BatchStreamParitySpec extends AnyFunSuite with SparkTestBase {
       java.lang.Double.doubleToLongBits(m), java.lang.Double.doubleToLongBits(thr))
   }.groupBy(identity).map { case (row, rs) => row -> rs.size }
 
-  // the nulls are a null value, a null `user_id` and a null `event_id`
+  // the nulls are a null value, a null `user_id` and a null `event_id`.
+  // Every event_id is unique and arrives after its user's earlier ones.
+  // The stream's replay guard skips a row at or below its user's last
+  // event_id (a duplicate, or a late row); the batch kernel sorts a late
+  // row into place and fails on a duplicate (WindowAlertsSpec). So
+  // parity holds for unique, in-order ids only.
   test("stream alerts = batch kernel alerts bit for bit across micro-batch " +
       "seams, with a null, a NaN sample, signed zeros and a NaN threshold") {
     import spark.implicits._

@@ -11,7 +11,9 @@ import graft.analytics.Graphs
   * micro-batches — including merge-then-takedown of the same component
   * across batches, same-batch add+remove, a takedown followed by a
   * re-merge of the repaired pieces, and no-resurrection of removed
-  * nodes. Randomized mixed schedules pin the general invariant. */
+  * nodes. Add-only and remove-only schedules (q207's and q215's streams)
+  * are the degenerate mixes; randomized mixed schedules pin the general
+  * invariant. */
 class StreamingCcMixedSpec extends AnyFunSuite with SparkTestBase {
 
   private def ground(ids: Seq[Long], edges: Seq[(Long, Long)],
@@ -24,12 +26,17 @@ class StreamingCcMixedSpec extends AnyFunSuite with SparkTestBase {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
+  /** Fold `batches` (one file each) over the history labels of
+    * `labelIds` (default: every id; an id outside them enters as a new
+    * node) and return the final map. */
   private def runMixed(dir: String, tag: String, ids: Seq[Long],
       histEdges: Seq[(Long, Long)],
       batches: Seq[Seq[(String, Long, Long)]], bound: Int,
-      maxFiles: Option[String] = Some("1")): Map[Long, Long] = {
+      maxFiles: Option[String] = Some("1"),
+      labelIds: Option[Seq[Long]] = None): Map[Long, Long] = {
     import spark.implicits._
-    val labels = Graphs.connectedComponents(ids.toDF("doc_id"),
+    val labels = Graphs.connectedComponents(
+      labelIds.getOrElse(ids).toDF("doc_id"),
       histEdges.toDF("a", "b")).localCheckpoint()
     batches.foreach { b =>
       b.toDF("op", "a", "b").repartition(1)
@@ -97,6 +104,58 @@ class StreamingCcMixedSpec extends AnyFunSuite with SparkTestBase {
     val gotSingle = runMixed(dir, "single", ids, hist,
       Seq(batches.flatten), 10000, maxFiles = None)
     assert(gotSingle === expected, "single-batch drifted")
+  }
+
+  test("add-only schedule: a merge chain whose bridges arrive in " +
+      "different batches, onto new nodes the initial labels lack") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_mix_add").toString
+    // history: {0,1}, {10,11}, {20,21}, isolated 30; the adds chain those
+    // components together ACROSS batches — (1,10), (11,20), (21,30), one
+    // a batch — plus the new component (40,41), absent from the labels
+    val ids = Seq(0L, 1L, 10L, 11L, 20L, 21L, 30L, 40L, 41L)
+    val hist = Seq((0L, 1L), (10L, 11L), (20L, 21L))
+    val adds = Seq((1L, 10L), (11L, 20L), (21L, 30L), (40L, 41L))
+    val expected = ground(ids, hist ++ adds, Set.empty)
+    assert(expected === Map(0L -> 0L, 1L -> 0L, 10L -> 0L, 11L -> 0L,
+      20L -> 0L, 21L -> 0L, 30L -> 0L, 40L -> 40L, 41L -> 40L))
+    val batches = adds.map(e => Seq(("add", e._1, e._2)))
+    val histIds = Some(ids.filter(_ < 40L))
+    // "compact" (bound 0) folds every batch's remap into the base, so the
+    // remap-resident and the base-resident state are both pinned
+    for ((tag, bound) <- Seq(("multi", 10000), ("compact", 0)))
+      assert(runMixed(dir, tag, ids, hist, batches, bound,
+        labelIds = histIds) === expected, s"$tag drifted from batch CC")
+    assert(runMixed(dir, "single", ids, hist, Seq(batches.flatten), 10000,
+      maxFiles = None, labelIds = histIds) === expected,
+      "single-batch drifted")
+  }
+
+  test("rm-only schedule: split, canonical handoff and vanish, with the " +
+      "same component touched in two batches") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_mix_rm").toString
+    // chain 0-1-2-3 (remove 1 then 2 in DIFFERENT batches: split, then
+    // shrink); triangle {10,11,12} (remove canonical 10: handoff); pair
+    // {20,21} fully removed across the two batches (vanish); {30,31} and
+    // isolated 40 untouched
+    val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (10L, 11L),
+      (11L, 12L), (10L, 12L), (20L, 21L), (30L, 31L))
+    val ids = Seq(0L, 1L, 2L, 3L, 10L, 11L, 12L, 20L, 21L, 30L, 31L, 40L)
+    val removals = Seq(Seq(1L, 10L, 20L), Seq(2L, 21L))
+    val expected = Map(0L -> 0L, 3L -> 3L, 11L -> 11L, 12L -> 11L,
+      30L -> 30L, 31L -> 30L, 40L -> 40L)
+    assert(ground(ids, edges, removals.flatten.toSet) === expected)
+    val batchRetract = Graphs.ccRetract(
+        Graphs.connectedComponents(ids.toDF("doc_id"), edges.toDF("a", "b")),
+        edges.toDF("a", "b"), removals.flatten.toDF("doc_id"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(batchRetract === expected)
+    val batches = removals.map(_.map(id => ("rm", id, -1L)))
+    for ((tag, bound) <- Seq(("multi", 10000), ("compact", 0)))
+      assert(runMixed(dir, tag, ids, edges, batches, bound) === expected,
+        s"$tag takedown drifted")
+    assert(runMixed(dir, "single", ids, edges, Seq(batches.flatten), 10000,
+      maxFiles = None) === expected, "single-batch takedown drifted")
   }
 
   test("the edge layer is O(1) frames in batch count: a long stream of " +

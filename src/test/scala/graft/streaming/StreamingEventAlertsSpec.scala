@@ -15,7 +15,7 @@ class StreamingEventAlertsSpec extends AnyFunSuite with SparkTestBase {
     val stream = spark.readStream
       .schema("event_id BIGINT, user_id BIGINT, event_type STRING, " +
         "value DOUBLE, props STRING")
-      .parquet(StreamingEventAlerts.stagedEventsDir(dir))
+      .parquet(graft.queries.StreamingQueries.stagedTableDir(dir, "events"))
     val ckpt = java.nio.file.Files.createTempDirectory("graft_sea_t").toString
     val q = StreamingEventAlerts.alerts(stream, thr).writeStream
       .format("memory").queryName("sea_out")
