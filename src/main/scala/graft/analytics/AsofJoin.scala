@@ -13,19 +13,30 @@ import org.apache.spark.sql.functions._
   * Scale shape — ONE shuffle, no range probe: both sides union into one
   * frame tagged by side, shuffle once on the key, and a single per-key
   * ordered window pass (`last(..., ignoreNulls)` over rows-unbounded-
-  * preceding) carries each right value forward to the left rows after
-  * it. This is the standard distributed as-of form: cost is
-  * sort-within-partition, state is one row per value column, and skew
-  * behaves exactly like any keyed aggregation (a hot key is one big
-  * sorted run, never a nested loop). The naive alternatives both fail at
-  * 100 TB: a theta-join `l.ts >= r.ts` is a per-key cross product, and a
-  * per-left-row subquery probe is a join per row.
+  * preceding) carries the right row forward to the left rows after it.
+  * This is the standard distributed as-of form: cost is
+  * sort-within-partition, state is one struct, and skew behaves exactly
+  * like any keyed aggregation (a hot key is one big sorted run, never a
+  * nested loop). The naive alternatives both fail at 100 TB: a theta-join
+  * `l.ts >= r.ts` is a per-key cross product, and a per-left-row
+  * subquery probe is a join per row.
   *
-  * Contract: `right` must be UNIQUE per (key, ts) — pre-aggregate it
-  * (e.g. max per key+ts) if it is not; with duplicates the equal-ts
-  * winner would be partition-order-dependent, silently nondeterministic.
-  * Left rows before any right row get NULL (the honest answer; coalesce
-  * downstream if a default is wanted).
+  * Contract, that of SQL's `ASOF LEFT JOIN`:
+  *   - the right side's value columns travel as ONE struct, so every
+  *     attached value comes from the SAME latest right row, and that
+  *     row's NULLs are attached as NULLs (never back-filled from an older
+  *     row): `last(struct, ignoreNulls)` skips only the left rows, whose
+  *     struct is null;
+  *   - a right row with a NULL key column or a NULL timestamp matches
+  *     nothing and is dropped before the union (unfiltered, a NULL
+  *     timestamp sorts first and would be carried to every left row
+  *     before the key's first real right row);
+  *   - left rows before any right row, or with a NULL key or timestamp,
+  *     get NULL (the honest answer; coalesce downstream if a default is
+  *     wanted);
+  *   - `right` must be UNIQUE per (key, ts) — pre-aggregate it (e.g. max
+  *     per key+ts) if it is not; with duplicates the equal-ts winner
+  *     would be partition-order-dependent, silently nondeterministic.
   */
 object AsofJoin {
 
@@ -41,13 +52,8 @@ object AsofJoin {
     val w = Window.partitionBy(keyCols.map(col): _*)
       .orderBy(col(tsCol).asc, col("__isL").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    valueCols
-      .foldLeft(u) { (df, c) =>
-        df.withColumn(s"asof_$c",
-          last(col(s"asof_$c"), ignoreNulls = true).over(w))
-      }
-      .where(col("__isL") === 1)
-      .drop("__isL")
+    unpack(u.withColumn("__rv", last(col("__rv"), ignoreNulls = true).over(w))
+      .where(col("__isL") === 1), valueCols)
   }
 
   /** Skew-hardened [[asof]] — identical results (AsofJoinSpec proves
@@ -55,15 +61,18 @@ object AsofJoin {
     * shape for a HOT KEY. The plain form sorts each key in ONE window
     * partition: a key holding 10⁹ rows of a 100 TB corpus becomes one
     * straggler task (or an OOM). Here time is cut into width-`bucket`
-    * ranges and the carry runs in two skew-bounded passes:
+    * ranges and the carry of the same right-row struct runs in two
+    * skew-bounded passes:
     *
     *   1. within (key, bucket): the same ordered carry — partitions are
     *      now (key, bucket), so a hot key spreads over its time range;
-    *   2. across buckets: each bucket's LAST right value (a keyed
-    *      `max_by` aggregate) forms a per-key spine of at most
+    *   2. across buckets: each bucket's LAST right row (one keyed
+    *      `max_by(struct, ts)`) forms a per-key spine of at most
     *      #buckets rows; one window over the SPINE (not the rows)
     *      prefix-carries it, and left rows whose within-bucket carry is
-    *      null fill from the spine join.
+    *      null take the spine's struct. A matched right row whose values
+    *      are all null is still a non-null struct, so it never falls
+    *      through to an earlier bucket.
     *
     * Cost: two extra exchanges on (key, bucket)-sized frames; the
     * per-key serial work drops from the key's row count to its bucket
@@ -74,51 +83,44 @@ object AsofJoin {
     require(bucket >= 1, s"AsofJoin: bucket width must be >= 1, got $bucket")
     val u = unionTagged(left, right, keyCols, tsCol, valueCols)
       .withColumn("__bkt", floor(col(tsCol) / lit(bucket)).cast("long"))
-    val keyBkt = keyCols :+ "__bkt"
+    val keyBkt = (keyCols :+ "__bkt").map(col)
     // pass 1: ordered carry WITHIN each (key, bucket)
-    val wLocal = Window.partitionBy(keyBkt.map(col): _*)
+    val wLocal = Window.partitionBy(keyBkt: _*)
       .orderBy(col(tsCol).asc, col("__isL").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = valueCols.foldLeft(u) { (df, c) =>
-      df.withColumn(s"asof_$c",
-        last(col(s"asof_$c"), ignoreNulls = true).over(wLocal))
-    }
-    // pass 2: per-key spine of bucket-final right values, prefix-carried
-    // over STRICTLY EARLIER buckets (within-bucket rows came from pass 1)
-    val bucketLast = u.where(col("__isL") === 0)
-      .groupBy(keyBkt.map(col): _*)
-      .agg(max_by(col(s"asof_${valueCols.head}"), col(tsCol))
-          .as(s"__bl_${valueCols.head}"),
-        valueCols.tail.map(c =>
-          max_by(col(s"asof_$c"), col(tsCol)).as(s"__bl_$c")): _*)
-    val spine = u.select(keyBkt.map(col): _*).distinct()
-      .join(bucketLast, keyBkt, "left")
+    val local = u
+      .withColumn("__rv", last(col("__rv"), ignoreNulls = true).over(wLocal))
+      .where(col("__isL") === 1)
+    // pass 2: per-key spine of bucket-final right rows (left rows have no
+    // ordering, so max_by skips them), prefix-carried over STRICTLY
+    // EARLIER buckets (within-bucket rows came from pass 1)
     val wCarry = Window.partitionBy(keyCols.map(col): _*)
       .orderBy(col("__bkt").asc)
       .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = valueCols.foldLeft(spine) { (df, c) =>
-        df.withColumn(s"__ci_$c",
-          last(col(s"__bl_$c"), ignoreNulls = true).over(wCarry))
-      }
-      .select(keyBkt.map(col) ++ valueCols.map(c => col(s"__ci_$c")): _*)
-    val filled = local.where(col("__isL") === 1).join(carry, keyBkt)
-    valueCols.foldLeft(filled) { (df, c) =>
-        df.withColumn(s"asof_$c",
-          coalesce(col(s"asof_$c"), col(s"__ci_$c")))
-      }
-      .drop("__isL" +: "__bkt" +: valueCols.map(c => s"__ci_$c"): _*)
+    val carry = u.groupBy(keyBkt: _*)
+      .agg(max_by(col("__rv"), when(col("__isL") === 0, col(tsCol)))
+        .as("__bl"))
+      .select(keyBkt :+
+        last(col("__bl"), ignoreNulls = true).over(wCarry).as("__ci"): _*)
+    // a left row with a NULL key or bucket has no spine row: keep it
+    val filled = local.join(carry, keyCols :+ "__bkt", "left")
+      .withColumn("__rv", coalesce(col("__rv"), col("__ci")))
+    unpack(filled, valueCols)
   }
 
+  /** Columns of the union frame that are not the left side's. */
+  private val Internal = Set("__rv", "__isL", "__bkt", "__ci")
+
   /** Shared construction: both sides union-tagged into one frame —
-    * (keys…, ts, left-only columns (null on right rows), asof_-prefixed
-    * value columns (null on left rows), __isL). */
+    * (keys…, ts, left-only columns (null on right rows), `__rv`: the
+    * struct of the right row's value columns (null on left rows),
+    * `__isL`). */
   private def unionTagged(left: DataFrame, right: DataFrame,
       keyCols: Seq[String], tsCol: String,
       valueCols: Seq[String]): DataFrame = {
     require(keyCols.nonEmpty, "AsofJoin: need at least one key column")
     require(valueCols.nonEmpty, "AsofJoin: need at least one value column")
-    val rTypes = right.schema.fields.map(f => f.name -> f.dataType).toMap
-    valueCols.foreach(c => require(rTypes.contains(c),
+    valueCols.foreach(c => require(right.columns.contains(c),
       s"AsofJoin: right side lacks value column $c"))
     val leftOther =
       left.columns.toSeq.filterNot(c => keyCols.contains(c) || c == tsCol)
@@ -126,13 +128,20 @@ object AsofJoin {
       s"AsofJoin: left already has a column named asof_$c"))
     val lTypes = left.schema.fields.map(f => f.name -> f.dataType).toMap
     val keyTs: Seq[Column] = (keyCols :+ tsCol).map(col)
-    val l = left.select(keyTs ++ leftOther.map(col) ++
-      valueCols.map(c => lit(null).cast(rTypes(c)).as(s"asof_$c")) :+
+    val rv = struct(valueCols.map(col): _*)
+    val l = left.select(keyTs ++ leftOther.map(col) :+
+      lit(null).cast(right.select(rv).schema.head.dataType).as("__rv") :+
       lit(1).as("__isL"): _*)
-    val r = right.select(keyTs ++
-      leftOther.map(c => lit(null).cast(lTypes(c)).as(c)) ++
-      valueCols.map(c => col(c).as(s"asof_$c")) :+
-      lit(0).as("__isL"): _*)
+    val r = right.where(keyTs.map(_.isNotNull).reduce(_ && _))
+      .select(keyTs ++
+        leftOther.map(c => lit(null).cast(lTypes(c)).as(c)) :+
+        rv.as("__rv") :+ lit(0).as("__isL"): _*)
     l.unionByName(r)
   }
+
+  /** The left rows of a carried union frame, each `valueCols` entry `c`
+    * unpacked from the carried struct as `asof_c`. */
+  private def unpack(df: DataFrame, valueCols: Seq[String]): DataFrame =
+    df.select(df.columns.toSeq.filterNot(Internal).map(col) ++
+      valueCols.map(c => col("__rv").getField(c).as(s"asof_$c")): _*)
 }

@@ -565,12 +565,12 @@ object AdvancedQueries {
           |  JOIN nation n ON n.n_nationkey = c.c_nationkey
           |) t WHERE rk <= 2 ORDER BY n_name, rk""".stripMargin)),
 
-    // Two-sided as-of join (graft.analytics.AsOf): each purchase event
-    // picks up the latest same-user click at-or-before it. One union +
-    // keyed window — a single shuffle by user_id — against DuckDB's
-    // native ASOF JOIN as the oracle. The naive range-join encoding
-    // explodes quadratically in hot keys; this shape is O(n log n) per
-    // key shard.
+    // Two-sided as-of join (graft.analytics.AsofJoin): each purchase
+    // event picks up the latest same-user click at-or-before it, both
+    // click columns from that one click. One union + keyed window — a
+    // single shuffle by user_id — against DuckDB's native ASOF JOIN as
+    // the oracle. The naive range-join encoding explodes quadratically in
+    // hot keys; this shape is O(n log n) per key shard.
     Q("q60_asof_join",
       (s, dir) => {
         val ev = Tables(s, dir, "events")
@@ -579,9 +579,9 @@ object AdvancedQueries {
         val clicks = ev.where(col("event_type") === "click")
           .select(col("user_id"), col("event_id"),
             col("event_id").as("click_id"), col("value").as("click_value"))
-        graft.analytics.AsOf
-          .asofJoin(purchases, clicks, keyCol = "user_id",
-            seqCol = "event_id", valueCols = Seq("click_id", "click_value"))
+        graft.analytics.AsofJoin.asof(purchases, clicks,
+            keyCols = Seq("user_id"), tsCol = "event_id",
+            valueCols = Seq("click_id", "click_value"))
           .orderBy(col("user_id"), col("event_id"))
       },
       Some(

@@ -50,9 +50,9 @@ object Clustering {
 
   /** Every centroid label must fit the low CidBits of the (dist, cid)
     * encoding — a label >= 2²⁰ or negative would silently corrupt every
-    * downstream argmin instead of failing loudly. [[lloyd]] checks its own
-    * seeds; caller-supplied sets ([[assign]], [[assignTopM]]) and
-    * [[lloydCentroids]] seeds go through here. */
+    * downstream argmin instead of failing loudly. [[lloydCentroids]]'
+    * seeds and caller-supplied sets ([[assign]], [[assignTopM]]) go
+    * through here. */
   private def requireEncodableCids(cents: Seq[(Long, Array[Long])]): Unit =
     cents.foreach { case (cid, _) =>
       require(cid >= 0 && cid < CidCap,
@@ -81,9 +81,11 @@ object Clustering {
   /** Lloyd k-means over `vecs(idCol, vecCol: array<float|double>)`.
     * Seeds: the k vectors with smallest id, each cluster labeled by its
     * seed's id (deterministic, init-order-free). `rounds` assignment
-    * passes run with a centroid update between consecutive passes. A
-    * cluster that loses every member simply drops out of later rounds
-    * (standard Lloyd degeneracy; the seed ids make the loss visible).
+    * passes run with a centroid update between consecutive passes: the
+    * first `rounds − 1` are [[lloydCentroids]]' updates, the last is
+    * [[assign]] against the centroids they leave. A cluster that loses
+    * every member simply drops out of later rounds (standard Lloyd
+    * degeneracy; the seed ids make the loss visible).
     *
     * Returns (idCol, cluster, dist2) — the final assignment with its
     * squared quantized distance. */
@@ -91,73 +93,32 @@ object Clustering {
       vecCol: String = "embedding", k: Int = 4, rounds: Int = 3,
       scale: Int = 1000): DataFrame = {
     require(k >= 1 && rounds >= 1, s"need k >= 1, rounds >= 1; got $k/$rounds")
-    val q = vecs.select(col(idCol), quantized(col(vecCol), scale).as("__q"))
-
-    // seeds: k smallest ids — k·d longs on the driver, the same
-    // scalar-size contract as the IVF/PQ codebook collects
-    var cents: Seq[(Long, Array[Long])] = q.orderBy(col(idCol)).limit(k)
-      .collect()
-      .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).toSeq
-    requireEncodableCids(cents)
-
-    // native codegen'd kernel (graft.functions.SqDistLong): the HOF
-    // aggregate(zip_with(...)) form pays an interpreted lambda frame per
-    // ELEMENT — k centroids × d dims per row on the hot path. Integer
-    // addition is associative, so results are bit-identical.
-    def encodedArgmin(): Column =
-      cents.map { case (cid, cq) =>
-        encode(graft.functions.SqDistLong(col("__q"), typedLit(cq)), cid)
-      }.reduce(least(_, _))
-
-    var r = 1
-    while (r < rounds) {
-      // update: one (cluster, dim) keyed aggregate, k·d rows out
-      val updated = q
-        .withColumn("__cid", pmod(encodedArgmin(), lit(CidCap)))
-        .select(col("__cid"), posexplode(col("__q")).as(Seq("__d", "__v")))
-        .groupBy(col("__cid"), col("__d"))
-        .agg(sum(col("__v")).as("__s"), count(lit(1)).as("__n"))
-        .collect()
-      cents = updated
-        .groupBy(_.getLong(0))
-        .map { case (cid, rows) =>
-          val byDim = rows.map(row => row.getInt(1) ->
-            Math.floorDiv(row.getLong(2), row.getLong(3))).toMap
-          cid -> Array.tabulate(byDim.size)(byDim)
-        }
-        .toSeq.sortBy(_._1)
-      r += 1
-    }
-    // dist2 extraction is a pure integer shift — the earlier double
-    // .divide form lost low bits past 2⁵³-total, silently, at scales the
-    // encoding itself still supports
-    q.withColumn("__comb", encodedArgmin())
-      .select(col(idCol),
-        pmod(col("__comb"), lit(CidCap)).as("cluster"),
-        shiftright(col("__comb"), CidBits).as("dist2"))
+    assign(vecs, lloydCentroids(vecs, idCol, vecCol, k, rounds - 1, scale),
+      idCol, vecCol, scale)
   }
 
   /** Final centroids of a [[lloyd]] run — (cluster, quantized vector),
     * for callers that assign separately (multi-probe assignment,
-    * serving). Same seeds/update arithmetic as lloyd; `rounds` here
-    * counts UPDATE rounds (lloyd with `rounds = r` assigns against the
-    * centroids this returns for `updates = r − 1`). */
+    * serving). `rounds` here counts UPDATE rounds (lloyd with
+    * `rounds = r` assigns against the centroids this returns for
+    * `updates = r − 1`). */
   def lloydCentroids(vecs: DataFrame, idCol: String = "vec_id",
       vecCol: String = "embedding", k: Int = 4, updates: Int = 1,
       scale: Int = 1000): Seq[(Long, Array[Long])] = {
     require(k >= 1 && updates >= 0, s"need k >= 1, updates >= 0")
-    val q = vecs.select(col(idCol), quantized(col(vecCol), scale).as("__q"))
+    val q = quantizedFrame(vecs, idCol, vecCol, scale)
+    // seeds: k smallest ids — k·d longs on the driver, the same
+    // scalar-size contract as the IVF/PQ codebook collects
     var cents: Seq[(Long, Array[Long])] = q.orderBy(col(idCol)).limit(k)
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).toSeq
     requireEncodableCids(cents) // update rounds preserve labels, so this holds throughout
     var r = 0
     while (r < updates) {
-      val argmin = cents.map { case (cid, cq) =>
-        encode(graft.functions.SqDistLong(col("__q"), typedLit(cq)), cid)
-      }.reduce(least(_, _))
+      // update: one (cluster, dim) keyed aggregate, k·d rows out
       val updated = q
-        .withColumn("__cid", pmod(argmin, lit(CidCap)))
+        .withColumn("__cid", pmod(encodedDists(cents).reduce(least(_, _)),
+          lit(CidCap)))
         .select(col("__cid"), posexplode(col("__q")).as(Seq("__d", "__v")))
         .groupBy(col("__cid"), col("__d"))
         .agg(sum(col("__v")).as("__s"), count(lit(1)).as("__n"))
@@ -180,8 +141,8 @@ object Clustering {
     * no training pass touches the history), the same way a production
     * IVF serves inserts between retrains. Returns (idCol, cluster,
     * dist2); `assign(vecs, lloydCentroids(vecs, updates = r − 1))` is
-    * bit-identical to `lloyd(vecs, rounds = r)` (spec-pinned), so the
-    * quantized dist2 doubles as the drift signal: a delta population
+    * what `lloyd(vecs, rounds = r)` runs (spec-pinned bit-identical), so
+    * the quantized dist2 doubles as the drift signal: a delta population
     * whose per-cell mean dist2 outruns the history's is the integer-exact
     * retrain trigger (q203). */
   def assign(vecs: DataFrame, cents: Seq[(Long, Array[Long])],
@@ -189,11 +150,11 @@ object Clustering {
       scale: Int = 1000): DataFrame = {
     require(cents.nonEmpty, "assign needs at least one centroid")
     requireEncodableCids(cents)
-    val q = vecs.select(col(idCol), quantized(col(vecCol), scale).as("__q"))
-    val argmin = cents.map { case (cid, cq) =>
-      encode(graft.functions.SqDistLong(col("__q"), typedLit(cq)), cid)
-    }.reduce(least(_, _))
-    q.withColumn("__comb", argmin)
+    // dist2 extraction is a pure integer shift — the earlier double
+    // .divide form lost low bits past 2⁵³-total, silently, at scales the
+    // encoding itself still supports
+    quantizedFrame(vecs, idCol, vecCol, scale)
+      .withColumn("__comb", encodedDists(cents).reduce(least(_, _)))
       .select(col(idCol),
         pmod(col("__comb"), lit(CidCap)).as("cluster"),
         shiftright(col("__comb"), CidBits).as("dist2"))
@@ -212,15 +173,29 @@ object Clustering {
     require(m >= 1 && m <= cents.length,
       s"m must be in [1, ${cents.length}], got $m")
     requireEncodableCids(cents)
-    val q = vecs.select(col(idCol), quantized(col(vecCol), scale).as("__q"))
-    val encs = array(cents.map { case (cid, cq) =>
-      encode(graft.functions.SqDistLong(col("__q"), typedLit(cq)), cid)
-    }: _*)
-    q.select(col(idCol),
+    val encs = array(encodedDists(cents): _*)
+    quantizedFrame(vecs, idCol, vecCol, scale)
+      .select(col(idCol),
         posexplode(slice(sort_array(encs), 1, m)).as(Seq("__r", "__enc")))
       .select(col(idCol), (col("__r") + 1).as("rank"),
         pmod(col("__enc"), lit(CidCap)).as("cluster"))
   }
+
+  /** (idCol, `__q`): each vector quantized once, a static-lineage
+    * projection of the source scan. */
+  private def quantizedFrame(vecs: DataFrame, idCol: String, vecCol: String,
+      scale: Int): DataFrame =
+    vecs.select(col(idCol), quantized(col(vecCol), scale).as("__q"))
+
+  /** One encoded (dist2, cid) long per centroid for the `__q` column.
+    * Native codegen'd kernel (graft.functions.SqDistLong): the HOF
+    * aggregate(zip_with(...)) form pays an interpreted lambda frame per
+    * ELEMENT — k centroids × d dims per row on the hot path. Integer
+    * addition is associative, so results are bit-identical. */
+  private def encodedDists(cents: Seq[(Long, Array[Long])]): Seq[Column] =
+    cents.map { case (cid, cq) =>
+      encode(graft.functions.SqDistLong(col("__q"), typedLit(cq)), cid)
+    }
 
   /** The SemDeDup prune step (Abbas et al., public method) composed over
     * [[lloyd]]'s output: within each cluster, a vector is DROPPED when its
@@ -247,8 +222,7 @@ object Clustering {
       s"tauDen $tauDen past 10^6 — more threshold resolution than the " +
         "quantization can distinguish, and tauDen^2 would near the Long " +
         "ceiling")
-    val q = vecs
-      .select(col(idCol), quantized(col(vecCol), scale).as("__q"))
+    val q = quantizedFrame(vecs, idCol, vecCol, scale)
       .withColumn("__n2",
         graft.functions.DotProductLong(col("__q"), col("__q")))
       .join(assign.select(col(idCol), col("cluster")), Seq(idCol))

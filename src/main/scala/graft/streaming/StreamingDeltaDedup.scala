@@ -22,9 +22,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * the batch the minimal id — identical when arrival follows id order
   * (StreamingDeltaDedupSpec pins it; q145 runs it under the driver gate).
   * Decisions are emitted exactly once per arrival, never retracted — the
-  * append-sink shape. `idleTtl` bounds state like the other streaming
-  * dedup operators: a novel digest idle past the TTL is forgotten and a
-  * later copy is kept again (strict under-detection, never a false drop).
+  * append-sink shape. State is never expired: a novel digest stays in
+  * the store for the query's life, so a later copy is always dropped.
   */
 object StreamingDeltaDedup {
 
@@ -68,36 +67,26 @@ object StreamingDeltaDedup {
     * physical order is partition-dependent; the sort makes the
     * intra-batch winner deterministic and equal to the batch operator's
     * min-id rule). In-history groups never write state. */
-  def decisions(rows: Dataset[DeltaRow],
-      idleTtl: Option[java.time.Duration] = None): Dataset[DeltaDecision] = {
+  def decisions(rows: Dataset[DeltaRow]): Dataset[DeltaDecision] = {
     import rows.sparkSession.implicits._
-    val timeoutConf =
-      if (idleTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     rows.groupByKey(_.unitKey)
       .flatMapGroupsWithState[Boolean, DeltaDecision](
-        OutputMode.Append, timeoutConf) {
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (_, it, state: GroupState[Boolean]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
+          val batch = it.toVector.sortBy(_.docId)
+          if (batch.head.inHistory) {
+            // known digest: stateless drop — nothing enters the store
+            batch.iterator.map(r =>
+              DeltaDecision(r.docId, inHistory = true, keep = false))
           } else {
-            val batch = it.toVector.sortBy(_.docId)
-            if (batch.head.inHistory) {
-              // known digest: stateless drop — nothing enters the store
-              batch.iterator.map(r =>
-                DeltaDecision(r.docId, inHistory = true, keep = false))
-            } else {
-              var seen = state.getOption.getOrElse(false)
-              val out = batch.map { r =>
-                val keep = !seen
-                seen = true
-                DeltaDecision(r.docId, inHistory = false, keep)
-              }
-              state.update(seen)
-              idleTtl.foreach(d => state.setTimeoutDuration(d.toMillis))
-              out.iterator
+            var seen = state.getOption.getOrElse(false)
+            val out = batch.map { r =>
+              val keep = !seen
+              seen = true
+              DeltaDecision(r.docId, inHistory = false, keep)
             }
+            state.update(seen)
+            out.iterator
           }
       }
   }

@@ -23,11 +23,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * micro-batch a digest's rows are decided in (doc, idx) order — the
   * group iterator's physical order is partition-dependent, so the sort
   * makes the intra-batch winner deterministic and equal to the batch
-  * operator's. `idleTtl`
-  * bounds lifetime state exactly as the other streaming dedup operators
-  * do: units idle past the TTL are forgotten, so a recurrence after the
-  * gap is kept AGAIN (the duplicate is missed — the stated loss, a
-  * strict under-detection, never a false drop of a first copy). */
+  * operator's. State is never expired: every distinct unit seen stays
+  * in the store for the query's life, so a recurrence however late is
+  * still dropped. */
 object StreamingUnitDedup {
 
   final case class UnitRow(unitKey: String, docId: Long, idx: Long)
@@ -51,31 +49,21 @@ object StreamingUnitDedup {
 
   /** Keep/drop decision per unit occurrence, streamed — each occurrence
     * decided exactly once, in its arrival micro-batch. */
-  def decisions(rows: Dataset[UnitRow],
-      idleTtl: Option[java.time.Duration] = None): Dataset[UnitDecision] = {
+  def decisions(rows: Dataset[UnitRow]): Dataset[UnitDecision] = {
     import rows.sparkSession.implicits._
-    val timeoutConf =
-      if (idleTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     rows.groupByKey(_.unitKey)
       .flatMapGroupsWithState[Boolean, UnitDecision](
-        OutputMode.Append, timeoutConf) {
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (key, it, state: GroupState[Boolean]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var seen = state.getOption.getOrElse(false)
-            // (doc, idx) order within the batch: deterministic winner
-            val out = it.toVector.sortBy(r => (r.docId, r.idx)).map { r =>
-              val keep = !seen
-              seen = true
-              UnitDecision(r.docId, r.idx, key, keep)
-            }
-            state.update(seen)
-            idleTtl.foreach(d => state.setTimeoutDuration(d.toMillis))
-            out.iterator
+          var seen = state.getOption.getOrElse(false)
+          // (doc, idx) order within the batch: deterministic winner
+          val out = it.toVector.sortBy(r => (r.docId, r.idx)).map { r =>
+            val keep = !seen
+            seen = true
+            UnitDecision(r.docId, r.idx, key, keep)
           }
+          state.update(seen)
+          out.iterator
       }
   }
 }

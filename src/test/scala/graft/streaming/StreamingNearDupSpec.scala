@@ -129,4 +129,44 @@ class StreamingNearDupSpec extends AnyFunSuite with SparkTestBase {
     // spurious: exactly the two surviving pairs, nothing else.
     assert(pairs === Set((2L, 3L), (10L, 11L)), s"unexpected pair set: $pairs")
   }
+
+  test("over maxBucket, streamed pairs are a subset of the batch join") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_sneardup_cap").toString
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/in"))
+    // six docs sharing ONLY one boilerplate substring (each with a unique
+    // prefix), keyed by winnowing fingerprint: every shared fingerprint is
+    // the same hot bucket, so with maxBucket=2 the 4 unstored docs'
+    // mutual pairs MUST be missing
+    val boiler = "the quick brown fox jumps over the lazy dog again and again"
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/in/a.json"),
+      (1 to 6).map(i => s"""{"doc_id":$i,"text":"unique prefix number $i """ +
+        s"""with words ${"x" * i} $boiler"}""").mkString("\n").getBytes)
+    def fingerprints(docs: org.apache.spark.sql.DataFrame) =
+      graft.text.TextStats.winnowing(docs)
+        .select(col("doc_id").as("docId"),
+          explode(col("fingerprints").cast("array<string>")).as("bucket"))
+    val q = StreamingNearDup.candidatePairs(fingerprints(
+        spark.readStream.schema("doc_id LONG, text STRING").json(s"$dir/in"))
+        .as[StreamingNearDup.BucketDoc], maxBucket = 2)
+      .writeStream.format("memory").queryName("sneardup_cap")
+      .option("checkpointLocation", s"$dir/_ckpt")
+      .outputMode("append").start()
+    try q.processAllAvailable() finally q.stop()
+    val streamed = spark.table("sneardup_cap")
+      .select(col("docA"), col("docB")).distinct().collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+
+    val e = fingerprints(
+      spark.read.schema("doc_id LONG, text STRING").json(s"$dir/in")).cache()
+    val batch = e.as("a")
+      .join(e.as("b"), col("a.bucket") === col("b.bucket") &&
+        col("a.docId") < col("b.docId"))
+      .select(col("a.docId"), col("b.docId")).distinct().collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(batch.size === 15, s"all 15 pairs must share the boilerplate: $batch")
+    assert(streamed.subsetOf(batch), s"extras: ${streamed -- batch}")
+    assert(streamed.size < batch.size,
+      s"cap=2 over 6 docs must drop pairs (got ${streamed.size})")
+  }
 }
