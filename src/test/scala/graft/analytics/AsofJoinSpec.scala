@@ -94,11 +94,9 @@ class AsofJoinSpec extends AnyFunSuite with SparkTestBase {
       (Some(1L), Some(10L), Some(1.0), Some("old")),
       (Some(1L), Some(20L), None, Some("new")),
       (Some(2L), Some(5L), Some(7.0), Some("older")),
-      (Some(2L), Some(10L), None, None),
-      (Some(5L), Some(3L), Some(1.0), Some("x")),
-      (Some(5L), Some(9L), Some(2.0), Some("y"))).toDF("k", "t", "a", "b")
-    val left = Seq((1L, 1L, 25L), (2L, 1L, 15L), (3L, 2L, 15L), (4L, 3L, 15L),
-      (5L, 5L, 10L)).toDF("id", "k", "t")
+      (Some(2L), Some(10L), None, None)).toDF("k", "t", "a", "b")
+    val left = Seq((1L, 1L, 25L), (2L, 1L, 15L), (3L, 2L, 15L), (4L, 3L, 15L))
+      .toDF("id", "k", "t")
     val got = checkAll(left, right, Seq("a", "b"))
     assert(got(1L) === Seq(null, "new"),
       "matched row's NULL must propagate, not back-fill from an older row")
@@ -106,7 +104,6 @@ class AsofJoinSpec extends AnyFunSuite with SparkTestBase {
     assert(got(3L) === Seq(null, null),
       "an all-NULL matched row still matches, hiding the older row")
     assert(got(4L) === Seq(null, null))
-    assert(got(5L) === Seq(2.0, "y"), "every column from the latest row")
   }
 
   private def join(left: Seq[(Long, Long, String)],
@@ -145,6 +142,16 @@ class AsofJoinSpec extends AnyFunSuite with SparkTestBase {
       .collect().map(r => r.getAs[Long]("id") ->
         Option(r.getAs[Any]("asof_v"))).toMap
     assert(got == Map(1L -> Some(0.5), 2L -> Some(0.5), 3L -> None))
+  }
+
+  test("multiple value columns fill independently") {
+    import spark.implicits._
+    // each value column gets its own asof_ output, of its own type, all
+    // taken from the latest right row
+    val left = Seq((1L, 5L, 10L)).toDF("id", "k", "t")
+    val right = Seq((5L, 3L, 1.0, "x"), (5L, 9L, 2.0, "y"))
+      .toDF("k", "t", "v", "s")
+    assert(checkAll(left, right, Seq("v", "s")) === Map(1L -> Seq(2.0, "y")))
   }
 
   test("rejects an asof_ output-name collision and a missing value col") {
